@@ -1,12 +1,10 @@
-"""Host measurements read from /proc (psutil is not installed): resident
-memory of the Spark JVM and every process under it, and CPU steal."""
+"""Host measurements read from /proc (psutil is not installed): CPU time
+and peak resident memory of the Spark JVM and every process under it,
+and CPU steal."""
 
 from __future__ import annotations
 
 import os
-import threading
-
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _children() -> dict[int, list[int]]:
@@ -23,19 +21,20 @@ def _children() -> dict[int, list[int]]:
     return kids
 
 
-def tree_rss_bytes(root_pid: int) -> int:
-    """Resident bytes of ``root_pid`` and all its descendants."""
+def tree_peak_rss_mb(root_pid: int) -> float:
+    """Sum of the peak resident memory (``VmHWM``) of ``root_pid`` and
+    each live descendant, read once: the JVM and its Python workers."""
     kids = _children()
     total, stack = 0, [root_pid]
     while stack:
         pid = stack.pop()
         stack.extend(kids.get(pid, ()))
         try:
-            with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1]) * _PAGE
-        except (OSError, IndexError, ValueError):
+            with open(f"/proc/{pid}/status") as f:
+                total += next(int(l.split()[1]) for l in f if l.startswith("VmHWM:"))
+        except (OSError, StopIteration, ValueError):
             continue
-    return total
+    return total / 1024
 
 
 def tree_cpu_seconds(root_pid: int) -> float:
@@ -61,44 +60,6 @@ def jvm_pid() -> int:
     from pyspark import SparkContext
 
     return SparkContext._gateway.proc.pid
-
-
-class RssSampler:
-    """Peak resident memory of the JVM process tree (driver JVM plus the
-    Python workers it forks), sampled every ``interval`` seconds on a
-    background thread while not paused."""
-
-    def __init__(self, interval: float = 0.1):
-        self.interval = interval
-        self.peak_mb = 0.0
-        self.pid = jvm_pid()
-        self._stop = threading.Event()
-        self._active = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
-            if self._active.is_set():
-                mb = tree_rss_bytes(self.pid) / 2**20
-                self.peak_mb = max(self.peak_mb, mb)
-
-    def start(self) -> None:
-        self._active.set()
-        self._thread.start()
-
-    def reset(self) -> None:
-        self.peak_mb = 0.0
-
-    def pause(self) -> None:
-        self._active.clear()
-
-    def resume(self) -> None:
-        self._active.set()
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread.is_alive():
-            self._thread.join(timeout=5)
 
 
 def _cpu_jiffies() -> tuple[int, int]:

@@ -2,7 +2,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload spine_daily --seed 7 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload spine_daily --seed 7 --seconds 12 --trace 0
 
 Workloads (one-line reasons in BENCHMARK.json):
 
@@ -10,7 +10,8 @@ Workloads (one-line reasons in BENCHMARK.json):
   day_batch=1)`` is called once per warc_day of a generated webtext table
   until no day is pending; the warm-up is one bulk ``pipeline.run`` over
   all days of the same table.
-- ``dedup_groups``: a generated documents table written stage by stage as
+- ``dedup_groups``: the committed sf0.1 documents table, its rows in an
+  order drawn from the seed, written stage by stage as
   ``jobs/run_dedup.py`` does: ``exact_dedup``, ``simhash_near_dups`` with
   the d9 parameters, ``near_dup_groups``.
 
@@ -18,8 +19,8 @@ Each run drives Spark in-process through ``session.get_spark`` with
 ``local[<cores>]`` and no other setting changed, as a closed loop with one
 client: the next call is made only after the previous one returned. A
 *unit* (one daily cycle, one dedup pass) is repeated until the units have
-run for ``--seconds``; every unit's outputs are checked outside the timed
-region. Inputs are generated from ``--seed`` and cached per seed under
+run for ``--seconds`` (and, on dedup_groups, at least three times); every unit's outputs are checked outside the timed
+region. Inputs are made from ``--seed`` and cached per seed under
 ``.perfbench_work/`` outside every timed region.
 
 ``--trace 0`` prints the end-to-end metrics, measured untraced.
@@ -125,22 +126,21 @@ def stop_jvm() -> None:
             proc.wait(timeout=30)
 
 
-def _timed_units(spark, wl, run_dir: str, seconds: float, sampler) -> list:
-    """Closed loop: run units until they have taken ``seconds`` in total;
-    check each one outside the timed region."""
+def _timed_units(spark, wl, run_dir: str, seconds: float, min_units: int = 1) -> list:
+    """Closed loop: run units until they have taken ``seconds`` in total
+    and there are at least ``min_units``; check each one outside the
+    timed region."""
     units = []
     busy = 0.0
-    sampler.reset()
-    while busy < seconds or not units:
+    jvm = procstat.jvm_pid()
+    while busy < seconds or len(units) < min_units:
         out = os.path.join(run_dir, f"unit{len(units)}")
-        cpu0 = procstat.tree_cpu_seconds(sampler.pid)
+        cpu0 = procstat.tree_cpu_seconds(jvm)
         unit = wl.unit(spark, out)
-        unit.cpu_s = procstat.tree_cpu_seconds(sampler.pid) - cpu0
+        unit.cpu_s = procstat.tree_cpu_seconds(jvm) - cpu0
         busy += unit.wall_s
-        sampler.pause()
         wl.check(spark, out, unit)
         shutil.rmtree(out, ignore_errors=True)
-        sampler.resume()
         units.append(unit)
     return units
 
@@ -149,22 +149,19 @@ def end_to_end(setup_s: float, units) -> dict[str, float]:
     return {
         "setup_s": setup_s,
         "wall_s": statistics.median(u.wall_s for u in units),
-        # the middle call of each unit, median over units: the calls of a
-        # dedup pass are unlike stages, so a median pooled over a varying
-        # number of passes would change meaning with the pass count
+        # median call of each unit (Unit.op_s), median over units
         "op_p50_s": statistics.median(statistics.median(u.op_s) for u in units),
         "items_per_s": statistics.median(u.items / u.wall_s for u in units),
         "cpu_s": statistics.median(u.cpu_s for u in units),
     }
 
 
-def _traced(spark, wl, run_dir: str, sampler):
+def _traced(spark, wl, run_dir: str):
     """One untraced unit, then the same unit and the layer probes in a
     new session of the same JVM with the event log on."""
     from perfbench import trace
 
-    untraced = _timed_units(spark, wl, run_dir, 0, sampler)[0]
-    sampler.stop()
+    untraced = _timed_units(spark, wl, run_dir, 0)[0]
     spark.stop()
     tracer = trace.Tracer(os.path.join(run_dir, "eventlog"))
     spark = start_session(tracer.spark_conf())
@@ -195,25 +192,20 @@ def run(args) -> dict:
     _setup_env(run_dir)
     wl = WORKLOADS[args.workload](os.path.join(work, "inputs"), args.seed, args.scale)
     steal = procstat.StealMeter()
-    sampler = None
     try:
         spark = start_session()
         t_ready = time.time()
-        wl.prepare()  # generated and checked outside every timed region
+        wl.prepare()  # made and checked outside every timed region
         t0 = time.time()
         wl.warm_up(spark, os.path.join(run_dir, "warm"))
         setup_s = (t_ready - t_proc) + (time.time() - t0)
-        sampler = procstat.RssSampler()
-        sampler.start()
         if args.trace:
-            units, metrics, detail = _traced(spark, wl, run_dir, sampler)
+            units, metrics, detail = _traced(spark, wl, run_dir)
         else:
-            units = _timed_units(spark, wl, run_dir, args.seconds, sampler)
+            units = _timed_units(spark, wl, run_dir, args.seconds, wl.min_units)
             metrics = end_to_end(setup_s, units)
-            detail = {}
+            detail = {"peak_rss_mb": procstat.tree_peak_rss_mb(procstat.jvm_pid())}
     finally:
-        if sampler is not None:
-            sampler.stop()
         stop_jvm()
         shutil.rmtree(run_dir, ignore_errors=True)
     if sorted(metrics) != sorted(units_of):
@@ -228,9 +220,10 @@ def run(args) -> dict:
         "unit_wall_s": [u.wall_s for u in units],
         "op_s": [u.op_s for u in units],
         "op_samples": sum(len(u.op_s) for u in units),
+        "stage_s": [u.stage_s for u in units if u.stage_s],
+        "cpu_s": [u.cpu_s for u in units],
         "output_bytes": [u.output_bytes for u in units],
         "steal_frac": steal.fraction(),
-        "peak_rss_mb": sampler.peak_mb,
         "failures": wl.failures[:20],
         **detail,
     }

@@ -12,6 +12,8 @@ import shutil
 import subprocess
 import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -68,6 +70,41 @@ def test_record_sinks_follow_the_grammar():
     assert oracles.record_sinks("no timestamp here", "plain") == ["quarantine"]
     rec = "2025-05-01 10:00:00.000 UTC [7] ERROR:  division by zero\n"
     assert oracles.record_sinks(rec, "plain") == ["errors"]
+
+
+def test_banded_pairs_share_a_band_and_lie_within_the_bound():
+    width = oracles.SIG_BITS // oracles.N_BANDS
+    ones = (1 << oracles.SIG_BITS) - 1
+    one_per_band = sum(1 << (width * b) for b in range(oracles.N_BANDS))
+    sigs = {1: 0, 2: 0b111, 3: ones, 4: ones - 0xFF, 5: one_per_band, 6: 0xFFF << 4}
+    # 1-5 lie within distance 4 but share no band; 1-6 share bands at distance 12
+    assert oracles.banded_pairs(sigs) == [[1, 2, 3], [3, 4, 8]]
+
+
+def _write_dedup_outputs(out, expected, pairs, groups):
+    tables = {
+        "exact": {"content_hash": [e[0] for e in expected["exact"]],
+                  "cnt": [e[1] for e in expected["exact"]],
+                  "keeper": [e[2] for e in expected["exact"]]},
+        "pairs": {"doc1": [p[0] for p in pairs], "doc2": [p[1] for p in pairs],
+                  "hamming": [p[2] for p in pairs]},
+        "groups": {"doc_id": [g[0] for g in groups], "group_id": [g[1] for g in groups]},
+    }
+    for name, cols in tables.items():
+        os.makedirs(out / name, exist_ok=True)
+        pq.write_table(pa.table(cols), str(out / name / "part-0.parquet"))
+
+
+def test_dedup_check_catches_a_lost_pair_and_a_wrong_distance(tmp_path):
+    expected = oracles.write_documents(str(tmp_path / "docs"), seed=5, fraction=0.1)
+    pairs, groups = expected["pairs"], expected["groups"]
+    assert pairs and groups
+    _write_dedup_outputs(tmp_path / "ok", expected, pairs, groups)
+    assert oracles.check_dedup(str(tmp_path / "ok"), expected) == ([], [], [])
+    wrong = [pairs[0][:2] + [pairs[0][2] - 1]] + pairs[2:]
+    _write_dedup_outputs(tmp_path / "bad", expected, wrong, groups[1:])
+    exact, pair_problems, group_problems = oracles.check_dedup(str(tmp_path / "bad"), expected)
+    assert exact == [] and pair_problems and group_problems
 
 
 @pytest.mark.parametrize("workload", sorted(WORKLOADS))
