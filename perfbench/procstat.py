@@ -1,10 +1,15 @@
 """Host measurements read from /proc (psutil is not installed): CPU time
 and peak resident memory of the Spark JVM and every process under it,
-and CPU steal."""
+and CPU steal; and a probe of the host's speed."""
 
 from __future__ import annotations
 
 import os
+import random
+import statistics
+import threading
+import time
+import zlib
 
 
 def _children() -> dict[int, list[int]]:
@@ -80,3 +85,44 @@ class StealMeter:
         total, steal = _cpu_jiffies()
         dt = total - self._total0
         return (steal - self._steal0) / dt if dt > 0 else 0.0
+
+
+def _probe_text() -> bytes:
+    """About 1.3 MB of words from a fixed 2,000-word vocabulary."""
+    rng = random.Random(0)
+    letters = b"abcdefghijklmnopqrstuvwxyz"
+    vocab = [
+        bytes(rng.choice(letters) for _ in range(rng.randint(2, 9)))
+        for _ in range(2000)
+    ]
+    return b" ".join(rng.choice(vocab) for _ in range(200_000))
+
+
+_PROBE_TEXT = _probe_text()
+
+
+def speed_probe(threads: int, rounds: int = 6) -> float:
+    """How fast the host's cores run code now: CPU seconds for one thread
+    to compress a fixed text twice with zlib, the median over ``threads``
+    threads (zlib releases the GIL, so they run on as many cores) and
+    ``rounds`` rounds. CPU seconds, not wall time, so the probe reads
+    the cores' speed and not how many of them were free: other load
+    sharing the cores leaves it unchanged, but not a slower core. About
+    0.05 s on a quiet 4-core host."""
+    cpus = []
+    for _ in range(rounds):
+        cpu = [0.0] * threads
+
+        def work(i: int) -> None:
+            c0 = time.thread_time()
+            for _ in range(2):
+                zlib.compress(_PROBE_TEXT, 6)
+            cpu[i] = time.thread_time() - c0
+
+        pool = [threading.Thread(target=work, args=(i,)) for i in range(threads)]
+        for t in pool:
+            t.start()
+        for t in pool:
+            t.join()
+        cpus.extend(cpu)
+    return statistics.median(cpus)

@@ -2,14 +2,14 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload spine_daily --seed 7 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload spine_daily --seed 7 --seconds 20 --trace 0
 
 Workloads (one-line reasons in BENCHMARK.json):
 
 - ``spine_daily``: the resumable daily job. ``plans.pipeline.run(...,
   day_batch=1)`` is called once per warc_day of a generated webtext table
   until no day is pending; the warm-up is one bulk ``pipeline.run`` over
-  all days of the same table.
+  all days of the same table and one daily cycle.
 - ``dedup_groups``: the committed sf0.1 documents table, its rows in an
   order drawn from the seed, written stage by stage as
   ``jobs/run_dedup.py`` does: ``exact_dedup``, ``simhash_near_dups`` with
@@ -19,9 +19,19 @@ Each run drives Spark in-process through ``session.get_spark`` with
 ``local[<cores>]`` and no other setting changed, as a closed loop with one
 client: the next call is made only after the previous one returned. A
 *unit* (one daily cycle, one dedup pass) is repeated until the units have
-run for ``--seconds`` (and, on dedup_groups, at least three times); every unit's outputs are checked outside the timed
-region. Inputs are made from ``--seed`` and cached per seed under
+run for ``--seconds`` and there are at least ``min_units`` of them (three
+cycles, five passes); every unit's outputs are checked outside the timed
+region, and each metric is a median over the run's units or calls.
+Inputs are made from ``--seed`` and cached per seed under
 ``.perfbench_work/`` outside every timed region.
+
+Times are scaled to a reference speed of the host's cores. The cores of
+this shared host change speed by up to 1.7x within minutes (a unit's CPU
+seconds grow with its wall time, their ratio steady), which no median
+within a run removes. So the benchmark probes the cores' speed
+(``procstat.speed_probe``, outside the program) before and after set-up
+and after each unit, and divides each time by ``host_scale`` around it.
+The detail line gives the unscaled metrics and the scale factors.
 
 ``--trace 0`` prints the end-to-end metrics, measured untraced.
 ``--trace 1`` runs one untraced unit, restarts the session with Spark's
@@ -89,6 +99,11 @@ def _cores() -> int:
     return len(os.sched_getaffinity(0))
 
 
+#: ``procstat.speed_probe`` on a quiet host of 4 cores (2.1 GHz Xeon).
+#: Reported times are scaled to this speed.
+PROBE_REF = 0.052
+
+
 def start_session(extra_conf: dict[str, str] | None = None):
     from pgweasel_spark.session import get_spark
 
@@ -126,10 +141,20 @@ def stop_jvm() -> None:
             proc.wait(timeout=30)
 
 
-def _timed_units(spark, wl, run_dir: str, seconds: float, min_units: int = 1) -> list:
+def host_scale(before: float, after: float) -> float:
+    """How slow the host's cores ran over an interval, from the speed
+    probes on either side of it: 1 at ``PROBE_REF``, 1.5 when the probe
+    took half as long again."""
+    return (before + after) / 2 / PROBE_REF
+
+
+def _timed_units(
+    spark, wl, run_dir: str, seconds: float, probe: float, min_units: int = 1
+) -> list:
     """Closed loop: run units until they have taken ``seconds`` in total
-    and there are at least ``min_units``; check each one outside the
-    timed region."""
+    and there are at least ``min_units``; probe the host's speed after
+    each one, and check each one outside the timed region. ``probe`` is
+    the speed probe taken just before the first unit."""
     units = []
     busy = 0.0
     jvm = procstat.jvm_pid()
@@ -138,6 +163,9 @@ def _timed_units(spark, wl, run_dir: str, seconds: float, min_units: int = 1) ->
         cpu0 = procstat.tree_cpu_seconds(jvm)
         unit = wl.unit(spark, out)
         unit.cpu_s = procstat.tree_cpu_seconds(jvm) - cpu0
+        after = procstat.speed_probe(_cores())
+        unit.scale = host_scale(probe, after)
+        probe = after
         busy += unit.wall_s
         wl.check(spark, out, unit)
         shutil.rmtree(out, ignore_errors=True)
@@ -145,23 +173,29 @@ def _timed_units(spark, wl, run_dir: str, seconds: float, min_units: int = 1) ->
     return units
 
 
-def end_to_end(setup_s: float, units) -> dict[str, float]:
+def end_to_end(setup_s: float, setup_scale: float, units, scaled: bool = True) -> dict[str, float]:
+    """The end-to-end metrics. With ``scaled``, each time is divided by
+    the host's ``host_scale`` around it, so that it reads as on cores of
+    ``PROBE_REF`` speed."""
+    def k(scale: float) -> float:
+        return scale if scaled else 1.0
+
     return {
-        "setup_s": setup_s,
-        "wall_s": statistics.median(u.wall_s for u in units),
-        # median call of each unit (Unit.op_s), median over units
-        "op_p50_s": statistics.median(statistics.median(u.op_s) for u in units),
-        "items_per_s": statistics.median(u.items / u.wall_s for u in units),
-        "cpu_s": statistics.median(u.cpu_s for u in units),
+        "setup_s": setup_s / k(setup_scale),
+        "wall_s": statistics.median(u.wall_s / k(u.scale) for u in units),
+        # median over every call of the run (Unit.op_s)
+        "op_p50_s": statistics.median(t / k(u.scale) for u in units for t in u.op_s),
+        "items_per_s": statistics.median(u.items * k(u.scale) / u.wall_s for u in units),
+        "cpu_s": statistics.median(u.cpu_s / k(u.scale) for u in units),
     }
 
 
-def _traced(spark, wl, run_dir: str):
+def _traced(spark, wl, run_dir: str, probe: float):
     """One untraced unit, then the same unit and the layer probes in a
     new session of the same JVM with the event log on."""
     from perfbench import trace
 
-    untraced = _timed_units(spark, wl, run_dir, 0)[0]
+    untraced = _timed_units(spark, wl, run_dir, 0, probe)[0]
     spark.stop()
     tracer = trace.Tracer(os.path.join(run_dir, "eventlog"))
     spark = start_session(tracer.spark_conf())
@@ -192,19 +226,27 @@ def run(args) -> dict:
     _setup_env(run_dir)
     wl = WORKLOADS[args.workload](os.path.join(work, "inputs"), args.seed, args.scale)
     steal = procstat.StealMeter()
+    t_probe = time.time()
+    probe = procstat.speed_probe(_cores())
+    t_probe = time.time() - t_probe
     try:
         spark = start_session()
         t_ready = time.time()
         wl.prepare()  # made and checked outside every timed region
         t0 = time.time()
         wl.warm_up(spark, os.path.join(run_dir, "warm"))
-        setup_s = (t_ready - t_proc) + (time.time() - t0)
+        setup_s = (t_ready - t_proc - t_probe) + (time.time() - t0)
+        after = procstat.speed_probe(_cores())
+        setup_scale = host_scale(probe, after)
         if args.trace:
-            units, metrics, detail = _traced(spark, wl, run_dir)
+            units, metrics, detail = _traced(spark, wl, run_dir, after)
         else:
-            units = _timed_units(spark, wl, run_dir, args.seconds, wl.min_units)
-            metrics = end_to_end(setup_s, units)
-            detail = {"peak_rss_mb": procstat.tree_peak_rss_mb(procstat.jvm_pid())}
+            units = _timed_units(spark, wl, run_dir, args.seconds, after, wl.min_units)
+            metrics = end_to_end(setup_s, setup_scale, units)
+            detail = {
+                "unscaled": end_to_end(setup_s, setup_scale, units, scaled=False),
+                "peak_rss_mb": procstat.tree_peak_rss_mb(procstat.jvm_pid()),
+            }
     finally:
         stop_jvm()
         shutil.rmtree(run_dir, ignore_errors=True)
@@ -217,6 +259,8 @@ def run(args) -> dict:
         "seed": args.seed,
         "cores": _cores(),
         "setup_s": setup_s,
+        "setup_scale": setup_scale,
+        "scale": [u.scale for u in units],
         "unit_wall_s": [u.wall_s for u in units],
         "op_s": [u.op_s for u in units],
         "op_samples": sum(len(u.op_s) for u in units),

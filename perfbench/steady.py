@@ -88,8 +88,16 @@ def main() -> int:
             print(f"  {n:28s} median {s['median']:.6g}  spread {s['spread']}"
                   + (f"  vs earlier {s['vs_earlier']:+.3f}" if earlier else ""),
                   file=sys.stderr)
+        unscaled = {
+            n: spread([r["detail"]["unscaled"][n] for r in runs])
+            for n in runs[0]["detail"].get("unscaled", {})
+        }
+        for n, u in unscaled.items():
+            print(f"  unscaled {n:19s} median {u['median']:.6g}  spread {u['spread']}",
+                  file=sys.stderr)
         report["workloads"][wl] = {
             "metrics": stats,
+            "unscaled": unscaled,
             "all_correct": all(r["result"]["correct"] for r in runs),
             "runs": runs,
         }
