@@ -821,9 +821,10 @@ def test_embedding_lsh_hot_bucket_is_salted_into_bounded_groups(spark):
 
 
 def test_near_dup_groups_random_graphs_match_union_find(spark):
-    """Distributed label propagation must equal a driver-side union-find
-    on random pair graphs (varied density, incl. isolated pairs, stars
-    and chains by construction of the random draw)."""
+    """Per-partition contraction plus label propagation must equal a
+    driver-side union-find on random pair graphs (varied density, incl.
+    isolated pairs, stars and chains by construction of the random
+    draw), however the pairs are spread over partitions."""
     import random
 
     for seed, n_nodes, n_edges in [(1, 40, 15), (2, 60, 60), (3, 25, 80)]:
@@ -851,14 +852,15 @@ def test_near_dup_groups_random_graphs_match_union_find(spark):
             for members in comp.values()
             for x in members
         }
-        df = spark.createDataFrame(
-            sorted(pairs), "doc1 long, doc2 long"
-        )
-        got = {
-            r["doc_id"]: r["group_id"]
-            for r in dedup.near_dup_groups(df).collect()
-        }
-        assert got == expected, f"seed={seed}"
+        for n_parts in (1, 4, 16, 64):
+            df = spark.createDataFrame(
+                sorted(pairs), "doc1 long, doc2 long"
+            ).repartition(n_parts)
+            got = {
+                r["doc_id"]: r["group_id"]
+                for r in dedup.near_dup_groups(df).collect()
+            }
+            assert got == expected, f"seed={seed} n_parts={n_parts}"
 
 
 def _ppm(w, h, pixels, comment=False):
@@ -1047,6 +1049,71 @@ def test_semantic_decontaminate(spark):
 def test_near_dup_groups_empty_pairs(spark):
     empty = spark.createDataFrame([], "doc1 long, doc2 long")
     assert dedup.near_dup_groups(empty).collect() == []
+    # every partition empty, and a few partitions holding all the pairs
+    assert dedup.near_dup_groups(empty.repartition(8)).collect() == []
+    sparse = spark.sparkContext.parallelize([(1, 2), (3, 4)], 16).toDF(
+        "doc1 long, doc2 long"
+    )
+    assert sorted(map(tuple, dedup.near_dup_groups(sparse).collect())) == [
+        (1, 1), (2, 1), (3, 3), (4, 3),
+    ]
+
+
+def test_near_dup_groups_string_keys(spark):
+    """The key type survives the mapInPandas contraction: string ids
+    group by their own (lexicographic) min, self-pairs stay one-doc
+    groups and null ends are ignored."""
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("x", "y"), ("s", "s"), ("q", None)],
+        "doc1 string, doc2 string",
+    ).repartition(3)
+    out = dedup.near_dup_groups(pairs)
+    assert out.schema["doc_id"].dataType.simpleString() == "string"
+    assert out.schema["group_id"].dataType.simpleString() == "string"
+    assert [tuple(r) for r in out.collect()] == [
+        ("a", "a"), ("b", "a"), ("c", "a"),
+        ("s", "s"), ("x", "x"), ("y", "x"),
+    ]
+
+
+def _interleaved_chain(spark, n):
+    """A chain 0-1-...-n with one edge per partition, the edges ordered
+    so that no two neighbouring partitions share a node: coalescing the
+    partitions leaves nothing for the per-partition contraction to
+    join."""
+    order = sorted(range(n), key=lambda i: (i % 8, i))
+    return spark.sparkContext.parallelize(
+        [(i, i + 1) for i in order], n
+    ).toDF("doc1 long, doc2 long")
+
+
+def test_near_dup_groups_max_iter_raises(spark):
+    """Hitting max_iter with labels still changing is an error, never a
+    silent partial grouping; the same graph converges with the default
+    bound."""
+    pairs = _interleaved_chain(spark, 64)
+    with pytest.raises(RuntimeError, match=r"1 rounds: \d+ labels"):
+        dedup.near_dup_groups(pairs, max_iter=1)
+    rows = dedup.near_dup_groups(pairs).collect()
+    assert len(rows) == 65 and {r["group_id"] for r in rows} == {0}
+
+
+def test_near_dup_groups_releases_round_checkpoints(spark):
+    """Checkpointed blocks do not grow with the round count: each round
+    frees its predecessor and the edges are freed at the end, leaving
+    only the labels the returned frame reads. Counts the persisted RDDs
+    a call adds, so the cleaner freeing older ones cannot skew it."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    def cached_by(pairs):
+        before = set(persisted().keySet())
+        groups = dedup.near_dup_groups(pairs)
+        groups.collect()
+        return len(set(persisted().keySet()) - before)
+
+    one_round = spark.createDataFrame([(1, 2)], "doc1 long, doc2 long")
+    many_rounds = _interleaved_chain(spark, 64)
+    assert cached_by(one_round) == cached_by(many_rounds) == 1
 
 
 def test_sessionize_gap_semantics(spark):
@@ -1477,24 +1544,20 @@ def test_unigram_total_tokens_maponly_equals_freq_sum(spark):
     assert a == b
 
 
-def test_near_dup_groups_dedupe_edges_equivalent(spark):
-    """r6: ``dedupe_edges=False`` (skips the edge distinct when the
-    caller's pairs are pre-deduped) must produce identical groups —
-    even when the input DOES contain duplicate/reversed pairs, since
-    duplicate edges cannot change a min-label fixpoint."""
-    from pgweasel_spark.operators.dedup import near_dup_groups
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 2), (3, 2), (10, 11), (20, 21), (21, 22)],
-        "doc1 long, doc2 long",
-    )
-    a = sorted(map(tuple, near_dup_groups(pairs).collect()))
-    b = sorted(
-        map(tuple, near_dup_groups(pairs, dedupe_edges=False).collect())
-    )
-    assert a == b
-    assert a == [
+def test_near_dup_groups_duplicate_pairs_same_groups(spark):
+    """Duplicated and reversed input pairs give the same groups as the
+    unique pair list: star edges repeat across partitions whatever the
+    input, and the edge distinct absorbs them."""
+    unique = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
+    dup = unique + [(1, 2), (3, 2), (2, 1), (22, 21), (10, 11)]
+    expected = [
         (1, 1), (2, 1), (3, 1),
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     ]
+    for rows, n_parts in ((unique, 1), (dup, 1), (dup, 4), (dup, 10)):
+        pairs = spark.sparkContext.parallelize(rows, n_parts).toDF(
+            "doc1 long, doc2 long"
+        )
+        got = sorted(map(tuple, dedup.near_dup_groups(pairs).collect()))
+        assert got == expected, n_parts
