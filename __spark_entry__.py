@@ -1155,8 +1155,10 @@ def q_b1_binary_meta(spark, sf_dir):
 
 def q_d5_simhash(spark, sf_dir):
     """SimHash (60-bit, portable md5-derived word hash) per document —
-    per-bit ±1 voting entirely in JVM higher-order functions; the DuckDB
-    oracle restates the identical arithmetic with list comprehensions."""
+    per-bit ±1 voting in the vectorized ``simhash60`` kernel (one Arrow
+    batch at a time, md5 once per distinct word of the batch, memory
+    O(words in one batch)); the DuckDB oracle restates the identical
+    arithmetic with list comprehensions."""
     from pgweasel_spark.operators.dedup import simhash60
 
     d = _t_par(spark, sf_dir, "documents")
@@ -1169,8 +1171,8 @@ def q_d5b_simhash_neardup(spark, sf_dir):
     for Hamming < n_bands) + bit_count(xor) verification. The oracle
     replicates the banded-candidate semantics exactly.
 
-    Reuses d5's signature frame through ``sig_col`` so the per-word md5
-    fold runs exactly once (round-2 judge finding: without materialized
+    Reuses d5's signature frame through ``sig_col`` so the signature
+    kernel runs exactly once (round-2 judge finding: without materialized
     signatures the band self-join recomputed it per side); the persist
     makes the band join read 16-byte cached rows."""
     from pgweasel_spark.operators.dedup import simhash_near_dups

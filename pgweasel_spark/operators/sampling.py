@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: top 15 hex chars of md5 as a 60-bit integer — identical scheme to
-#: dedup._WORD_HASH60; division by 2^60 gives an IEEE-exact uniform
+#: top 15 hex chars of md5 as a 60-bit integer — the same word-hash
+#: scheme as dedup.simhash60; division by 2^60 gives an IEEE-exact uniform
 #: fraction (both engines compute bigint/2^60 in double).
 _HASH60_DEN = float(1 << 60)
 

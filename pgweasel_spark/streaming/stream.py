@@ -275,7 +275,8 @@ def streaming_simhash_near_dups(
     before?").
 
     Shape mirrors the batch operator exactly: the 60-bit signature is
-    computed JVM-side (simhash60 — the map stage), each doc explodes
+    computed by the vectorized simhash60 kernel (the map stage, one
+    Arrow batch at a time, memory O(words in one batch)), each doc explodes
     into ``n_bands`` (band, bval) keys, and state lives per band
     BUCKET via ``applyInPandasWithState`` — a pair is compared only if
     it shares a band (pigeonhole: total recall for

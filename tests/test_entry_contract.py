@@ -23,3 +23,19 @@ def test_rows_only_set_is_exactly_the_documented_one():
 def test_query_callables_are_callable():
     for name, fn in entry.queries().items():
         assert callable(fn), name
+
+
+def test_t_fan_keeps_null_key_rows(spark, tmp_path):
+    """``_t_fan`` loses no row whose slice key is null: ``xxhash64(null)``
+    is the seed (42), so ``pmod`` sends every null key to one slice."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids = [None if i % 3 == 0 else i for i in range(60)]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "text": ["t"] * 60}),
+        str(tmp_path / "documents.parquet"),
+    )
+    fanned = entry._t_fan(spark, str(tmp_path), "documents")
+    assert fanned.count() == len(ids)
+    assert fanned.where("doc_id is null").count() == ids.count(None)

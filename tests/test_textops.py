@@ -98,13 +98,13 @@ def test_simhash(docs):
     out = {
         r["doc_id"]: r["sh"]
         for r in docs.select(
-            "doc_id", dedup.simhash64("text").alias("sh")
+            "doc_id", dedup.simhash60("text").alias("sh")
         ).collect()
     }
     assert out[0] == out[2]  # identical text
     # near-dup should be closer in hamming distance than unrelated
     def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+        return bin(a ^ b).count("1")
 
     assert ham(out[0], out[1]) < ham(out[0], out[3])
 
@@ -120,28 +120,119 @@ def test_simhash_near_dups(docs):
         dedup.simhash_near_dups(docs, max_hamming=16)
 
 
+def _h60(w):
+    import hashlib
+
+    return int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
+
+
+def _simhash60_reference(t):
+    """Loop restatement of simhash60 (the arithmetic the DuckDB oracle
+    states): +1/-1 vote per bit over the " "-split words."""
+    if t is None:
+        return None
+    ws = t.split(" ")
+    sh = 0
+    for j in range(60):
+        v = sum(1 if (_h60(w) >> j) & 1 else -1 for w in ws)
+        if v > 0:
+            sh |= 1 << j
+    return sh
+
+
 def test_simhash60_matches_python_reference(docs):
     """simhash60 must equal the portable Python re-derivation bit-for-bit
     (the same arithmetic the DuckDB oracle states)."""
-    import hashlib
-
-    def h60(w):
-        return int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
-
-    def sim(t):
-        ws = t.split(" ")
-        sh = 0
-        for j in range(60):
-            v = sum(1 if (h60(w) >> j) & 1 else -1 for w in ws)
-            if v > 0:
-                sh |= 1 << j
-        return sh
-
     rows = docs.select(
         "doc_id", "text", dedup.simhash60("text").alias("sh")
     ).collect()
     for r in rows:
-        assert r["sh"] == sim(r["text"]), r["doc_id"]
+        assert r["sh"] == _simhash60_reference(r["text"]), r["doc_id"]
+
+
+def test_simhash60_edge_cases_match_python_reference(spark):
+    """Null, empty and blank text, repeated and trailing spaces,
+    non-ASCII words, a long document, and more rows than one Arrow batch
+    (2,048 rows) all match the loop restatement bit for bit."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(300)]
+    vocab += ["straße", "日本語", "ñandú", "🙂"]
+    edge = [
+        None,
+        "",
+        " ",
+        "a  b",
+        "a b ",
+        "  lead and trail  ",
+        "ünïcödé wörds ĉi tie 日本語 テキスト",
+        " ".join(rng.choice(vocab) for _ in range(700)),
+    ]
+    bulk = [
+        None if i % 97 == 0
+        else " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30)))
+        for i in range(4500)
+    ]
+    texts = edge + bulk
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).repartition(1)
+    got = dict(
+        df.select("doc_id", dedup.simhash60("text").alias("sh")).collect()
+    )
+    assert len(got) == len(texts)
+    for i, t in enumerate(texts):
+        assert got[i] == _simhash60_reference(t), (i, t)
+
+
+@pytest.mark.parametrize("n_bands", [2, 4, 6])
+def test_simhash_lowest_band_filter_equals_distinct(spark, n_bands):
+    """Keeping only each pair's lowest shared band gives exactly the pair
+    set of the union of band joins plus ``distinct()`` (restated here as
+    a Python banding over random signatures), each pair once."""
+    import itertools
+    import random
+
+    rng = random.Random(n_bands)
+    width = 60 // n_bands
+    bases = [rng.getrandbits(60) for _ in range(6)]
+    sigs = {}
+    for i in range(150):
+        s = rng.choice(bases)
+        for _ in range(rng.randint(0, 12)):
+            s ^= 1 << rng.randrange(60)
+        sigs[i] = s
+
+    def bands(s):
+        return [(s >> (width * b)) & ((1 << width) - 1) for b in range(n_bands)]
+
+    for max_hamming in (n_bands - 1, 60):
+        expected = {
+            (i, j, bin(sigs[i] ^ sigs[j]).count("1"))
+            for i, j in itertools.combinations(sorted(sigs), 2)
+            if any(x == y for x, y in zip(bands(sigs[i]), bands(sigs[j])))
+            and bin(sigs[i] ^ sigs[j]).count("1") <= max_hamming
+        }
+        df = spark.createDataFrame(
+            sorted(sigs.items()), "doc_id long, sh long"
+        )
+        rows = [
+            tuple(r)
+            for r in dedup.simhash_near_dups(
+                df,
+                sig_col="sh",
+                max_hamming=max_hamming,
+                n_bands=n_bands,
+                allow_partial_recall=True,
+            ).collect()
+        ]
+        assert len(rows) == len(set(rows))
+        assert set(rows) == expected
+        assert any(
+            sum(x == y for x, y in zip(bands(sigs[i]), bands(sigs[j]))) > 1
+            for i, j, _ in expected
+        )
 
 
 def test_simhash_multiband_recall_is_exact_for_small_hamming(spark):
@@ -150,7 +241,6 @@ def test_simhash_multiband_recall_is_exact_for_small_hamming(spark):
     brute-force all-pairs scan finds — including pairs whose differing
     bits all sit in the top band (which the round-1 single-prefix-band
     design missed)."""
-    import hashlib
     import itertools
 
     base = (
@@ -172,18 +262,7 @@ def test_simhash_multiband_recall_is_exact_for_small_hamming(spark):
         sorted(texts.items()), "doc_id long, text string"
     )
 
-    def h60(w):
-        return int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
-
-    def sim(t):
-        ws = t.split(" ")
-        sh = 0
-        for j in range(60):
-            if sum(1 if (h60(w) >> j) & 1 else -1 for w in ws) > 0:
-                sh |= 1 << j
-        return sh
-
-    sigs = {i: sim(t) for i, t in texts.items()}
+    sigs = {i: _simhash60_reference(t) for i, t in texts.items()}
     expected = {
         (i, j)
         for i, j in itertools.combinations(sorted(texts), 2)
