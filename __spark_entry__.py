@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pgweasel_spark import grammar  # noqa: E402
 from pgweasel_spark.functions import extract as X  # noqa: E402
+from pgweasel_spark.operators.enrich import dim_severity  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -519,18 +520,12 @@ def q_p1_severity_grok(spark, sf_dir):
 
 def q_p3_severity_enrich(spark, sf_dir):
     """P3 severity→ordinal/class via broadcast dim join (the reference's
-    inlined lookup at src/severity.rs:161-176 as a dimension table)."""
+    inlined lookup at src/severity.rs:161-176 as a dimension table): the
+    spine's own ``enrich.dim_severity`` local relation."""
     ev = _events_with_lines(spark, sf_dir, only=['sev_line'])
     sev = ev.select(X.severity_plain(F.col("sev_line")).alias("severity"))
-    dim = spark.createDataFrame(
-        [
-            (s, grammar.SEVERITY_NUM[s], grammar.SEVERITY_CLASS[s])
-            for s in sorted(grammar.SEVERITY_NUM)
-        ],
-        "severity string, ordinal int, class string",
-    )
     return (
-        sev.join(F.broadcast(dim), "severity", "left")
+        sev.join(F.broadcast(dim_severity(spark)), "severity", "left")
         .groupBy("class")
         .agg(
             F.count(F.lit(1)).alias("cnt"),

@@ -5,6 +5,13 @@ src/severity.rs:161-176 is an inlined dimension table); the north-star
 requires them as broadcast lookup tables. All dims are tiny (≤ dozens of
 rows) so every join below is an explicit ``F.broadcast`` hash join — no
 shuffle of the fact side, safe at 10^12 rows.
+
+Each dim is a ``LocalRelation`` (an inline ``VALUES`` table, see
+``_local_dim``): its rows live in the plan, so broadcasting it is a
+``LocalTableScan`` on the driver with no RDD and no Python task.
+``createDataFrame(list, ddl)`` would instead re-pickle the rows through a
+``PythonRDD`` and run a ``Scan ExistingRDD`` job of Python tasks per dim
+on every call.
 """
 
 from __future__ import annotations
@@ -46,31 +53,60 @@ LANG_FAMILIES = {
 }
 
 
+def _local_dim(
+    spark: SparkSession, columns: list[str], rows: list[tuple]
+) -> DataFrame:
+    """``rows`` as a ``LocalRelation`` with the given column names.
+
+    The values bind as named parameter markers, so nothing is quoted into
+    the SQL text and Spark keeps their Python types (``str`` → string,
+    ``int`` → int, ``bool`` → boolean). Named, not positional: on Spark
+    4.1 positional ``?`` markers in a ``VALUES`` list of three or more
+    rows bind out of order."""
+    markers, args = [], {}
+    for i, row in enumerate(rows):
+        names = [f"r{i}c{j}" for j in range(len(row))]
+        markers.append("(" + ", ".join(f":{n}" for n in names) + ")")
+        args.update(zip(names, row))
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(markers)} AS t({', '.join(columns)})",
+        args=args,
+    )
+
+
 def dim_severity(spark: SparkSession) -> DataFrame:
-    """12-row severity dim: ordinal from src/severity.rs:161-176 (quirks
-    preserved: LOG/INFO→5, DEBUG5/PANIC→0) + our class rollup."""
+    """12-row severity dim (``severity string, ordinal int, class
+    string``), a local relation: ordinal from src/severity.rs:161-176
+    (quirks preserved: LOG/INFO→5, DEBUG5/PANIC→0) + our class rollup."""
     rows = [
         (sev, grammar.SEVERITY_NUM[sev], grammar.SEVERITY_CLASS[sev])
         for sev in sorted(grammar.SEVERITY_NUM)
     ]
-    return spark.createDataFrame(rows, "severity string, ordinal int, class string")
+    return _local_dim(spark, ["severity", "ordinal", "class"], rows)
 
 
 def dim_sqlstate(spark: SparkSession) -> DataFrame:
-    rows = list(SQLSTATE_CLASSES.items())
-    return spark.createDataFrame(rows, "state_class string, category string")
+    """SQLSTATE class dim (``state_class string, category string``), a
+    local relation."""
+    return _local_dim(
+        spark, ["state_class", "category"], list(SQLSTATE_CLASSES.items())
+    )
 
 
 def dim_host(spark: SparkSession) -> DataFrame:
-    """Generated host universe; the first two hosts carry ~80% of pages
+    """Generated host universe (``host_name string, is_skewed boolean``),
+    a local relation; the first two hosts carry ~80% of pages
     (gen.HOST_WEIGHTS) and are flagged for salting decisions."""
     rows = [(h, i < 2) for i, h in enumerate(HOSTS)]
-    return spark.createDataFrame(rows, "host_name string, is_skewed boolean")
+    return _local_dim(spark, ["host_name", "is_skewed"], rows)
 
 
 def dim_lang(spark: SparkSession) -> DataFrame:
-    rows = list(LANG_FAMILIES.items())
-    return spark.createDataFrame(rows, "lang_code string, lang_family string")
+    """Language family dim (``lang_code string, lang_family string``), a
+    local relation."""
+    return _local_dim(
+        spark, ["lang_code", "lang_family"], list(LANG_FAMILIES.items())
+    )
 
 
 def enrich(events: DataFrame) -> DataFrame:

@@ -4,7 +4,9 @@ One logical plan per day batch:
 
   scan (column-pruned: url,warc_ts,lang,text)
     → JVM record split (codegen)        (no shuffle)
-    → JVM extraction + enrichment       (no shuffle; broadcast joins)
+    → JVM extraction + enrichment       (no shuffle; broadcast joins of
+                                          local-relation dims: no RDD, no
+                                          Python task)
     → sink flags + explode              (no shuffle)
     → write routed table partitioned by (sink, warc_day, host_bucket)
   + aggregate stats tables              (one shuffle each, partial/final agg)
@@ -17,7 +19,8 @@ Scale notes (the 1000-executor / 100 TB story):
 - sinks are partitioned by warc_day + url-host hash bucket; a skewed host
   cannot skew a *file* beyond its bucket, and AQE handles residual skew.
 - resume: each day batch is idempotent (dynamic partition overwrite); the
-  manifest records completion + per-sink counts (plans/manifest.py).
+  manifest records completion + per-sink counts (plans/manifest.py), only
+  after the batch's stats tables are written.
 
 Iceberg: this sandbox has no Iceberg catalog jars, so sinks are parquet
 directory tables with the identical partition spec (sink/warc_day/
@@ -248,6 +251,11 @@ def run(
             sinks = per_day[r["d"]]
             sinks[r["sink"]] = sinks.get(r["sink"], 0) + r["count"]
             per_part[r["d"]][f"{r['sink']}/{r['host_bucket']}"] = r["count"]
+        # the stats tables come before the manifest commit: a failure in
+        # write_stats leaves the batch pending, so the next call re-routes
+        # it and rewrites the reports instead of keeping stale ones
+        if with_stats:
+            write_stats(written, out_root)
         elapsed = time.time() - t0
         for d in pending:
             manifest.mark_complete(
@@ -260,8 +268,6 @@ def run(
             for s, c in per_day[d].items():
                 sink_counts[s] = sink_counts.get(s, 0) + c
                 total += c
-        if with_stats:
-            write_stats(written, out_root)
 
     return PipelineResult(
         days_processed=pending,

@@ -27,3 +27,14 @@ def webtext_dir(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("webtext"))
     write_webtext(out, n_pages=120, seed=42)
     return out
+
+
+@pytest.fixture(scope="session")
+def generated_pages_dir(tmp_path_factory):
+    """Generated pages only (no reference fixture logs): 80 pages over
+    the generator's seven warc_days."""
+    from pgweasel_spark.gen import write_webtext
+
+    out = str(tmp_path_factory.mktemp("generated_pages"))
+    write_webtext(out, n_pages=80, seed=7, include_fixtures=False)
+    return out

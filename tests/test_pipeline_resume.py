@@ -2,10 +2,20 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pgweasel_spark.plans import pipeline
 from pgweasel_spark.plans.manifest import Manifest
+
+STATS_REPORTS = [
+    "errors_top",
+    "errors_hist",
+    "slow_top",
+    "connections_totals",
+    "connections_by_dim",
+    "connections_buckets",
+]
 
 
 def test_run_all_then_resume_noop(spark, webtext_dir, tmp_path):
@@ -197,14 +207,7 @@ def test_jsonlog_batch_pipeline_resume_matches_stderr_twin(
 def test_stats_tables_written(spark, webtext_dir, tmp_path):
     out = str(tmp_path / "stats_out")
     pipeline.run(spark, webtext_dir, out, with_stats=True)
-    for t in [
-        "errors_top",
-        "errors_hist",
-        "slow_top",
-        "connections_totals",
-        "connections_by_dim",
-        "connections_buckets",
-    ]:
+    for t in STATS_REPORTS:
         df = spark.read.parquet(os.path.join(out, "stats", t))
         assert df.count() > 0, t
     top = spark.read.parquet(os.path.join(out, "stats", "errors_top"))
@@ -221,3 +224,43 @@ def test_read_sink(spark, webtext_dir, tmp_path):
     errors = pipeline.read_sink(spark, out, "errors")
     assert errors.count() > 0
     assert errors.where(F.col("severity_num") < 8).count() == 0
+
+
+def _stats_rows(spark, out):
+    return {
+        t: sorted(
+            (tuple(r) for r in spark.read.parquet(os.path.join(out, "stats", t)).collect()),
+            key=repr,
+        )
+        for t in STATS_REPORTS
+    }
+
+
+def test_stats_failure_leaves_day_pending(
+    spark, generated_pages_dir, tmp_path, monkeypatch
+):
+    """A day is committed to the manifest only after its stats tables are
+    written: when ``write_stats`` fails, the day stays pending, and the
+    next call routes it again and rewrites the reports, which then equal
+    those of a fresh run over the same days."""
+    out = str(tmp_path / "out")
+    first = pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    assert len(first.days_processed) == 1
+
+    real = pipeline.write_stats
+
+    def fail_once(routed, out_root):
+        monkeypatch.setattr(pipeline, "write_stats", real)
+        raise RuntimeError("stats failed")
+
+    monkeypatch.setattr(pipeline, "write_stats", fail_once)
+    with pytest.raises(RuntimeError, match="stats failed"):
+        pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    manifest = Manifest.load(os.path.join(out, "manifest.json"))
+    assert manifest.completed_days() == set(first.days_processed)
+
+    res = pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    fresh = str(tmp_path / "fresh")
+    two_days = pipeline.run(spark, generated_pages_dir, fresh, day_batch=2)
+    assert res.days_processed == two_days.days_processed[1:]
+    assert _stats_rows(spark, out) == _stats_rows(spark, fresh)

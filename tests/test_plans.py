@@ -44,10 +44,18 @@ def test_events_count_prunes_text(spark, webtext_dir):
     assert "html" not in m.group(1)
 
 
-def test_enrich_uses_broadcast_joins(spark, webtext_dir):
-    plan = _plan(enrich(parse_events(spark.read.parquet(webtext_dir))))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+def test_enrich_uses_broadcast_joins(spark, generated_pages_dir):
+    """Four broadcast hash joins whose build sides are local table scans,
+    in the executed plan: no dim goes through an RDD (``Scan
+    ExistingRDD``, a job of Python tasks per call)."""
+    df = enrich(parse_events(spark.read.parquet(generated_pages_dir)))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ExistingRDD" not in final, final
+    assert final.count("BroadcastHashJoin") == 4, final
+    assert "LocalTableScan" in final, final
+    assert "SortMergeJoin" not in final, final
 
 
 def test_slow_top_is_take_ordered(spark, webtext_dir):
