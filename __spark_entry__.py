@@ -3,7 +3,7 @@
 Each ``queries()`` entry exercises one operator family from SURVEY.md §2
 (names are prefixed with the inventory id: a*=aggregators, f*=filters,
 p*=projections/extractors, r*=record assembly, h*=OLAP/joins, w*=windows,
-d*=dedup, t*=text analysis, e*=embeddings, b*=binary/multimodal), running
+d*=dedup, t*=text analysis, e*=embeddings, b*=binary columns), running
 against the driver's TPC-H-ish testdata. Log-grammar operators (p1/p5/p7/
 p8/p9, r3) run on log lines constructed deterministically from the test
 tables, so the *actual* production extraction expressions
@@ -623,7 +623,13 @@ def q_f2_min_severity(spark, sf_dir):
 def q_f5_locks(spark, sf_dir):
     """F5 LockingFilter: 17 ci literals OR case-sensitive
     ``process [0-9]+ acquired`` (locking_filter.rs:12-83); the UPPERCASE
-    process-acquired row must NOT match."""
+    process-acquired row must NOT match.
+
+    The checkpoint is lazy (``eager=False``): the first action on the
+    returned frame must be a full scan (``count``/``collect``/write) for
+    the checkpoint and the filter to run as one job. A partial-scan
+    action first (``show``, ``limit``) leaves partitions unmaterialized,
+    and a later full scan pays an extra job to complete them."""
     # fan the unsplittable scan, materialize (line, ASCII-folded line)
     # via localCheckpoint, then filter with the contains-chain engine on
     # the checkpointed attributes. The checkpoint is the pushdown
@@ -643,7 +649,10 @@ def q_f5_locks(spark, sf_dir):
 
 
 def q_f6_system(spark, sf_dir):
-    """F6 SystemFilter: 24 ci literals (system_filter.rs:12-48)."""
+    """F6 SystemFilter: 24 ci literals (system_filter.rs:12-48).
+
+    As in f5, the lazy checkpoint fuses with the filter into one job
+    only when the first action on the returned frame is a full scan."""
     # same fan + checkpoint + contains-chain shape as f5 (1.76 s → 1.12 s)
     ev = _events_with_lines(spark, sf_dir, only=['sys_line'], fan=True)
     base = ev.select(
@@ -1133,9 +1142,9 @@ def q_e1_cosine_all(spark, sf_dir):
 
 
 def q_b1_binary_meta(spark, sf_dir):
-    """Multimodal plumbing: opaque binary column + typed metadata
-    (byte length, content digest) — the decode step itself is stubbed
-    (operators/multimodal.py), the schema/plumbing is real."""
+    """Binary column metadata: the text encoded as an opaque binary
+    column, with its byte length (``octet_length``) and content digest
+    (``sha2``), both JVM built-ins. Nothing is decoded."""
     d = _t(spark, sf_dir, "documents")
     bin_col = F.encode("text", "UTF-8")
     return d.select(
@@ -1545,9 +1554,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 
 def _duck_hash60(expr: str) -> str:
-    """DuckDB restatement of dedup._WORD_HASH60: top 15 hex chars of md5
-    as a 60-bit integer, built from per-character shifts (integer-exact;
-    a pow()-based form would lose precision above 2^53)."""
+    """DuckDB restatement of the word hash inside ``dedup.simhash60``:
+    top 15 hex chars of md5 as a 60-bit integer, built from per-character
+    shifts (integer-exact; a pow()-based form would lose precision above
+    2^53)."""
     return (
         "("
         + " + ".join(

@@ -18,8 +18,8 @@ Stage outputs under --out:
     groups/   connected components over the pairs (near_dup_groups)
 
 The SimHash signature is computed once and persisted for the banding
-pass (sig_col reuse); at a larger horizon write it with
-simhash_build_index and feed the table across runs.
+pass (sig_col reuse); at a larger horizon write (doc_id, simhash60(text))
+to parquet once and feed that table back through sig_col across runs.
 """
 
 from __future__ import annotations

@@ -84,14 +84,6 @@ def exact_dedup(
     return df.groupBy(F.md5(text_col).alias("content_hash")).agg(*aggs)
 
 
-def normalized_text(text: Column) -> Column:
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(text), "[^a-z0-9 ]", ""), " +", " "
-        )
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -561,25 +553,6 @@ def simhash60(text_col: str) -> Column:
     return F.pandas_udf(_simhash60_batch, "long")(F.col(text_col))
 
 
-def simhash_build_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> None:
-    """Materialize the SimHash signature table ``(key, sh)`` to parquet —
-    the persisted sibling of ``lsh_build_index`` (similarity.py). At
-    10^12 docs the signature kernel is the single most expensive map
-    stage; writing it once lets every downstream banding pass (and
-    re-runs with different max_hamming/n_bands) scan 16 bytes/doc
-    instead of re-running the kernel over the text. Feed the result
-    back through
-    ``simhash_near_dups(spark.read.parquet(path), sig_col="sh")``."""
-    df.select(key_col, simhash60(text_col).alias("sh")).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
 def simhash_near_dups(
     df: DataFrame,
     text_col: str = "text",
@@ -606,8 +579,8 @@ def simhash_near_dups(
     band, so no ``distinct`` (and no shuffle for it) is needed.
 
     Signature reuse: pass ``sig_col`` when ``df`` already carries a
-    precomputed signature (e.g. the d5 frame, or a table written by
-    ``simhash_build_index``) and no signature is computed at all.
+    precomputed signature (e.g. the d5 frame, or a persisted
+    ``(key, simhash60)`` table) and no signature is computed at all.
     Otherwise the ``(key, sh)`` frame is persisted (memory+disk) before
     the band self-join — without that, AQE defeats exchange reuse and the
     signature kernel runs once per join side (judge-verified in round 2:

@@ -151,7 +151,3 @@ def parse_events(pages: DataFrame, splitter: str = "sql") -> DataFrame:
     return with_extracted(split(pages))
 
 
-def url_host(url: F.Column) -> F.Column:
-    """Host component of the url — partition/salting key
-    (north-rule: url-host hash + warc_ts day buckets)."""
-    return F.parse_url(url, F.lit("HOST"))

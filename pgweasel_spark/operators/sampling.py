@@ -29,18 +29,6 @@ def _hash60(key_col: str, seed: str) -> Column:
     )
 
 
-def with_hash_fraction(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    seed: str = "split",
-    out_col: str = "u",
-) -> DataFrame:
-    """Attach the deterministic uniform fraction column (see module
-    docstring). Rounded to 9 digits for cross-engine hash equality."""
-    u = _hash60(key_col, seed) / F.lit(_HASH60_DEN)
-    return df.withColumn(out_col, F.round(u, 9))
-
-
 def hash_split(
     df: DataFrame,
     key_col: str = "doc_id",

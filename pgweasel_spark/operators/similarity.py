@@ -100,8 +100,9 @@ def lsh_ann_topk(
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: restrict the brute-force scan to the query's
-    LSH bucket. At 10^12 rows the bucketed table is the precomputed index
-    (partitioned by bucket → partition-pruned scan per query).
+    LSH bucket. Bucketing runs per call; at 10^12 rows the bucketed table
+    would be written once, partitioned by bucket, so that each query is a
+    partition-pruned scan.
 
     Pass ``dim`` explicitly on hot paths — the ``None`` fallback probes
     the corpus with an extra driver job (convenience only)."""
@@ -193,69 +194,6 @@ def ivf_train_centroids(
     return [list(map(float, c)) for c in model.clusterCenters()]
 
 
-def ivf_build_index(
-    df: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: the corpus with its list assignment,
-    written partitioned by ``list_id``. At 10^12 rows this is the
-    one-time build; every query then scans only its probed lists via
-    partition pruning (asserted in tests), not the corpus."""
-    assigned = ivf_assign(df, centroids, vec_col)
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(path)
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a persisted IVF index: rank centroids driver-side (tiny),
-    read ONLY the n_probe nearest lists (list_id partition pruning at
-    the scan), brute-force within them."""
-    dists = sorted(
-        range(len(centroids)),
-        key=lambda i: sum(
-            (a - b) ** 2 for a, b in zip(centroids[i], query_vec)
-        ),
-    )
-    probe = dists[:n_probe]
-    qcol = F.array(*[F.lit(float(v)) for v in query_vec])
-    cands = spark.read.parquet(path).where(F.col("list_id").isin(probe))
-    return (
-        cands.select(
-            id_col,
-            F.round(cosine(F.col(vec_col), qcol), 6).alias("cosine_sim"),
-            "list_id",
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def lsh_build_index(
-    df: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the LSH index: corpus + sign-pattern bucket, written
-    partitioned by ``bucket`` — the persisted form of lsh_ann_topk's
-    bucketing, giving partition-pruned single-bucket scans per query."""
-    bucketed = df.withColumn(
-        "bucket", lsh_bucket(vec_col, n_planes=n_planes, dim=dim)
-    )
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
 def ivf_ann_topk(
     df: DataFrame,
     query_vec_id: int,
@@ -269,9 +207,9 @@ def ivf_ann_topk(
 ) -> DataFrame:
     """IVF approximate top-k (the k-means sibling of lsh_ann_topk): brute
     force only inside the ``n_probe`` inverted lists whose centroids are
-    nearest the query. At scale the assigned table is the precomputed
-    index, partitioned by ``list_id`` → the probe is a partition-pruned
-    scan of n_probe/n_lists of the corpus. Precomputed ``centroids`` are
+    nearest the query. Assignment runs per call; at scale the assigned
+    table would be written once, partitioned by ``list_id``, so that the
+    probe scans n_probe/n_lists of the corpus. Precomputed ``centroids`` are
     the primary path; inline training honors ``train_sample_mod`` so the
     k-means iterations run on a hash sample, never the full corpus."""
     if centroids is None:

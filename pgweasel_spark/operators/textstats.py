@@ -1,6 +1,7 @@
-"""Text analysis operators for training-data pipelines: language-ID,
-quality scoring, token counting, fingerprinting. All JVM higher-order
-functions — no Python in the hot path."""
+"""Text analysis operators for training-data pipelines: repetition and
+Gopher quality gates, PII scrubbing, vocabulary and TF-IDF top terms,
+document chunking, unigram-NLL scoring and per-source quantile gates.
+All JVM higher-order functions — no Python in the hot path."""
 
 from __future__ import annotations
 
@@ -9,81 +10,16 @@ from pyspark.sql import functions as F
 
 STOPWORDS = {
     "en": ["the", "of", "and", "to", "in", "is", "a"],
-    "de": ["der", "die", "das", "und", "nicht"],
-    "es": ["el", "la", "los", "y", "que"],
-    "fr": ["le", "les", "et", "que", "ne"],
 }
-
-#: BPE-ish token proxy: word pieces + digits + punctuation runs
-TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def words(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(words(text)).cast("long")
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count via the regex proxy (closer to BPE token
-    budgets than whitespace words)."""
-    return F.size(F.regexp_extract_all(text, F.lit(TOKEN_RE), 0)).cast("long")
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     ws = STOPWORDS[lang]
     return F.size(F.filter(words(text), lambda w: w.isin(*ws)))
-
-
-def lang_id(text: Column) -> Column:
-    """Stopword-hit argmax heuristic across the configured languages."""
-    hits = {lang: stopword_hits(text, lang) for lang in STOPWORDS}
-    langs = list(STOPWORDS)
-    expr = F.lit("unknown")
-    # wrap back-to-front so the first language in priority order is the
-    # outermost when() and wins ties against every later language
-    for idx in range(len(langs) - 1, -1, -1):
-        lang = langs[idx]
-        cond = hits[lang] > 0
-        for other in langs[idx + 1 :]:
-            cond = cond & (hits[lang] >= hits[other])
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword features + a keep flag — the usual
-    C4-style quality gate shape."""
-    t = F.col(text_col)
-    w = words(t)
-    n_tokens = F.size(w)
-    n_chars = F.length(t)
-    punct = F.size(F.regexp_extract_all(t, F.lit(r"[.,;:!?]"), 0))
-    stop_ratio = stopword_hits(t, "en") / n_tokens
-    avg_word = n_chars / n_tokens
-    return df.select(
-        "*",
-        n_tokens.cast("long").alias("q_n_tokens"),
-        F.round(avg_word, 3).alias("q_avg_word_len"),
-        F.round(punct / F.greatest(n_tokens, F.lit(1)), 4).alias(
-            "q_punct_ratio"
-        ),
-        F.round(stop_ratio, 4).alias("q_stopword_ratio"),
-        (
-            (n_tokens >= 20)
-            & (avg_word >= 2.0)
-            & (avg_word <= 12.0)
-        ).alias("q_keep"),
-    )
-
-
-def fingerprint(text: Column, n_prefix_tokens: int = 10) -> Column:
-    """Prefix-token fingerprint (cheap rolling-hash stand-in; md5 of the
-    normalized first-N-token window)."""
-    return F.md5(F.concat_ws(" ", F.slice(words(text), 1, n_prefix_tokens)))
 
 
 def repetition_stats(

@@ -22,10 +22,8 @@ Scale notes (the 1000-executor / 100 TB story):
   manifest records completion + per-sink counts (plans/manifest.py), only
   after the batch's stats tables are written.
 
-Iceberg: this sandbox has no Iceberg catalog jars, so sinks are parquet
-directory tables with the identical partition spec (sink/warc_day/
-host_bucket ≈ Iceberg identity/days/bucket transforms). ``table_format``
-switches to ``writeTo(...).partitionedBy(...)`` on a real cluster.
+Sinks are parquet directory tables partitioned by sink/warc_day/
+host_bucket, the spec Iceberg's identity/days/bucket transforms give.
 """
 
 from __future__ import annotations
@@ -77,11 +75,6 @@ class PipelineResult:
     total_events: int
     sink_counts: dict[str, int]
     elapsed_s: float
-
-
-def parsed_events(spark: SparkSession, input_path: str) -> DataFrame:
-    pages = spark.read.parquet(input_path)
-    return enrich(parse_events(pages))
 
 
 def _routed(events: DataFrame, slow_threshold_ms: float) -> DataFrame:

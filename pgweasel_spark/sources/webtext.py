@@ -2,7 +2,8 @@
 
 The reference's source surface maps almost entirely to Spark built-ins:
 
-- S1 mmap file scan       → columnar parquet/Iceberg scan (read_webtext)
+- S1 mmap file scan       → columnar parquet scan (spark.read.parquet in
+                            pipeline.run and the CLI)
 - S2 directory expansion  → path globs / recursive listing (native)
 - S3 gzip source          → Spark text/csv readers decode .gz by codec
                             automatically (read_raw_logs on *.log.gz works
@@ -28,21 +29,6 @@ from pyspark.sql import functions as F
 #: per-member decompressed-size cap for zip sources — a log file member
 #: larger than this is almost certainly a decompression bomb
 _MAX_ZIP_MEMBER_BYTES = 256 * 1024 * 1024
-
-WEBTEXT_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-
-
-def read_webtext(
-    spark: SparkSession, path_or_table: str, table_format: str = "parquet"
-) -> DataFrame:
-    """S1: the primary scan. ``table_format='iceberg'`` reads a catalog
-    table on a cluster with the Iceberg runtime (identical downstream
-    plan); this sandbox uses parquet directory tables."""
-    if table_format == "iceberg":
-        df = spark.read.format("iceberg").load(path_or_table)
-    else:
-        df = spark.read.parquet(path_or_table)
-    return df
 
 
 def read_raw_logs(spark: SparkSession, path: str) -> DataFrame:

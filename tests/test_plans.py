@@ -276,47 +276,6 @@ def test_lock_system_filters_stay_in_codegen(spark, webtext_dir):
     assert m and "*(" in m.group(1), m.group(0) if m else plan
 
 
-def test_ivf_index_probe_is_partition_pruned(spark, tmp_path):
-    """The persisted IVF index must serve probes via list_id partition
-    pruning — the scan reads n_probe lists, never the corpus."""
-    import random
-
-    from pgweasel_spark.operators import similarity as S
-
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(300)]
-    rows.append((300, [v + 0.01 for v in rows[7][1]]))
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = S.ivf_train_centroids(e, n_lists=4)
-    path = str(tmp_path / "ivf_idx")
-    S.ivf_build_index(e, cents, path)
-    out = S.ivf_query_index(
-        spark, path, cents, query_vec=rows[7][1], k=5, n_probe=2
-    )
-    plan = _plan(out)
-    m = re.search(r"PartitionFilters: \[(.*?)\]", plan)
-    assert m and "list_id" in m.group(1), plan
-    got = out.collect()
-    assert got and got[0]["vec_id"] in (300, 7)
-    assert len({r["list_id"] for r in got}) <= 2
-
-
-def test_lsh_index_is_bucket_partitioned(spark, tmp_path):
-    import random
-
-    from pgweasel_spark.operators import similarity as S
-
-    rng = random.Random(5)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(100)]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "lsh_idx")
-    S.lsh_build_index(e, path, n_planes=4, dim=8)
-    df = spark.read.parquet(path).where(F.col("bucket") == 3)
-    plan = _plan(df)
-    m = re.search(r"PartitionFilters: \[(.*?)\]", plan)
-    assert m and "bucket" in m.group(1), plan
-
-
 def test_bucket_gemm_lsh_plan_single_pandas_group(spark):
     """The LSH near-dup default engine is bucket → grouped-pandas GEMM:
     a groupBy exchange plus ONE broadcast join of the tiny per-bucket

@@ -1,11 +1,10 @@
 """Training-data operator tests: dedup (exact/minhash/simhash), similarity
-(brute force + LSH), text stats, multimodal plumbing."""
+(brute force + LSH), text stats."""
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from pgweasel_spark.operators import dedup, multimodal, similarity, textstats
+from pgweasel_spark.operators import dedup, similarity, textstats
 
 
 @pytest.fixture(scope="module")
@@ -421,56 +420,6 @@ def test_embedding_near_dups_rejects_string_ids(spark):
     assert [(r["doc1"], r["doc2"]) for r in auto_lsh] == [("a", "b")]
 
 
-def test_textstats(docs):
-    out = textstats.quality_features(docs).collect()
-    r0 = [r for r in out if r["doc_id"] == 0][0]
-    assert r0["q_n_tokens"] == 12
-    assert r0["q_stopword_ratio"] > 0
-    langs = {
-        r["doc_id"]: r["lid"]
-        for r in docs.select(
-            "doc_id", textstats.lang_id(F.col("text")).alias("lid")
-        ).collect()
-    }
-    assert langs[0] == "en"
-    assert langs[4] == "de"
-    assert langs[5] == "es"
-    tokens = docs.select(
-        textstats.token_count(F.col("text")).alias("n"),
-        textstats.bpe_ish_token_count(F.col("text")).alias("nb"),
-    ).collect()
-    assert all(r["nb"] >= r["n"] for r in tokens)
-
-
-def test_multimodal_metadata_and_decode(spark):
-    rows = [
-        Row(media_id=0, payload=b"\xff\xd8\xff\xe0fakejpeg"),
-        Row(media_id=1, payload=b"\x89PNG\r\nfakepng"),
-        Row(media_id=2, payload=b"RIFFfakewav"),
-        Row(media_id=3, payload=b"plainbytes"),
-    ]
-    df = spark.createDataFrame(rows)
-    meta = {
-        r["media_id"]: r
-        for r in multimodal.media_metadata(df, "payload", "media_id").collect()
-    }
-    assert meta[0]["kind"] == "image"
-    assert meta[2]["kind"] == "audio"
-    assert meta[3]["kind"] == "unknown"
-    assert meta[0]["n_bytes"] == 12
-
-    feats = multimodal.decode_features(df, "payload", "media_id").collect()
-    assert len(feats) == 4
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in feats)
-    # deterministic fake decode
-    feats2 = multimodal.decode_features(df, "payload", "media_id").collect()
-    assert {r["media_id"]: r["feature"] for r in feats} == {
-        r["media_id"]: r["feature"] for r in feats2
-    }
-    with pytest.raises(NotImplementedError):
-        multimodal.real_decode(b"x")
-
-
 def test_ivf_ann_finds_planted_neighbor(spark):
     import random
 
@@ -488,30 +437,6 @@ def test_ivf_ann_finds_planted_neighbor(spark):
     assert ann and ann[0]["vec_id"] == 200
     # candidates really were restricted to the probed lists
     assert len({r["list_id"] for r in ann}) <= 2
-
-
-def test_multimodal_resize_and_frame_sample(spark):
-    rows = [
-        Row(media_id=0, payload=b"\xff\xd8\xff\xe0fakejpeg"),
-        Row(media_id=1, payload=b"\x00\x00\x00 ftypmp4fake"),
-    ]
-    df = spark.createDataFrame(rows)
-    rs = multimodal.resize_image(df, "payload", "media_id", 32, 32).collect()
-    assert {r["media_id"] for r in rs} == {0, 1}
-    assert all(len(r["resized"]) == 32 * 32 and r["width"] == 32 for r in rs)
-    rs2 = multimodal.resize_image(df, "payload", "media_id", 32, 32).collect()
-    assert {r["media_id"]: r["resized"] for r in rs} == {
-        r["media_id"]: r["resized"] for r in rs2
-    }  # deterministic
-    fr = multimodal.sample_frames(
-        df, "payload", "media_id", n_frames=3, frame_interval_ms=500
-    ).collect()
-    assert len(fr) == 6  # 2 videos x 3 frames (1→N cardinality)
-    by_key = {(r["media_id"], r["frame_no"]): r for r in fr}
-    assert by_key[(0, 2)]["ts_ms"] == 1000
-    assert by_key[(0, 0)]["frame"] != by_key[(0, 1)]["frame"]
-    with pytest.raises(NotImplementedError):
-        multimodal.resize_image(df, "payload", "media_id", decoder="real")
 
 
 def test_chunk_dup_stats(spark):
@@ -786,14 +711,16 @@ def test_gopher_gate_line_level_signals(spark):
 
 
 def test_simhash_build_index_roundtrip(spark, tmp_path):
-    """The persisted signature table must feed simhash_near_dups via
+    """A persisted signature table must feed simhash_near_dups via
     sig_col and reproduce the direct-computation pair set."""
     rows = [(i, f"w{i} x y z a b c") for i in range(20)] + [
         (100, "w0 x y z a b c")
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     path = str(tmp_path / "simhash_idx")
-    dedup.simhash_build_index(df, path)
+    df.select("doc_id", dedup.simhash60("text").alias("sh")).write.parquet(
+        path
+    )
     idx = spark.read.parquet(path)
     got = sorted(
         map(
@@ -940,155 +867,6 @@ def test_near_dup_groups_random_graphs_match_union_find(spark):
                 for r in dedup.near_dup_groups(df).collect()
             }
             assert got == expected, f"seed={seed} n_parts={n_parts}"
-
-
-def _ppm(w, h, pixels, comment=False):
-    """Binary P6 payload; pixels = [(r,g,b)] row-major."""
-    hdr = b"P6\n"
-    if comment:
-        hdr += b"# a comment\n"
-    hdr += f"{w} {h}\n255\n".encode()
-    return hdr + b"".join(bytes(p) for p in pixels)
-
-
-def test_pnm_decode_real_pixels(spark):
-    """'pnm' is a REAL decode path: features/resize computed from actual
-    raster pixels (not digests), including header comments and PGM."""
-    import numpy as np
-
-    # 2x2 RGB: R G / B W
-    payload = _ppm(
-        2, 2, [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)],
-        comment=True,
-    )
-    img = multimodal.parse_pnm(payload)
-    assert img.shape == (2, 2, 3)
-    assert tuple(img[0, 0]) == (255, 0, 0)
-    feats = multimodal.pnm_decode(payload)
-    assert len(feats) == multimodal.FEATURE_DIM
-    gray = img.mean(axis=2)
-    assert feats[3] == pytest.approx(float(gray.mean()) / 255.0)
-    # PGM (grayscale)
-    pgm = b"P5\n2 1\n255\n" + bytes([10, 200])
-    assert multimodal.parse_pnm(pgm).shape == (1, 2, 1)
-    # nearest-neighbor resize 2x2 -> 4x4 replicates each pixel 2x2
-    up = np.frombuffer(
-        multimodal.pnm_resize(payload, 4, 4), dtype=np.uint8
-    ).reshape(4, 4, 3)
-    assert tuple(up[0, 0]) == (255, 0, 0) and tuple(up[1, 1]) == (255, 0, 0)
-    assert tuple(up[3, 3]) == (255, 255, 255)
-    # truncated raster fails loudly
-    with pytest.raises(ValueError):
-        multimodal.parse_pnm(b"P6\n4 4\n255\n\x00")
-    # zero/negative dimensions fail with the header ValueError, not an
-    # opaque numpy IndexError downstream in pnm_resize/pnm_decode
-    for bad in (b"P6\n0 4\n255\n", b"P6\n4 0\n255\n", b"P5\n2 1\n0\n"):
-        with pytest.raises(ValueError, match="bad PNM dimensions"):
-            multimodal.parse_pnm(bad)
-
-
-def test_pnm_decode_through_spark_operators(spark):
-    """The Spark operators run the real kernel end-to-end: metadata
-    sniffs P6 as image; decode_features/resize emit pixel-derived rows."""
-    import numpy as np
-
-    rows = [
-        (1, _ppm(3, 2, [(i, i, i) for i in (0, 50, 100, 150, 200, 250)])),
-        (2, _ppm(1, 1, [(9, 9, 9)])),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    meta = {
-        r["media_id"]: r
-        for r in multimodal.media_metadata(df, "payload", "media_id").collect()
-    }
-    assert meta[1]["kind"] == "image"
-    feats = {
-        r["media_id"]: r["feature"]
-        for r in multimodal.decode_features(
-            df, "payload", "media_id", decoder="pnm"
-        ).collect()
-    }
-    assert feats[2][3] == pytest.approx(9 / 255.0)
-    rs = {
-        r["media_id"]: r
-        for r in multimodal.resize_image(
-            df, "payload", "media_id", width=2, height=2, decoder="pnm"
-        ).collect()
-    }
-    arr = np.frombuffer(rs[1]["resized"], dtype=np.uint8).reshape(2, 2, 3)
-    assert tuple(arr[0, 0]) == (0, 0, 0)
-
-
-def _wav(freq_hz, seconds, rate=8000, channels=1, amp=0.5):
-    """Synthesize a 16-bit PCM WAV sine via stdlib wave."""
-    import io
-    import math
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(channels)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        n = int(rate * seconds)
-        frames = b"".join(
-            struct.pack(
-                "<" + "h" * channels,
-                *(
-                    [int(amp * 32767 * math.sin(2 * math.pi * freq_hz * i / rate))]
-                    * channels
-                ),
-            )
-            for i in range(n)
-        )
-        wf.writeframes(frames)
-    return buf.getvalue()
-
-
-def test_wav_decode_real_samples(spark):
-    """'wav' is a REAL audio decode path: duration / rate / channels /
-    RMS / zero-crossing rate computed from actual PCM samples (stdlib
-    wave — no codec libs). A 440 Hz sine at amp 0.5 has RMS ~0.354 and
-    ~2·440 zero crossings per second."""
-    import pytest as _pytest
-
-    payload = _wav(440, 1.0)
-    feats = multimodal.wav_decode(payload)
-    assert feats[0] == _pytest.approx(1.0 / 3600.0, rel=1e-3)  # duration
-    assert feats[1] == _pytest.approx(8000 / 96000.0)          # rate
-    assert feats[2] == 0.5                                     # 1 channel
-    assert feats[3] == _pytest.approx(0.5 / 2**0.5, rel=1e-2)  # RMS
-    assert feats[4] == _pytest.approx(0.5, rel=1e-2)           # peak
-    # zcr ≈ 2 crossings per cycle · 440 cycles / 8000 samples
-    assert feats[5] == _pytest.approx(880 / 8000, rel=0.05)
-    # stereo doubles the channel feature, same mono-downmix RMS
-    stereo = multimodal.wav_decode(_wav(440, 0.5, channels=2))
-    assert stereo[2] == 1.0
-    assert stereo[3] == _pytest.approx(0.5 / 2**0.5, rel=1e-2)
-    # malformed payloads fail loudly (quarantine upstream)
-    with _pytest.raises(Exception):
-        multimodal.parse_wav(b"RIFFgarbage")
-
-    # end-to-end through the Spark operator: RIFF sniffed as audio,
-    # features computed per row in Arrow batches
-    df = spark.createDataFrame(
-        [(1, payload), (2, _wav(880, 0.25))],
-        "media_id long, payload binary",
-    )
-    meta = {
-        r["media_id"]: r["kind"]
-        for r in multimodal.media_metadata(df, "payload", "media_id").collect()
-    }
-    assert meta == {1: "audio", 2: "audio"}
-    out = {
-        r["media_id"]: r["feature"]
-        for r in multimodal.decode_features(
-            df, "payload", "media_id", decoder="wav"
-        ).collect()
-    }
-    assert out[2][0] == _pytest.approx(0.25 / 3600.0, rel=1e-2)
-    assert out[1][3] == _pytest.approx(0.5 / 2**0.5, rel=1e-2)
 
 
 def test_semantic_decontaminate(spark):

@@ -1,7 +1,7 @@
-"""Interleaved best-of-N re-measure for an arbitrary query family —
-the generalization of bench_grok_family.py (VERDICT r3 task #6: a4c/t2/t3
-showed +23-35% in the driver window but -18-29% on the pinned local
-snapshot; decide noise vs real with one protocol run).
+"""Interleaved best-of-N re-measure for an arbitrary query family
+(VERDICT r3 task #6: a4c/t2/t3 showed +23-35% in the driver window but
+-18-29% on the pinned local snapshot; decide noise vs real with one
+protocol run).
 
 One Spark session, N rounds, queries interleaved within each round (a
 steal-time burst hits all queries equally, not one), first round dropped
