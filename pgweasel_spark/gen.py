@@ -1,8 +1,10 @@
 """Deterministic synthetic webtext generator.
 
 Produces the pipeline's input table ``(url, warc_ts, html, text, lang)``
-(BASELINE.json ``input_hint``) as parquet, at any scale, fully seeded — no
-external data. Two page populations:
+(BASELINE.json ``input_hint``) as parquet, at any scale, fully seeded.
+Only the fixture pages read data from outside this repo; they are on by
+default, and ``include_fixtures=False`` (``--no-fixtures`` on the command
+line) leaves them out, giving a self-contained table. Two page populations:
 
 1. **Fixture pages** — the reference's own test corpus
    (/root/reference/tests/files/*, read at generation time, never copied

@@ -21,8 +21,17 @@ def spark():
 
 @pytest.fixture(scope="session")
 def webtext_dir(tmp_path_factory):
-    """Small deterministic webtext table (fixtures + 120 synthetic pages)."""
-    from pgweasel_spark.gen import write_webtext
+    """Small deterministic webtext table (fixtures + 120 synthetic pages).
+
+    The fixture pages are the reference's own test logs, read from
+    ``gen.FIXTURE_DIR`` at generation time; the tests that use this
+    table assert the reference's golden counts on them. Skips unless
+    every ``gen.FIXTURE_FILES`` entry is a file under ``gen.FIXTURE_DIR``.
+    Tests that need only some data use ``generated_pages_dir``."""
+    from pgweasel_spark.gen import FIXTURE_DIR, FIXTURE_FILES, write_webtext
+
+    if not all(os.path.isfile(os.path.join(FIXTURE_DIR, n)) for n in FIXTURE_FILES):
+        pytest.skip(f"reference fixture logs not under {FIXTURE_DIR}")
 
     out = str(tmp_path_factory.mktemp("webtext"))
     write_webtext(out, n_pages=120, seed=42)

@@ -89,17 +89,17 @@ def test_cli_slow_top(spark, webtext_dir):
     assert "--- 25.761ms ---" in out
 
 
-def test_cli_peaks_reports_buckets(spark, webtext_dir):
+def test_cli_peaks_reports_buckets(spark, generated_pages_dir):
     # both reference stubs (src/main.rs:147-149) are now real reports:
     # `stats` prints the six aggregate tables, `peaks` prints the
     # error-rate peak buckets (mean + 2*stddev gate, z-scores)
-    out = _run_cli(["peaks", "--input", webtext_dir])
+    out = _run_cli(["peaks", "--input", generated_pages_dir])
     assert "Error-rate peak buckets" in out
     assert "Not implemented" not in out
 
 
-def test_cli_stats_reports_all_sections(spark, webtext_dir):
-    out = _run_cli(["stats", "--input", webtext_dir])
+def test_cli_stats_reports_all_sections(spark, generated_pages_dir):
+    out = _run_cli(["stats", "--input", generated_pages_dir])
     assert "== errors top ==" in out
     assert "== errors histogram ==" in out
     assert "== slow top ==" in out
@@ -107,13 +107,13 @@ def test_cli_stats_reports_all_sections(spark, webtext_dir):
     assert "Connections by time bucket:" in out
 
 
-def test_streaming_available_now(spark, webtext_dir, tmp_path):
+def test_streaming_available_now(spark, generated_pages_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from pgweasel_spark.streaming import stream
 
     out = str(tmp_path / "stream_out")
-    stream.run_available_now(spark, webtext_dir, out)
+    stream.run_available_now(spark, generated_pages_dir, out)
     routed = spark.read.parquet(os.path.join(out, "routed_stream"))
     n1 = routed.count()
     assert n1 > 0
@@ -121,7 +121,7 @@ def test_streaming_available_now(spark, webtext_dir, tmp_path):
     assert {"errors", "slow", "locks", "system", "stats"} <= sinks
 
     # second availableNow run: no new files → no new rows (exactly-once)
-    stream.run_available_now(spark, webtext_dir, out)
+    stream.run_available_now(spark, generated_pages_dir, out)
     assert spark.read.parquet(os.path.join(out, "routed_stream")).count() == n1
 
     # batch and stream route identically
@@ -129,12 +129,12 @@ def test_streaming_available_now(spark, webtext_dir, tmp_path):
     from pgweasel_spark.operators.parse import parse_events
 
     batch = R.explode_sinks(
-        R.sink_flags(parse_events(spark.read.parquet(webtext_dir)))
+        R.sink_flags(parse_events(spark.read.parquet(generated_pages_dir)))
     )
     assert batch.count() == n1
 
 
-def test_streaming_batch_metrics_lineage(spark, webtext_dir, tmp_path):
+def test_streaming_batch_metrics_lineage(spark, generated_pages_dir, tmp_path):
     """with_metrics=True writes one JSONL lineage row per micro-batch
     (batch id, input rows, per-sink observed counts collected during
     the write) whose sink totals equal the written routed table — the
@@ -147,7 +147,7 @@ def test_streaming_batch_metrics_lineage(spark, webtext_dir, tmp_path):
     from pgweasel_spark.streaming import stream
 
     out = str(tmp_path / "stream_metrics_out")
-    stream.run_available_now(spark, webtext_dir, out, with_metrics=True)
+    stream.run_available_now(spark, generated_pages_dir, out, with_metrics=True)
 
     mpath = os.path.join(out, "stream_metrics.jsonl")
     rows = []
@@ -304,11 +304,11 @@ def test_streaming_jsonlog_matches_batch_pipeline(spark, tmp_path):
     assert {"errors", "slow", "stats"} <= set(counts(routed))
 
 
-def test_error_rate_stream_plan(spark, webtext_dir, tmp_path):
+def test_error_rate_stream_plan(spark, generated_pages_dir, tmp_path):
     """Windowed error-rate agg with watermark runs in availableNow mode."""
     from pgweasel_spark.streaming import stream
 
-    pages = stream.read_webtext_stream(spark, webtext_dir)
+    pages = stream.read_webtext_stream(spark, generated_pages_dir)
     rates = stream.error_rate_stream(pages)
     q = (
         rates.writeStream.format("memory")
@@ -425,7 +425,7 @@ def test_zip_source_feeds_pipeline(spark, tmp_path):
     assert two[0]["host"] == "127.0.0.1"
 
 
-def test_error_rate_stream_matches_batch(spark, webtext_dir):
+def test_error_rate_stream_matches_batch(spark, generated_pages_dir):
     """The windowed streaming error-rate aggregation must equal the
     identical batch computation over the same input (complete mode, so
     the watermark cannot drop finalized windows on bounded data)."""
@@ -434,7 +434,7 @@ def test_error_rate_stream_matches_batch(spark, webtext_dir):
     from pgweasel_spark.operators.parse import parse_events
     from pgweasel_spark.streaming import stream
 
-    pages = stream.read_webtext_stream(spark, webtext_dir)
+    pages = stream.read_webtext_stream(spark, generated_pages_dir)
     rates = stream.error_rate_stream(pages)
     q = (
         rates.writeStream.format("memory")
@@ -448,7 +448,7 @@ def test_error_rate_stream_matches_batch(spark, webtext_dir):
         (str(r["start"]), str(r["end"]), r["severity"]): r["cnt"]
         for r in spark.sql("SELECT * FROM rates_mem").collect()
     }
-    ev = parse_events(spark.read.parquet(webtext_dir))
+    ev = parse_events(spark.read.parquet(generated_pages_dir))
     batch = (
         ev.where(F.col("event_ts").isNotNull())
         .groupBy(F.window("event_ts", "10 minutes").alias("w"), "severity")
@@ -478,7 +478,7 @@ def test_spark_submit_pyfiles_job(tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(cli.__file__)))
     zip_path = build(str(tmp_path / "pgweasel_spark.zip"))
     indir = str(tmp_path / "wt")
-    write_webtext(indir, n_pages=20, seed=3)
+    write_webtext(indir, n_pages=20, seed=3, include_fixtures=False)
     out = str(tmp_path / "out")
     spark_submit = os.path.join(
         os.environ.get("SPARK_HOME", "/opt/spark"), "bin", "spark-submit"

@@ -18,6 +18,14 @@ from pgweasel_spark.functions import extract as X
 from pgweasel_spark.gen import FIXTURE_DIR, FIXTURE_FILES
 
 
+HAVE_FIXTURES = all(
+    os.path.isfile(os.path.join(FIXTURE_DIR, n)) for n in FIXTURE_FILES
+)
+needs_fixtures = pytest.mark.skipif(
+    not HAVE_FIXTURES, reason=f"reference fixture logs not under {FIXTURE_DIR}"
+)
+
+
 def _all_fixture_records():
     rows = []
     for name in FIXTURE_FILES:
@@ -31,6 +39,8 @@ def _all_fixture_records():
 
 @pytest.fixture(scope="module")
 def extracted(spark):
+    if not HAVE_FIXTURES:
+        pytest.skip(f"reference fixture logs not under {FIXTURE_DIR}")
     rows = _all_fixture_records()
     df = spark.createDataFrame(rows, ["rid", "format", "raw"])
     raw = F.col("raw")
@@ -54,6 +64,7 @@ def extracted(spark):
     return {r["rid"]: r for r in out}
 
 
+@needs_fixtures
 def test_fixture_corpus_nonempty():
     rows = _all_fixture_records()
     assert len(rows) > 150  # 8 fixture files, ~250 lines
@@ -166,6 +177,7 @@ def test_synthetic_corpus_agreement(spark):
         assert row["event_ts"] == g.parse_timestamp(row["raw"]), row["rid"]
 
 
+@needs_fixtures
 def test_jvm_splitter_matches_pandas_splitter(spark):
     """split_pages_sql (pure JVM split+posexplode) must be byte-identical
     to split_pages (mapInPandas kernel) — on every reference fixture file

@@ -18,15 +18,15 @@ STATS_REPORTS = [
 ]
 
 
-def test_run_all_then_resume_noop(spark, webtext_dir, tmp_path):
+def test_run_all_then_resume_noop(spark, generated_pages_dir, tmp_path):
     out = str(tmp_path / "out")
-    res1 = pipeline.run(spark, webtext_dir, out, with_stats=True)
-    assert res1.days_processed  # 7 synthetic days + fixture day
+    res1 = pipeline.run(spark, generated_pages_dir, out, with_stats=True)
+    assert res1.days_processed  # the 7 synthetic days
     assert res1.sink_counts.get("errors", 0) > 0
     assert res1.sink_counts.get("stats", 0) > 0
 
     # resume on a complete manifest is a no-op
-    res2 = pipeline.run(spark, webtext_dir, out, with_stats=False)
+    res2 = pipeline.run(spark, generated_pages_dir, out, with_stats=False)
     assert res2.days_processed == []
     assert set(res2.days_skipped) == set(res1.days_processed)
 
@@ -48,18 +48,18 @@ def test_run_all_then_resume_noop(spark, webtext_dir, tmp_path):
         assert by_sink == entry["sink_counts"], day
 
 
-def test_incremental_day_batches_match_full_run(spark, webtext_dir, tmp_path):
+def test_incremental_day_batches_match_full_run(spark, generated_pages_dir, tmp_path):
     """Simulated kill/resume: processing one day per run converges to the
     same routed table as a single full run (idempotent dynamic
     partition overwrite + manifest skip)."""
     out_full = str(tmp_path / "full")
     out_inc = str(tmp_path / "inc")
-    pipeline.run(spark, webtext_dir, out_full, with_stats=False)
+    pipeline.run(spark, generated_pages_dir, out_full, with_stats=False)
 
     # process one day at a time until nothing is pending
     for _ in range(20):
         res = pipeline.run(
-            spark, webtext_dir, out_inc, day_batch=1, with_stats=False
+            spark, generated_pages_dir, out_inc, day_batch=1, with_stats=False
         )
         if not res.days_processed:
             break
@@ -76,7 +76,7 @@ def test_incremental_day_batches_match_full_run(spark, webtext_dir, tmp_path):
     some_day = sorted(m.completed_days())[0]
     del m.days[some_day]
     m.save()
-    res = pipeline.run(spark, webtext_dir, out_inc, with_stats=False)
+    res = pipeline.run(spark, generated_pages_dir, out_inc, with_stats=False)
     assert res.days_processed == [some_day]
     inc2 = spark.read.parquet(os.path.join(out_inc, "routed"))
     assert inc2.count() == full.count()  # no duplicates
@@ -204,9 +204,9 @@ def test_jsonlog_batch_pipeline_resume_matches_stderr_twin(
     assert res.days_processed == []
 
 
-def test_stats_tables_written(spark, webtext_dir, tmp_path):
+def test_stats_tables_written(spark, generated_pages_dir, tmp_path):
     out = str(tmp_path / "stats_out")
-    pipeline.run(spark, webtext_dir, out, with_stats=True)
+    pipeline.run(spark, generated_pages_dir, out, with_stats=True)
     for t in STATS_REPORTS:
         df = spark.read.parquet(os.path.join(out, "stats", t))
         assert df.count() > 0, t
@@ -218,9 +218,9 @@ def test_stats_tables_written(spark, webtext_dir, tmp_path):
     assert durs == sorted(durs, reverse=True)
 
 
-def test_read_sink(spark, webtext_dir, tmp_path):
+def test_read_sink(spark, generated_pages_dir, tmp_path):
     out = str(tmp_path / "rs")
-    pipeline.run(spark, webtext_dir, out, with_stats=False)
+    pipeline.run(spark, generated_pages_dir, out, with_stats=False)
     errors = pipeline.read_sink(spark, out, "errors")
     assert errors.count() > 0
     assert errors.where(F.col("severity_num") < 8).count() == 0

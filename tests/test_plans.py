@@ -24,20 +24,20 @@ def _plan(df) -> str:
     )
 
 
-def test_html_column_pruned(spark, webtext_dir):
+def test_html_column_pruned(spark, generated_pages_dir):
     """The split stage must never scan the html payload column."""
-    plan = _plan(split_pages(spark.read.parquet(webtext_dir)))
+    plan = _plan(split_pages(spark.read.parquet(generated_pages_dir)))
     m = re.search(r"ReadSchema: (.*)", plan)
     assert m, plan
     assert "html" not in m.group(1)
     assert "text" in m.group(1)
 
 
-def test_events_count_prunes_text(spark, webtext_dir):
+def test_events_count_prunes_text(spark, generated_pages_dir):
     """A downstream agg that only needs counts should still read text
     (needed by the splitter) but nothing else heavy; sanity: scan schema
     is the 4 slim columns."""
-    df = parse_events(spark.read.parquet(webtext_dir)).groupBy(
+    df = parse_events(spark.read.parquet(generated_pages_dir)).groupBy(
         "severity"
     ).count()
     m = re.search(r"ReadSchema: (.*)", _plan(df))
@@ -58,26 +58,26 @@ def test_enrich_uses_broadcast_joins(spark, generated_pages_dir):
     assert "SortMergeJoin" not in final, final
 
 
-def test_slow_top_is_take_ordered(spark, webtext_dir):
-    ev = parse_events(spark.read.parquet(webtext_dir))
+def test_slow_top_is_take_ordered(spark, generated_pages_dir):
+    ev = parse_events(spark.read.parquet(generated_pages_dir))
     plan = _plan(agg.slow_top(ev))
     assert "TakeOrderedAndProject" in plan
 
 
-def test_errors_top_has_partial_agg(spark, webtext_dir):
-    ev = parse_events(spark.read.parquet(webtext_dir))
+def test_errors_top_has_partial_agg(spark, generated_pages_dir):
+    ev = parse_events(spark.read.parquet(generated_pages_dir))
     plan = _plan(agg.errors_top(ev))
     # partial (map-side) + final HashAggregate around one exchange
     assert plan.count("HashAggregate") >= 2
     assert "Exchange" in plan
 
 
-def test_routed_sink_partition_pruning(spark, webtext_dir, tmp_path):
+def test_routed_sink_partition_pruning(spark, generated_pages_dir, tmp_path):
     """Filtering a routed sink by sink+day must prune partitions at scan."""
     from pgweasel_spark.plans import pipeline
 
     out = str(tmp_path / "out")
-    pipeline.run(spark, webtext_dir, out, with_stats=False)
+    pipeline.run(spark, generated_pages_dir, out, with_stats=False)
     df = spark.read.parquet(os.path.join(out, "routed")).where(
         (F.col("sink") == "errors") & (F.col("warc_day") == "2025-05-03")
     )
@@ -87,12 +87,12 @@ def test_routed_sink_partition_pruning(spark, webtext_dir, tmp_path):
     assert "sink" in m.group(1) and "warc_day" in m.group(1)
 
 
-def test_severity_filter_pushed_to_scan(spark, webtext_dir, tmp_path):
+def test_severity_filter_pushed_to_scan(spark, generated_pages_dir, tmp_path):
     """Column predicates on the routed table reach the parquet reader."""
     from pgweasel_spark.plans import pipeline
 
     out = str(tmp_path / "out2")
-    pipeline.run(spark, webtext_dir, out, with_stats=False)
+    pipeline.run(spark, generated_pages_dir, out, with_stats=False)
     df = spark.read.parquet(os.path.join(out, "routed")).where(
         F.col("severity_num") >= 8
     )
@@ -100,27 +100,29 @@ def test_severity_filter_pushed_to_scan(spark, webtext_dir, tmp_path):
     assert re.search(r"PushedFilters: \[.*GreaterThanOrEqual\(severity_num", plan), plan
 
 
-def test_default_spine_has_no_python_nodes(spark, webtext_dir):
+def test_default_spine_has_no_python_nodes(spark, generated_pages_dir):
     """With the JVM splitter as default, the whole parse→enrich→route plan
     must contain zero Python evaluation operators — everything stays in
     whole-stage codegen (the pandas splitter remains available via
     parse_events(..., splitter='pandas'))."""
     from pgweasel_spark.operators import route
 
-    ev = enrich(parse_events(spark.read.parquet(webtext_dir)))
+    ev = enrich(parse_events(spark.read.parquet(generated_pages_dir)))
     routed = route.explode_sinks(route.sink_flags(ev))
     plan = _plan(routed)
     for node in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
         assert node not in plan, node
     # and the pandas variant really does use Python (guards the knob)
-    plan_p = _plan(parse_events(spark.read.parquet(webtext_dir), splitter="pandas"))
+    plan_p = _plan(
+        parse_events(spark.read.parquet(generated_pages_dir), splitter="pandas")
+    )
     assert "MapInPandas" in plan_p
 
 
-def test_salted_count_matches_plain_and_is_two_phase(spark, webtext_dir):
+def test_salted_count_matches_plain_and_is_two_phase(spark, generated_pages_dir):
     """salted_count_by must equal a plain groupBy count on the skewed
     host dimension, via two exchanges (salted partial + final)."""
-    ev = parse_events(spark.read.parquet(webtext_dir)).select(
+    ev = parse_events(spark.read.parquet(generated_pages_dir)).select(
         "url", "record_no", F.parse_url("url", F.lit("HOST")).alias("value")
     )
     salted = agg.salted_count_by(ev, ["value"])
@@ -258,11 +260,11 @@ def test_blocked_gemm_plan_single_pandas_group(spark):
     assert "Join" not in plan
 
 
-def test_lock_system_filters_stay_in_codegen(spark, webtext_dir):
+def test_lock_system_filters_stay_in_codegen(spark, generated_pages_dir):
     """The single-regex lock/system predicates must not break the
     routing stage out of whole-stage codegen (the 17/24-contains chains
     did — measured 5x slower)."""
-    ev = enrich(parse_events(spark.read.parquet(webtext_dir)))
+    ev = enrich(parse_events(spark.read.parquet(generated_pages_dir)))
     routed = route.explode_sinks(route.sink_flags(ev))
     routed.collect()  # AQE only finalizes codegen markers after execution
     plan = routed._jdf.queryExecution().executedPlan().toString()
