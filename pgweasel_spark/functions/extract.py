@@ -60,11 +60,6 @@ def severity_num(sev: Column) -> Column:
 
 # --- message (src/format/plain.rs:1-23, src/format/csv.rs:1-53) ------------
 
-#: first ": ", skip following spaces, cut at first newline. Lazy ``.*?``
-#: finds the leftmost colon-space; ``(?s)`` lets it cross line boundaries
-#: exactly like the reference's whole-record byte scan.
-_MESSAGE_PLAIN_RE = r"(?s)^.*?: +([^\n]*)"
-
 #: csvlog field 14 (1-based): 13 fields (quoted with ""-escapes kept
 #: verbatim, or unquoted) then the captured 14th. Possessive quantifiers
 #: keep the Java engine linear on long quoted fields.
@@ -75,15 +70,19 @@ _CSV14_PROBE = f"^(?:{_CSV_FIELD},){{13}}+"
 
 
 def message_plain(raw: Column) -> Column:
-    # String-function restatement of _MESSAGE_PLAIN_RE (kept above as
-    # the specification; the fuzz suite pins both against the Python
-    # kernel): instr finds the same leftmost ': ' the lazy `.*?: ` scan
-    # finds; ltrim (Spark trims ' ' only — exactly the regex's `+` on
-    # literal spaces) absorbs the extra spaces; substring_index cuts at
-    # the first newline like `[^\n]*`. ~2x faster than the regex per
-    # record (r6 measured 1.76 s → 1.34 s for the message stage at
-    # bench_sf=1.0) because the lazy regex retries `: +` at every
-    # position with full engine overhead while instr is one indexOf.
+    # Specification: the regex (?s)^.*?: +([^\n]*) — first ": ", skip
+    # the following spaces, cut at the first newline; the lazy `.*?`
+    # finds the leftmost colon-space and (?s) lets it cross line
+    # boundaries exactly like the reference's whole-record byte scan.
+    # Restated with string functions (the fuzz suite pins this against
+    # the Python kernel): instr finds the same leftmost ': ' the lazy
+    # `.*?: ` scan finds; ltrim (Spark trims ' ' only — exactly the
+    # regex's `+` on literal spaces) absorbs the extra spaces;
+    # substring_index cuts at the first newline like `[^\n]*`. ~2x
+    # faster than the regex per record (r6 measured 1.76 s → 1.34 s for
+    # the message stage at bench_sf=1.0) because the lazy regex retries
+    # `: +` at every position with full engine overhead while instr is
+    # one indexOf.
     # Null semantics unchanged: no ': ' → null, empty-after-colon → ''.
     p = F.instr(raw, ": ")
     rest = F.substring(raw, p + F.lit(2), F.lit((1 << 31) - 1))

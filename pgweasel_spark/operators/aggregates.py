@@ -13,14 +13,25 @@ Divergences (documented in SURVEY.md §4):
   (src/aggregators/connections.rs:9-17).
 - output order is always deterministic (count desc, key asc); the
   reference's by-dim prints iterate a HashMap (nondeterministic).
+
+Ordering: the reports are tiny, so errors_hist, connections_buckets and
+connections_by_dim end as ONE partition sorted in place
+(``coalesce(1).sortWithinPartitions``). That is the row order a global
+``orderBy`` gives, without its range-sampling job and sort exchange, and
+each report is still written as one file. errors_top and slow_top keep
+their top-N plans.
+
+The Column expressions below depend only on grammar constants and the
+bucket width, so each is built once per session (``session.per_session``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pgweasel_spark import grammar
+from pgweasel_spark.session import per_session
 
 
 def errors_top(df: DataFrame, max_n: int = 20) -> DataFrame:
@@ -35,19 +46,33 @@ def errors_top(df: DataFrame, max_n: int = 20) -> DataFrame:
     )
 
 
+def _bucket_counts(df: DataFrame, bucket_s: int) -> DataFrame:
+    """Rows per epoch-floor bucket floor(epoch/width)*width, in one
+    partition ordered by bucket."""
+
+    def build() -> tuple[Column, Column]:
+        epoch = F.floor(F.unix_timestamp(F.col("event_ts")) / bucket_s) * bucket_s
+        return epoch.alias("bucket_epoch"), F.timestamp_seconds(
+            F.col("bucket_epoch")
+        )
+
+    epoch, ts = per_session(
+        df.sparkSession, ("aggregates.bucket", bucket_s), build
+    )
+    return (
+        df.groupBy(epoch)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("bucket_ts", ts)
+        .coalesce(1)
+        .sortWithinPartitions("bucket_epoch")
+    )
+
+
 def errors_hist(df: DataFrame, bucket_s: int = 3600) -> DataFrame:
     """`errors hist -b I` (src/aggregators/error_histogram.rs:21-56):
     count per epoch-aligned bucket floor(epoch/width)*width. Default 1h
     (src/main.rs:108)."""
-    bucket = (
-        F.floor(F.unix_timestamp(F.col("event_ts")) / bucket_s) * bucket_s
-    ).alias("bucket_epoch")
-    return (
-        df.groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("bucket_ts", F.timestamp_seconds(F.col("bucket_epoch")))
-        .orderBy("bucket_epoch")
-    )
+    return _bucket_counts(df, bucket_s)
 
 
 def slow_top(df: DataFrame, limit: int = 10) -> DataFrame:
@@ -66,7 +91,7 @@ def slow_top(df: DataFrame, limit: int = 10) -> DataFrame:
 # --- connections (src/aggregators/connections.rs:38-143) --------------------
 
 
-def _conn_flags(df: DataFrame) -> DataFrame:
+def _conn_flag_cols() -> dict[str, Column]:
     """Row classification exactly per ConnectionsAggregator.update():
     failure (FATAL + needle) short-circuits; everything else requires
     severity == Log; received/authorized classified by message prefix."""
@@ -82,24 +107,34 @@ def _conn_flags(df: DataFrame) -> DataFrame:
     authorized = (
         ~is_failure & is_log & msg.startswith(grammar.CONN_AUTHORIZED_PREFIX)
     )
-    return df.select(
-        "*",
-        is_failure.alias("c_failure"),
-        received.alias("c_received"),
-        authorized.alias("c_authorized"),
-        (authorized & msg.contains(grammar.CONN_SSL_NEEDLE)).alias("c_ssl"),
+    return {
+        "c_failure": is_failure,
+        "c_received": received,
+        "c_authorized": authorized,
+        "c_ssl": authorized & msg.contains(grammar.CONN_SSL_NEEDLE),
+    }
+
+
+def _conn_flags(df: DataFrame) -> DataFrame:
+    """``df`` plus the four connection flags, built once per session."""
+    return df.withColumns(
+        per_session(df.sparkSession, "aggregates.conn_flags", _conn_flag_cols)
     )
 
 
 def connections_totals(df: DataFrame) -> DataFrame:
     """Single-row totals: attempts / authenticated / ssl / failures."""
-    f = _conn_flags(df)
-    return f.agg(
-        F.sum(F.col("c_received").cast("long")).alias("connection_attempts"),
-        F.sum(F.col("c_authorized").cast("long")).alias("authenticated"),
-        F.sum(F.col("c_ssl").cast("long")).alias("authenticated_ssl"),
-        F.sum(F.col("c_failure").cast("long")).alias("failures"),
+    totals = per_session(
+        df.sparkSession,
+        "aggregates.conn_totals",
+        lambda: [
+            F.sum(F.col("c_received").cast("long")).alias("connection_attempts"),
+            F.sum(F.col("c_authorized").cast("long")).alias("authenticated"),
+            F.sum(F.col("c_ssl").cast("long")).alias("authenticated_ssl"),
+            F.sum(F.col("c_failure").cast("long")).alias("failures"),
+        ],
     )
+    return _conn_flags(df).agg(*totals)
 
 
 def connections_by_dim(df: DataFrame) -> DataFrame:
@@ -113,42 +148,38 @@ def connections_by_dim(df: DataFrame) -> DataFrame:
     reducer's share of a hot key to ~1/n_salts."""
     f = _conn_flags(df)
 
-    def _pair(dim_name: str, col: str):
-        return F.struct(
-            F.lit(dim_name).alias("dim"),
-            F.coalesce(F.col(col), F.lit("unknown")).alias("value"),
-        )
+    def build() -> Column:
+        def pair(dim_name: str, col: str) -> Column:
+            return F.struct(
+                F.lit(dim_name).alias("dim"),
+                F.coalesce(F.col(col), F.lit("unknown")).alias("value"),
+            )
 
-    pairs = F.array_compact(
-        F.array(
-            F.when(F.col("c_received"), _pair("host", "host")),
-            F.when(F.col("c_authorized"), _pair("user", "user")),
-            F.when(F.col("c_authorized"), _pair("database", "db")),
-            F.when(F.col("c_authorized"), _pair("appname", "appname")),
-        )
-    )
+        return F.explode(
+            F.array_compact(
+                F.array(
+                    F.when(F.col("c_received"), pair("host", "host")),
+                    F.when(F.col("c_authorized"), pair("user", "user")),
+                    F.when(F.col("c_authorized"), pair("database", "db")),
+                    F.when(F.col("c_authorized"), pair("appname", "appname")),
+                )
+            )
+        ).alias("dv")
+
+    pairs = per_session(df.sparkSession, "aggregates.by_dim_pairs", build)
     ids = [c for c in ("url", "record_no") if c in f.columns]
-    keyed = f.select(*ids, F.explode(pairs).alias("dv")).select(
-        *ids, "dv.dim", "dv.value"
-    )
-    return salted_count_by(keyed, ["dim", "value"]).orderBy(
-        "dim", F.desc("cnt"), "value"
+    keyed = f.select(*ids, pairs).select(*ids, "dv.dim", "dv.value")
+    return (
+        salted_count_by(keyed, ["dim", "value"])
+        .coalesce(1)
+        .sortWithinPartitions("dim", F.desc("cnt"), "value")
     )
 
 
 def connections_buckets(df: DataFrame, bucket_s: int = 600) -> DataFrame:
     """connection-received count per 10-min epoch-floor bucket
     (connections.rs:66-75, round_floor :222-227)."""
-    f = _conn_flags(df).where(F.col("c_received"))
-    bucket = (
-        F.floor(F.unix_timestamp(F.col("event_ts")) / bucket_s) * bucket_s
-    ).alias("bucket_epoch")
-    return (
-        f.groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("bucket_ts", F.timestamp_seconds(F.col("bucket_epoch")))
-        .orderBy("bucket_epoch")
-    )
+    return _bucket_counts(_conn_flags(df).where(F.col("c_received")), bucket_s)
 
 
 def salted_count_by(

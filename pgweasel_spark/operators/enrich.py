@@ -8,10 +8,11 @@ shuffle of the fact side, safe at 10^12 rows.
 
 Each dim is a ``LocalRelation`` (an inline ``VALUES`` table, see
 ``_local_dim``): its rows live in the plan, so broadcasting it is a
-``LocalTableScan`` on the driver with no RDD and no Python task.
-``createDataFrame(list, ddl)`` would instead re-pickle the rows through a
-``PythonRDD`` and run a ``Scan ExistingRDD`` job of Python tasks per dim
-on every call.
+``LocalTableScan`` with no Python task. (Spark still collects each one
+for its broadcast with one small JVM job of ``ParallelCollectionRDD``
+tasks per query.) ``createDataFrame(list, ddl)`` would instead re-pickle
+the rows through a ``PythonRDD`` and run a ``Scan ExistingRDD`` job of
+Python tasks per dim on every call.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 
 from pgweasel_spark import grammar
 from pgweasel_spark.gen import HOSTS
+from pgweasel_spark.session import per_session
 
 #: SQLSTATE class prefix → category (public PostgreSQL errcodes appendix)
 SQLSTATE_CLASSES = {
@@ -109,40 +111,51 @@ def dim_lang(spark: SparkSession) -> DataFrame:
     )
 
 
-def enrich(events: DataFrame) -> DataFrame:
-    """Left broadcast joins: severity→class, sqlstate→category, url-host
-    dim, lang dim. Adds ``url_host`` (partition/salting key) first."""
-    spark = events.sparkSession
-    out = events.withColumn("url_host", F.parse_url(F.col("url"), F.lit("HOST")))
-    out = out.join(
-        F.broadcast(
+def _broadcast_dims(spark: SparkSession) -> dict[str, DataFrame]:
+    """The four dims as ``enrich`` joins them: projected to their join
+    and output columns, with the broadcast hint."""
+    return {
+        "severity": F.broadcast(
             dim_severity(spark).select(
-                F.col("severity").alias("_sev"), F.col("class").alias("severity_class")
+                F.col("severity").alias("_sev"),
+                F.col("class").alias("severity_class"),
             )
         ),
-        on=[out["severity"] == F.col("_sev")],
-        how="left",
-    ).drop("_sev")
-    out = out.withColumn(
-        "sqlstate_class", F.substring(F.col("sqlstate"), 1, 2)
-    ).join(
-        F.broadcast(
+        "sqlstate": F.broadcast(
             dim_sqlstate(spark).select(
                 F.col("state_class").alias("sqlstate_class"),
                 F.col("category").alias("sqlstate_category"),
             )
         ),
-        on="sqlstate_class",
-        how="left",
-    ).drop("sqlstate_class")
+        "host": F.broadcast(
+            dim_host(spark).withColumnRenamed("is_skewed", "host_is_skewed")
+        ),
+        "lang": F.broadcast(dim_lang(spark)),
+    }
+
+
+def enrich(events: DataFrame) -> DataFrame:
+    """Left broadcast joins: severity→class, sqlstate→category, url-host
+    dim, lang dim. Adds ``url_host`` (partition/salting key) first. The
+    dims are built once per session; each join key has a name no other
+    input column has, so the conditions are plain column names."""
+    spark = events.sparkSession
+    dims = per_session(spark, "enrich.dims", lambda: _broadcast_dims(spark))
+    out = events.withColumns(
+        {
+            "url_host": F.parse_url(F.col("url"), F.lit("HOST")),
+            "sqlstate_class": F.substring(F.col("sqlstate"), 1, 2),
+        }
+    )
     out = out.join(
-        F.broadcast(dim_host(spark)),
-        on=[out["url_host"] == F.col("host_name")],
-        how="left",
-    ).drop("host_name").withColumnRenamed("is_skewed", "host_is_skewed")
+        dims["severity"], on=F.col("severity") == F.col("_sev"), how="left"
+    ).drop("_sev")
+    out = out.join(dims["sqlstate"], on="sqlstate_class", how="left").drop(
+        "sqlstate_class"
+    )
     out = out.join(
-        F.broadcast(dim_lang(spark)),
-        on=[out["lang"] == F.col("lang_code")],
-        how="left",
+        dims["host"], on=F.col("url_host") == F.col("host_name"), how="left"
+    ).drop("host_name")
+    return out.join(
+        dims["lang"], on=F.col("lang") == F.col("lang_code"), how="left"
     ).drop("lang_code")
-    return out

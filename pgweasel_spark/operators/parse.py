@@ -24,12 +24,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pgweasel_spark import grammar
 from pgweasel_spark.functions import extract as X
+from pgweasel_spark.session import per_session
 
 #: output schema of the split stage; ``raw`` preserves the record's exact
 #: bytes (incl. trailing newline) so downstream extraction is byte-identical
@@ -101,41 +102,59 @@ def split_pages_sql(pages: DataFrame) -> DataFrame:
     boundary, so the split stays inside whole-stage codegen and costs one
     regex pass + explode. Empty/null text yields no records ([]), like
     the kernel."""
-    slim = pages.select("url", "warc_ts", "lang", "text")
-    recs = F.split(F.col("text"), _RECORD_SPLIT_PAT, -1)
-    return slim.where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    ).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.posexplode(recs).alias("record_no", "raw"),
+    nonempty, records = per_session(
+        pages.sparkSession,
+        "parse.split_pages_sql",
+        lambda: (
+            F.col("text").isNotNull() & (F.length("text") > 0),
+            F.posexplode(F.split(F.col("text"), _RECORD_SPLIT_PAT, -1)).alias(
+                "record_no", "raw"
+            ),
+        ),
     )
+    slim = pages.select("url", "warc_ts", "lang", "text")
+    return slim.where(nonempty).select("url", "warc_ts", "lang", records)
+
+
+def _extracted_cols() -> list[dict[str, Column]]:
+    """The two projections ``with_extracted`` appends: ``format``, then
+    every column read from ``raw`` (several dispatch on ``format``).
+    ``severity_num`` repeats the ``severity`` expression instead of
+    reading the column, so the output keeps its column order; codegen's
+    subexpression elimination evaluates it once per record."""
+    raw, fmt = F.col("raw"), F.col("format")
+    sev = X.severity(raw, fmt)
+    return [
+        {
+            "format": F.when(
+                F.lower(F.col("url")).endswith(".csv"), "csv"
+            ).otherwise("plain")
+        },
+        {
+            "severity": sev,
+            "severity_num": X.severity_num(sev),
+            "event_ts": X.event_ts(raw),
+            "message": X.message(raw, fmt),
+            "sqlstate": X.sqlstate(raw, fmt),
+            "duration_ms": X.duration_ms(raw),
+            "host": X.host(raw),
+            "user": X.user(raw),
+            "db": X.db(raw),
+            "appname": X.appname(raw),
+        },
+    ]
 
 
 def with_extracted(events: DataFrame) -> DataFrame:
     """Append the implicit-schema columns (SURVEY.md §1.2) as JVM
-    expressions. ``format`` mirrors Format::from_file_extension
-    (src/format/mod.rs:12-21): a url path ending ``.csv`` (case-insensitive)
-    selects the csvlog grammar."""
-    raw = F.col("raw")
-    fmt = F.when(F.lower(F.col("url")).endswith(".csv"), "csv").otherwise(
-        "plain"
-    )
-    sev = X.severity(raw, F.col("format"))
-    return (
-        events.withColumn("format", fmt)
-        .withColumn("severity", sev)
-        .withColumn("severity_num", X.severity_num(F.col("severity")))
-        .withColumn("event_ts", X.event_ts(raw))
-        .withColumn("message", X.message(raw, F.col("format")))
-        .withColumn("sqlstate", X.sqlstate(raw, F.col("format")))
-        .withColumn("duration_ms", X.duration_ms(raw))
-        .withColumn("host", X.host(raw))
-        .withColumn("user", X.user(raw))
-        .withColumn("db", X.db(raw))
-        .withColumn("appname", X.appname(raw))
-    )
+    expressions, built once per session. ``format`` mirrors
+    Format::from_file_extension (src/format/mod.rs:12-21): a url path
+    ending ``.csv`` (case-insensitive) selects the csvlog grammar."""
+    for cols in per_session(
+        events.sparkSession, "parse.with_extracted", _extracted_cols
+    ):
+        events = events.withColumns(cols)
+    return events
 
 
 def parse_events(pages: DataFrame, splitter: str = "sql") -> DataFrame:

@@ -5,11 +5,16 @@ One logical plan per day batch:
   scan (column-pruned: url,warc_ts,lang,text)
     → JVM record split (codegen)        (no shuffle)
     → JVM extraction + enrichment       (no shuffle; broadcast joins of
-                                          local-relation dims: no RDD, no
-                                          Python task)
+                                          local-relation dims: no Python
+                                          task)
     → sink flags + explode              (no shuffle)
     → write routed table partitioned by (sink, warc_day, host_bucket)
   + aggregate stats tables              (one shuffle each, partial/final agg)
+
+The Column expressions of every stage and the broadcast dims depend only
+on grammar constants and ``slow_threshold_ms``, so each is built once per
+SparkSession (``session.per_session``); a call after the first builds
+only its DataFrames.
 
 Scale notes (the 1000-executor / 100 TB story):
 - the map side is exchange-free: split/extract/route all pipeline into the
@@ -19,8 +24,10 @@ Scale notes (the 1000-executor / 100 TB story):
 - sinks are partitioned by warc_day + url-host hash bucket; a skewed host
   cannot skew a *file* beyond its bucket, and AQE handles residual skew.
 - resume: each day batch is idempotent (dynamic partition overwrite); the
-  manifest records completion + per-sink counts (plans/manifest.py), only
-  after the batch's stats tables are written.
+  manifest records completion + per-partition and per-sink counts
+  (plans/manifest.py), only after the batch's stats tables are written.
+  The counts come from the written files' parquet footers
+  (``partition_counts``), not from reading the table back.
 
 Sinks are parquet directory tables partitioned by sink/warc_day/
 host_bucket, the spec Iceberg's identity/days/bucket transforms give.
@@ -28,11 +35,13 @@ host_bucket, the spec Iceberg's identity/days/bucket transforms give.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +95,33 @@ def _routed(events: DataFrame, slow_threshold_ms: float) -> DataFrame:
     # partition (no tiny-file spray), with skewed partitions (the stats
     # sink) split automatically
     return out.hint("rebalance", "sink", "warc_day", "host_bucket")
+
+
+def partition_counts(routed_path: str, day: str) -> dict[str, int]:
+    """Rows of one warc_day per ``"sink/host_bucket"`` partition, summed
+    from the parquet footers (``num_rows``) of the files under
+    ``sink=*/warc_day=<day>/host_bucket=*/``. Names starting with ``_``
+    or ``.`` (``_SUCCESS``, ``.crc`` checksums) are skipped, as Spark's
+    reader skips them; a partition with no rows gets no key. Reads a
+    local ``routed_path``, like the manifest beside it."""
+    counts: dict[str, int] = {}
+    for part in glob.glob(
+        os.path.join(
+            glob.escape(routed_path), "sink=*", f"warc_day={day}", "host_bucket=*"
+        )
+    ):
+        sink, _, bucket = (
+            name.split("=", 1)[1]
+            for name in os.path.relpath(part, routed_path).split(os.sep)
+        )
+        rows = sum(
+            pq.read_metadata(f.path).num_rows
+            for f in os.scandir(part)
+            if f.is_file() and not f.name.startswith(("_", "."))
+        )
+        if rows:
+            counts[f"{sink}/{bucket}"] = rows
+    return counts
 
 
 def write_stats(routed: DataFrame, out_root: str) -> None:
@@ -225,30 +261,21 @@ def run(
         in_rows = {
             d: obs.get[f"d{i}"] for i, d in enumerate(pending)
         }
-        # per-PARTITION per-day routed counts from the *written* table
-        # (cheap: routed output is a small fraction of input, and the
-        # result is bounded by days × sinks × n_buckets): the manifest
-        # records lineage at the granularity the table is physically
-        # partitioned (north rule), with per-sink totals derived
-        written = spark.read.parquet(routed_path)
-        day_str = F.date_format(F.col("warc_day"), "yyyy-MM-dd")
-        counts = (
-            written.where(day_str.isin(pending))
-            .groupBy(day_str.alias("d"), "sink", "host_bucket")
-            .count()
-            .collect()
-        )
+        # per-PARTITION per-day routed counts from the footers of the
+        # files just written (no Spark job): the manifest records lineage
+        # at the granularity the table is physically partitioned (north
+        # rule), with per-sink totals derived
+        per_part = {d: partition_counts(routed_path, d) for d in pending}
         per_day: dict[str, dict[str, int]] = {d: {} for d in pending}
-        per_part: dict[str, dict[str, int]] = {d: {} for d in pending}
-        for r in counts:
-            sinks = per_day[r["d"]]
-            sinks[r["sink"]] = sinks.get(r["sink"], 0) + r["count"]
-            per_part[r["d"]][f"{r['sink']}/{r['host_bucket']}"] = r["count"]
+        for d, parts in per_part.items():
+            for key, n in parts.items():
+                sink = key.rsplit("/", 1)[0]
+                per_day[d][sink] = per_day[d].get(sink, 0) + n
         # the stats tables come before the manifest commit: a failure in
         # write_stats leaves the batch pending, so the next call re-routes
         # it and rewrites the reports instead of keeping stale ones
         if with_stats:
-            write_stats(written, out_root)
+            write_stats(spark.read.parquet(routed_path), out_root)
         elapsed = time.time() - t0
         for d in pending:
             manifest.mark_complete(

@@ -10,10 +10,34 @@ resume).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+T = TypeVar("T")
+
+#: the SparkSession attribute that holds ``per_session``'s memo
+MEMO_ATTR = "_pgweasel_memo"
+
+
+def per_session(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``, run once per SparkSession and ``key``; later calls
+    with the same session and key return the first result.
+
+    For plan pieces that depend only on constants and on the arguments
+    in ``key``: Column expressions (immutable unresolved expressions, so
+    plans may share them) and small DataFrames bound to ``spark``. The
+    memo is an attribute of the session object, so its entries live
+    exactly as long as that session, and a DataFrame built for one
+    session is never handed to another. Threads that miss at once may
+    each build, but all of them return the first value stored."""
+    memo = vars(spark).setdefault(MEMO_ATTR, {})
+    if key not in memo:
+        memo.setdefault(key, build())
+    return memo[key]
 
 
 def get_spark(

@@ -11,6 +11,7 @@ from pgweasel_spark.operators import enrich as E
 from pgweasel_spark.operators import route
 from pgweasel_spark.operators.parse import parse_events
 from pgweasel_spark.plans import pipeline
+from pgweasel_spark.session import MEMO_ATTR
 
 #: (dim, DDL of the former ``createDataFrame`` schema, Python source rows)
 DIMS = [
@@ -64,6 +65,9 @@ def test_routed_rows_equal_create_dataframe_dims(
         return sorted((tuple(r) for r in rows), key=repr)
 
     got = routed_rows()
+    # enrich builds its dims once per session: an empty memo for the rest
+    # of the test makes it build them again from the patched functions
+    monkeypatch.setattr(spark, MEMO_ATTR, {})
     for dim, ddl, source in DIMS:
         monkeypatch.setattr(
             E,

@@ -2,6 +2,8 @@
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,3 +266,123 @@ def test_stats_failure_leaves_day_pending(
     two_days = pipeline.run(spark, generated_pages_dir, fresh, day_batch=2)
     assert res.days_processed == two_days.days_processed[1:]
     assert _stats_rows(spark, out) == _stats_rows(spark, fresh)
+
+
+def _max_job_id(spark):
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _jobs_run_by(spark, call):
+    """Spark jobs ``call()`` runs: the rise in the largest job id. The
+    status store keeps only ``spark.ui.retainedJobs`` jobs, so the
+    length of its id list is no count."""
+    before = _max_job_id(spark)
+    call()
+    return _max_job_id(spark) - before
+
+
+#: Spark jobs of one ``run(day_batch=1)`` call with stats, and of a call
+#: with nothing pending. A change that lowers a count lowers it here too.
+DAILY_CALL_JOBS = 22
+IDLE_CALL_JOBS = 3
+
+
+def test_daily_call_job_budget(spark, generated_pages_dir, tmp_path):
+    out = str(tmp_path / "out")
+    daily = _jobs_run_by(
+        spark, lambda: pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    )
+    assert daily == DAILY_CALL_JOBS
+    pipeline.run(spark, generated_pages_dir, out, with_stats=False)
+    idle = _jobs_run_by(
+        spark, lambda: pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    )
+    assert idle == IDLE_CALL_JOBS
+
+
+def _put_parquet(path, rows):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table({"x": pa.array(range(rows), pa.int64())}), path)
+
+
+def test_partition_counts_reads_footers(tmp_path):
+    """Footer counts skip hidden files, sum the files of a partition,
+    keep to the asked day and never emit a zero."""
+    day = tmp_path / "sink=errors" / "warc_day=2025-05-01"
+    _put_parquet(day / "host_bucket=3" / "part-0.parquet", 2)
+    _put_parquet(day / "host_bucket=3" / "part-1.parquet", 5)
+    (day / "host_bucket=3" / ".part-0.parquet.crc").write_bytes(b"not parquet")
+    (day / "host_bucket=3" / "_SUCCESS").write_bytes(b"")
+    _put_parquet(day / "host_bucket=4" / "part-0.parquet", 0)
+    _put_parquet(
+        tmp_path / "sink=stats" / "warc_day=2025-05-01" / "host_bucket=0" / "p.parquet", 1
+    )
+    _put_parquet(
+        tmp_path / "sink=stats" / "warc_day=2025-05-02" / "host_bucket=1" / "p.parquet", 4
+    )
+    assert pipeline.partition_counts(str(tmp_path), "2025-05-01") == {
+        "errors/3": 7,
+        "stats/0": 1,
+    }
+    assert pipeline.partition_counts(str(tmp_path), "2025-05-03") == {}
+
+
+def _table_counts(spark, out, day):
+    """Per-sink and per-"sink/host_bucket" rows of ``day`` in the written
+    routed table: the read-back the footer counts replace."""
+    rows = (
+        spark.read.parquet(os.path.join(out, "routed"))
+        .where(F.date_format("warc_day", "yyyy-MM-dd") == day)
+        .groupBy("sink", "host_bucket")
+        .count()
+        .collect()
+    )
+    sinks: dict[str, int] = {}
+    for r in rows:
+        sinks[r["sink"]] = sinks.get(r["sink"], 0) + r["count"]
+    return sinks, {f"{r['sink']}/{r['host_bucket']}": r["count"] for r in rows}
+
+
+def test_manifest_counts_equal_written_table(
+    spark, generated_pages_dir, tmp_path, monkeypatch
+):
+    """After every call of a daily run, including a day re-run after its
+    stats failed, the manifest's footer counts equal a groupBy over the
+    written routed table."""
+    out = str(tmp_path / "out")
+    manifest_path = os.path.join(out, "manifest.json")
+
+    def check(res):
+        days = Manifest.load(manifest_path).days
+        totals: dict[str, int] = {}
+        for day in res.days_processed:
+            sinks, parts = _table_counts(spark, out, day)
+            assert days[day]["sink_counts"] == sinks, day
+            assert days[day]["partition_counts"] == parts, day
+            for s, c in sinks.items():
+                totals[s] = totals.get(s, 0) + c
+        assert res.sink_counts == totals
+
+    check(pipeline.run(spark, generated_pages_dir, out, day_batch=1))
+
+    real = pipeline.write_stats
+
+    def fail_once(routed, out_root):
+        monkeypatch.setattr(pipeline, "write_stats", real)
+        raise RuntimeError("stats failed")
+
+    monkeypatch.setattr(pipeline, "write_stats", fail_once)
+    with pytest.raises(RuntimeError, match="stats failed"):
+        pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    rerun = pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    assert len(rerun.days_processed) == 1
+    check(rerun)
+
+    calls = 2
+    while True:
+        res = pipeline.run(spark, generated_pages_dir, out, day_batch=1, with_stats=False)
+        if not res.days_processed:
+            break
+        check(res)
+        calls += 1
+    assert calls == 7  # one call per generated warc_day

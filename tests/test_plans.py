@@ -10,6 +10,7 @@ sinks.
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pgweasel_spark.operators import aggregates as agg
@@ -62,6 +63,29 @@ def test_slow_top_is_take_ordered(spark, generated_pages_dir):
     ev = parse_events(spark.read.parquet(generated_pages_dir))
     plan = _plan(agg.slow_top(ev))
     assert "TakeOrderedAndProject" in plan
+
+
+@pytest.mark.parametrize(
+    "report,order",
+    [
+        (agg.errors_hist, lambda: [F.col("bucket_epoch")]),
+        (agg.connections_buckets, lambda: [F.col("bucket_epoch")]),
+        (
+            agg.connections_by_dim,
+            lambda: [F.col("dim"), F.col("cnt").desc(), F.col("value")],
+        ),
+    ],
+    ids=["errors_hist", "connections_buckets", "connections_by_dim"],
+)
+def test_report_sorted_in_its_one_partition(spark, generated_pages_dir, report, order):
+    """The bucket and by-dim reports come out as one partition sorted in
+    place: no range-partitioning exchange (and so no sampling job), and
+    the row order of a global sort."""
+    df = report(parse_events(spark.read.parquet(generated_pages_dir)))
+    assert "rangepartitioning" not in _plan(df)
+    rows = df.collect()
+    assert len(rows) > 1
+    assert rows == df.orderBy(*order()).collect()
 
 
 def test_errors_top_has_partial_agg(spark, generated_pages_dir):
