@@ -23,11 +23,18 @@ their top-N plans.
 
 The Column expressions below depend only on grammar constants and the
 bucket width, so each is built once per session (``session.per_session``).
+
+Incremental reports: ``report_partials`` computes every report's exact
+per-day state in one plan (counts keyed by day, report and key, and each
+day's top-K slow rows). The pipeline stores one state per warc_day and
+merges them into the six reports on the driver, so a daily call reads
+only its own day (``plans/pipeline.write_stats``). The builders above
+stay the definition the merged reports are tested against.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pgweasel_spark import grammar
@@ -46,18 +53,31 @@ def errors_top(df: DataFrame, max_n: int = 20) -> DataFrame:
     )
 
 
+#: default bucket widths of errors_hist and connections_buckets
+ERRORS_HIST_BUCKET_S = 3600
+CONN_BUCKET_S = 600
+
+
+def _bucket_floor(spark: SparkSession, bucket_s: int) -> Column:
+    """floor(epoch/width)*width of ``event_ts``, built once per session."""
+    return per_session(
+        spark,
+        ("aggregates.bucket_floor", bucket_s),
+        lambda: F.floor(F.unix_timestamp(F.col("event_ts")) / bucket_s) * bucket_s,
+    )
+
+
 def _bucket_counts(df: DataFrame, bucket_s: int) -> DataFrame:
     """Rows per epoch-floor bucket floor(epoch/width)*width, in one
     partition ordered by bucket."""
-
-    def build() -> tuple[Column, Column]:
-        epoch = F.floor(F.unix_timestamp(F.col("event_ts")) / bucket_s) * bucket_s
-        return epoch.alias("bucket_epoch"), F.timestamp_seconds(
-            F.col("bucket_epoch")
-        )
-
+    spark = df.sparkSession
     epoch, ts = per_session(
-        df.sparkSession, ("aggregates.bucket", bucket_s), build
+        spark,
+        ("aggregates.bucket", bucket_s),
+        lambda: (
+            _bucket_floor(spark, bucket_s).alias("bucket_epoch"),
+            F.timestamp_seconds(F.col("bucket_epoch")),
+        ),
     )
     return (
         df.groupBy(epoch)
@@ -68,11 +88,24 @@ def _bucket_counts(df: DataFrame, bucket_s: int) -> DataFrame:
     )
 
 
-def errors_hist(df: DataFrame, bucket_s: int = 3600) -> DataFrame:
+def errors_hist(df: DataFrame, bucket_s: int = ERRORS_HIST_BUCKET_S) -> DataFrame:
     """`errors hist -b I` (src/aggregators/error_histogram.rs:21-56):
     count per epoch-aligned bucket floor(epoch/width)*width. Default 1h
     (src/main.rs:108)."""
     return _bucket_counts(df, bucket_s)
+
+
+#: slow_top's columns
+SLOW_COLS = ["duration_ms", "url", "record_no", "event_ts", "raw"]
+
+
+def _slow_order(spark: SparkSession) -> list[Column]:
+    """slow_top's total order: duration desc, then url, then record_no."""
+    return per_session(
+        spark,
+        "aggregates.slow_order",
+        lambda: [F.desc("duration_ms"), F.asc("url"), F.asc("record_no")],
+    )
 
 
 def slow_top(df: DataFrame, limit: int = 10) -> DataFrame:
@@ -82,9 +115,9 @@ def slow_top(df: DataFrame, limit: int = 10) -> DataFrame:
     identical to the reference's per-thread heaps + capped merge."""
     return (
         df.where(F.col("duration_ms").isNotNull())
-        .orderBy(F.desc("duration_ms"), F.asc("url"), F.asc("record_no"))
+        .orderBy(*_slow_order(df.sparkSession))
         .limit(limit)
-        .select("duration_ms", "url", "record_no", "event_ts", "raw")
+        .select(*SLOW_COLS)
     )
 
 
@@ -115,6 +148,22 @@ def _conn_flag_cols() -> dict[str, Column]:
     }
 
 
+#: connections_totals' columns and the flag each one sums
+CONN_TOTALS = {
+    "connection_attempts": "c_received",
+    "authenticated": "c_authorized",
+    "authenticated_ssl": "c_ssl",
+    "failures": "c_failure",
+}
+#: connections_by_dim's dims: (dim, kv column, flag of the rows it counts)
+CONN_DIMS = [
+    ("host", "host", "c_received"),
+    ("user", "user", "c_authorized"),
+    ("database", "db", "c_authorized"),
+    ("appname", "appname", "c_authorized"),
+]
+
+
 def _conn_flags(df: DataFrame) -> DataFrame:
     """``df`` plus the four connection flags, built once per session."""
     return df.withColumns(
@@ -128,10 +177,8 @@ def connections_totals(df: DataFrame) -> DataFrame:
         df.sparkSession,
         "aggregates.conn_totals",
         lambda: [
-            F.sum(F.col("c_received").cast("long")).alias("connection_attempts"),
-            F.sum(F.col("c_authorized").cast("long")).alias("authenticated"),
-            F.sum(F.col("c_ssl").cast("long")).alias("authenticated_ssl"),
-            F.sum(F.col("c_failure").cast("long")).alias("failures"),
+            F.sum(F.col(flag).cast("long")).alias(name)
+            for name, flag in CONN_TOTALS.items()
         ],
     )
     return _conn_flags(df).agg(*totals)
@@ -149,19 +196,19 @@ def connections_by_dim(df: DataFrame) -> DataFrame:
     f = _conn_flags(df)
 
     def build() -> Column:
-        def pair(dim_name: str, col: str) -> Column:
-            return F.struct(
-                F.lit(dim_name).alias("dim"),
-                F.coalesce(F.col(col), F.lit("unknown")).alias("value"),
-            )
-
         return F.explode(
             F.array_compact(
                 F.array(
-                    F.when(F.col("c_received"), pair("host", "host")),
-                    F.when(F.col("c_authorized"), pair("user", "user")),
-                    F.when(F.col("c_authorized"), pair("database", "db")),
-                    F.when(F.col("c_authorized"), pair("appname", "appname")),
+                    *[
+                        F.when(
+                            F.col(flag),
+                            F.struct(
+                                F.lit(dim).alias("dim"),
+                                F.coalesce(F.col(col), F.lit("unknown")).alias("value"),
+                            ),
+                        )
+                        for dim, col, flag in CONN_DIMS
+                    ]
                 )
             )
         ).alias("dv")
@@ -176,10 +223,102 @@ def connections_by_dim(df: DataFrame) -> DataFrame:
     )
 
 
-def connections_buckets(df: DataFrame, bucket_s: int = 600) -> DataFrame:
+def connections_buckets(df: DataFrame, bucket_s: int = CONN_BUCKET_S) -> DataFrame:
     """connection-received count per 10-min epoch-floor bucket
     (connections.rs:66-75, round_floor :222-227)."""
     return _bucket_counts(_conn_flags(df).where(F.col("c_received")), bucket_s)
+
+
+# --- per-day partial state of all six reports --------------------------------
+
+
+def _partial_items(spark: SparkSession) -> Column:
+    """The count items one routed row contributes, as
+    ``struct(report, dim, key, bucket, n)``; the sum of ``n`` per
+    (warc_day, report, dim, key, bucket) is each report's per-day state:
+
+    - errors rows: one ``errors_top`` item keyed by message and one
+      ``errors_hist`` item keyed by the 1 h bucket floor;
+    - stats rows: a ``connections_buckets`` item keyed by the 10 min
+      bucket floor if received, a ``connections_by_dim`` item per
+      (dim, value) it counts, and one ``connections_totals`` item per
+      total whose ``n`` is the flag as a long (null stays null, as in
+      ``connections_totals``' sum)."""
+
+    def build() -> Column:
+        err = F.col("sink") == "errors"
+        stats = F.col("sink") == "stats"
+        none = F.lit(None)
+
+        def item(report, dim=none, key=none, bucket=none, n=F.lit(1)):
+            return F.struct(
+                F.lit(report).alias("report"),
+                dim.cast("string").alias("dim"),
+                key.cast("string").alias("key"),
+                bucket.cast("long").alias("bucket"),
+                n.cast("long").alias("n"),
+            )
+
+        items = [
+            F.when(err, item("errors_top", key=F.col("message"))),
+            F.when(
+                err,
+                item("errors_hist", bucket=_bucket_floor(spark, ERRORS_HIST_BUCKET_S)),
+            ),
+            F.when(
+                stats & F.col("c_received"),
+                item("connections_buckets", bucket=_bucket_floor(spark, CONN_BUCKET_S)),
+            ),
+            *[
+                F.when(
+                    stats & F.col(flag),
+                    item(
+                        "connections_by_dim",
+                        dim=F.lit(dim),
+                        key=F.coalesce(F.col(col), F.lit("unknown")),
+                    ),
+                )
+                for dim, col, flag in CONN_DIMS
+            ],
+            *[
+                F.when(
+                    stats, item("connections_totals", dim=F.lit(name), n=F.col(flag))
+                )
+                for name, flag in CONN_TOTALS.items()
+            ],
+        ]
+        return F.explode(F.array_compact(F.array(*items))).alias("item")
+
+    return per_session(spark, "aggregates.partial_items", build)
+
+
+def report_partials(routed: DataFrame, slow_k: int = 10) -> DataFrame:
+    """Every report's exact per-warc_day state from routed rows of the
+    errors and stats sinks, as one plan with one result:
+
+    - count rows ``(warc_day, report, dim, key, bucket, n)``: one explode
+      of ``_partial_items`` and one groupBy, partially aggregated map-side;
+    - ``report = 'slow_top'`` rows: each day's top ``slow_k`` stats rows
+      under slow_top's total order, with slow_top's columns.
+
+    Summing the counts over days, and taking the top ``slow_k`` of the
+    days' slow rows, gives each report over all those days."""
+    spark = routed.sparkSession
+    flagged = _conn_flags(routed)
+    counts = (
+        flagged.select("warc_day", _partial_items(spark))
+        .select("warc_day", "item.*")
+        .groupBy("warc_day", "report", "dim", "key", "bucket")
+        .agg(F.sum("n").alias("n"))
+    )
+    day_order = Window.partitionBy("warc_day").orderBy(*_slow_order(spark))
+    slow = (
+        routed.where((F.col("sink") == "stats") & F.col("duration_ms").isNotNull())
+        .withColumn("_rank", F.row_number().over(day_order))
+        .where(F.col("_rank") <= slow_k)
+        .select("warc_day", F.lit("slow_top").alias("report"), *SLOW_COLS)
+    )
+    return counts.unionByName(slow, allowMissingColumns=True)
 
 
 def salted_count_by(

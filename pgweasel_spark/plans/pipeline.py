@@ -9,7 +9,11 @@ One logical plan per day batch:
                                           task)
     → sink flags + explode              (no shuffle)
     → write routed table partitioned by (sink, warc_day, host_bucket)
-  + aggregate stats tables              (one shuffle each, partial/final agg)
+  + stats: one pass over the batch's own errors/stats partitions
+    computes each day's partial state of the six reports (one explode +
+    groupBy, partial/final agg, and a per-day top-K) into
+    stats_partial/warc_day=<d>/; the driver merges every day's state
+    into the six report files, so a daily call never rescans history
 
 The Column expressions of every stage and the broadcast dims depend only
 on grammar constants and ``slow_threshold_ms``, so each is built once per
@@ -18,14 +22,16 @@ only its DataFrames.
 
 Scale notes (the 1000-executor / 100 TB story):
 - the map side is exchange-free: split/extract/route all pipeline into the
-  scan tasks; the only shuffles are the stats groupBys, whose keys
-  (message, bucket, dim value) are low-cardinality relative to input, so
-  partial aggregation collapses them map-side.
+  scan tasks; the only shuffles are the stats pass's groupBy, whose keys
+  (day, message, bucket, dim value) are low-cardinality relative to
+  input, so partial aggregation collapses them map-side, and its per-day
+  top-K, which a partial window group limit cuts map-side.
 - sinks are partitioned by warc_day + url-host hash bucket; a skewed host
   cannot skew a *file* beyond its bucket, and AQE handles residual skew.
 - resume: each day batch is idempotent (dynamic partition overwrite); the
   manifest records completion + per-partition and per-sink counts
-  (plans/manifest.py), only after the batch's stats tables are written.
+  (plans/manifest.py), only after the batch's partial stats state and
+  the stats tables are written.
   The counts come from the written files' parquet footers
   (``partition_counts``), not from reading the table back.
 
@@ -37,13 +43,25 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from pgweasel_spark.operators import aggregates as agg
 from pgweasel_spark.operators import route
@@ -51,31 +69,39 @@ from pgweasel_spark.operators.enrich import enrich
 from pgweasel_spark.operators.parse import parse_events
 from pgweasel_spark.plans.manifest import Manifest
 
-ROUTED_COLS = [
-    "sink",
-    "url",
-    "url_host",
-    "warc_ts",
-    "lang",
-    "record_no",
-    "raw",
-    "format",
-    "severity",
-    "severity_num",
-    "severity_class",
-    "event_ts",
-    "message",
-    "sqlstate",
-    "sqlstate_category",
-    "duration_ms",
-    "host",
-    "user",
-    "db",
-    "appname",
-    "warc_day",
-    "host_bucket",
-]
-
+#: the routed table's columns in the order ``_routed`` selects them, with
+#: the types Spark reads back (sink, warc_day and host_bucket as partition
+#: discovery infers them)
+ROUTED_SCHEMA = StructType(
+    [
+        StructField(name, dtype)
+        for name, dtype in [
+            ("sink", StringType()),
+            ("url", StringType()),
+            ("url_host", StringType()),
+            ("warc_ts", TimestampNTZType()),
+            ("lang", StringType()),
+            ("record_no", IntegerType()),
+            ("raw", StringType()),
+            ("format", StringType()),
+            ("severity", StringType()),
+            ("severity_num", IntegerType()),
+            ("severity_class", StringType()),
+            ("event_ts", TimestampType()),
+            ("message", StringType()),
+            ("sqlstate", StringType()),
+            ("sqlstate_category", StringType()),
+            ("duration_ms", DoubleType()),
+            ("host", StringType()),
+            ("user", StringType()),
+            ("db", StringType()),
+            ("appname", StringType()),
+            ("warc_day", DateType()),
+            ("host_bucket", IntegerType()),
+        ]
+    ]
+)
+ROUTED_COLS = ROUTED_SCHEMA.fieldNames()
 
 @dataclass
 class PipelineResult:
@@ -97,6 +123,16 @@ def _routed(events: DataFrame, slow_threshold_ms: float) -> DataFrame:
     return out.hint("rebalance", "sink", "warc_day", "host_bucket")
 
 
+def _day_dirs(routed_path: str, day: str) -> list[tuple[str, str]]:
+    """``(sink, path)`` of each ``sink=*/warc_day=<day>`` directory of the
+    routed table, listed on the driver."""
+    pattern = os.path.join(glob.escape(routed_path), "sink=*", f"warc_day={day}")
+    return [
+        (os.path.basename(os.path.dirname(path)).split("=", 1)[1], path)
+        for path in sorted(glob.glob(pattern))
+    ]
+
+
 def partition_counts(routed_path: str, day: str) -> dict[str, int]:
     """Rows of one warc_day per ``"sink/host_bucket"`` partition, summed
     from the parquet footers (``num_rows``) of the files under
@@ -105,72 +141,229 @@ def partition_counts(routed_path: str, day: str) -> dict[str, int]:
     reader skips them; a partition with no rows gets no key. Reads a
     local ``routed_path``, like the manifest beside it."""
     counts: dict[str, int] = {}
-    for part in glob.glob(
-        os.path.join(
-            glob.escape(routed_path), "sink=*", f"warc_day={day}", "host_bucket=*"
-        )
-    ):
-        sink, _, bucket = (
-            name.split("=", 1)[1]
-            for name in os.path.relpath(part, routed_path).split(os.sep)
-        )
-        rows = sum(
-            pq.read_metadata(f.path).num_rows
-            for f in os.scandir(part)
-            if f.is_file() and not f.name.startswith(("_", "."))
-        )
-        if rows:
-            counts[f"{sink}/{bucket}"] = rows
+    for sink, day_dir in _day_dirs(routed_path, day):
+        for part in glob.glob(os.path.join(glob.escape(day_dir), "host_bucket=*")):
+            rows = sum(
+                pq.read_metadata(f.path).num_rows
+                for f in os.scandir(part)
+                if f.is_file() and not f.name.startswith(("_", "."))
+            )
+            if rows:
+                bucket = os.path.basename(part).split("=", 1)[1]
+                counts[f"{sink}/{bucket}"] = rows
     return counts
 
 
-def write_stats(routed: DataFrame, out_root: str) -> None:
-    """Aggregate companion tables (SURVEY.md §2.5), computed from the
-    already-written routed table — the expensive parse runs exactly once
-    per input; the stats pass reads back only the pruned columns it needs
-    from the (much smaller, columnar) sinks."""
-    stats = os.path.join(out_root, "stats")
-    # r6: NO shared cache — each aggregate job scans the routed parquet
-    # directly. The six jobs read mostly-DISJOINT column sets
-    # (errors_top: message; errors_hist: event_ts; slow_top:
-    # duration/url/record_no/raw; connections: severity/raw/message/kv
-    # dims), so per-job column pruning at the parquet scan reads fewer
-    # total bytes than one cache build over the 12-column union — and
-    # the cache build itself was the dominant stats cost (measured at
-    # bench_sf=1.0: cache+jobs 11.8 s vs direct pruned scans 7.3 s).
-    # Guide §5: cache only when recompute beats the memory pressure —
-    # here the "recompute" is a pruned columnar read the cache can't
-    # undercut; at 100 TB the same holds and the corpus-sized cache is
-    # pure memory pressure. Partition pruning on sink= keeps every scan
-    # to the two consumed sinks.
-    routed = routed.where(F.col("sink").isin("errors", "stats"))
-    err = routed.where(F.col("sink") == "errors")
-    log_plus = routed.where(F.col("sink") == "stats")
-    jobs = {
-        "errors_top": agg.errors_top(err, max_n=20),
-        "errors_hist": agg.errors_hist(err),
-        "slow_top": agg.slow_top(log_plus),
-        "connections_totals": agg.connections_totals(log_plus),
-        "connections_by_dim": agg.connections_by_dim(log_plus),
-        "connections_buckets": agg.connections_buckets(log_plus),
+# --- stats reports: per-day partial states merged on the driver -------------
+
+#: the routed sinks the stats reports read
+STATS_SINKS = ("errors", "stats")
+#: the one file of each stats report and of each day's partial state
+PART_FILE = "part-00000.parquet"
+
+#: one day's partial state (``aggregates.report_partials`` without its
+#: ``warc_day``): count rows, then that day's top slow rows
+PARTIAL_SCHEMA = pa.schema(
+    [
+        ("report", pa.string()),
+        ("dim", pa.string()),
+        ("key", pa.string()),
+        ("bucket", pa.int64()),
+        ("n", pa.int64()),
+        ("duration_ms", pa.float64()),
+        ("url", pa.string()),
+        ("record_no", pa.int32()),
+        ("event_ts", pa.timestamp("us", tz="UTC")),
+        ("raw", pa.string()),
+    ]
+)
+
+_COUNT = pa.field("cnt", pa.int64(), nullable=False)
+_BUCKETS = pa.schema(
+    [("bucket_epoch", pa.int64()), _COUNT, ("bucket_ts", pa.timestamp("us"))]
+)
+#: each report's schema as Spark's ``coalesce(1).write.parquet`` of the
+#: ``aggregates`` builder writes it: non-nullable columns are ``required``
+REPORT_SCHEMAS = {
+    "errors_top": pa.schema([("message", pa.string()), _COUNT]),
+    "errors_hist": _BUCKETS,
+    "slow_top": pa.schema(
+        [
+            ("duration_ms", pa.float64()),
+            ("url", pa.string()),
+            ("record_no", pa.int32()),
+            ("event_ts", pa.timestamp("us")),
+            ("raw", pa.string()),
+        ]
+    ),
+    "connections_totals": pa.schema(
+        [(name, pa.int64()) for name in agg.CONN_TOTALS]
+    ),
+    "connections_by_dim": pa.schema(
+        [
+            pa.field("dim", pa.string(), nullable=False),
+            pa.field("value", pa.string(), nullable=False),
+            ("cnt", pa.int64()),
+        ]
+    ),
+    "connections_buckets": _BUCKETS,
+}
+ERRORS_TOP_N = 20
+SLOW_TOP_K = 10
+
+
+def _partial_dir(out_root: str, day: str) -> str:
+    return os.path.join(out_root, "stats_partial", f"warc_day={day}")
+
+
+def _replace_file(table: pa.Table, directory: str, **write_opts) -> None:
+    """Make ``table`` the only file of ``directory``: written to a hidden
+    temp file (readers skip names starting with ``.``), renamed over
+    ``PART_FILE``, then every other entry removed."""
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{PART_FILE}.tmp")
+    pq.write_table(table, tmp, **write_opts)
+    os.replace(tmp, os.path.join(directory, PART_FILE))
+    for entry in os.scandir(directory):
+        if entry.name == PART_FILE:
+            continue
+        if entry.is_dir():
+            shutil.rmtree(entry.path)
+        else:
+            os.remove(entry.path)
+
+
+def read_stats_days(
+    spark: SparkSession, routed_path: str, days: list[str]
+) -> DataFrame | None:
+    """The errors and stats rows of ``days`` in the routed table, read with
+    its known schema from those days' partition directories only; None
+    when the days have none."""
+    dirs = [
+        path
+        for day in days
+        for sink, path in _day_dirs(routed_path, day)
+        if sink in STATS_SINKS
+    ]
+    if not dirs:
+        return None
+    return (
+        spark.read.schema(ROUTED_SCHEMA)
+        .option("basePath", routed_path)
+        .parquet(*dirs)
+    )
+
+
+def _sorted(table: pa.Table, keys: list[tuple[str, str]]) -> pa.Table:
+    """``table`` in Spark's order for ``keys``: nulls first. (Every
+    descending key here is a count or a duration, never null.)"""
+    return table.sort_by(keys, null_placement="at_start")
+
+
+def _summed(state: pa.Table, report: str, keys: list[str]) -> pa.Table:
+    """``report``'s count rows summed over days per ``keys`` (column
+    ``n_sum``; null when every summand is null, as Spark's ``sum``)."""
+    rows = state.filter(pc.equal(state["report"], report))
+    return rows.group_by(keys).aggregate([("n", "sum")])
+
+
+def _bucket_report(state: pa.Table, report: str) -> pa.Table:
+    rows = _sorted(_summed(state, report, ["bucket"]), [("bucket", "ascending")])
+    epoch = rows["bucket"]
+    ts = pc.multiply(epoch, 1_000_000).cast(pa.timestamp("us"))
+    return pa.Table.from_arrays([epoch, rows["n_sum"], ts], schema=_BUCKETS)
+
+
+def _merge_reports(state: pa.Table) -> dict[str, pa.Table]:
+    """The six reports from the partial states of the days they cover:
+    counts summed per key, then each report's top-N / order as its
+    ``aggregates`` builder gives it."""
+    top = _sorted(
+        _summed(state, "errors_top", ["key"]),
+        [("n_sum", "descending"), ("key", "ascending")],
+    ).slice(0, ERRORS_TOP_N)
+    slow = _sorted(
+        state.filter(pc.equal(state["report"], "slow_top")),
+        [
+            ("duration_ms", "descending"),
+            ("url", "ascending"),
+            ("record_no", "ascending"),
+        ],
+    ).slice(0, SLOW_TOP_K)
+    totals = _summed(state, "connections_totals", ["dim"]).to_pydict()
+    total = dict(zip(totals["dim"], totals["n_sum"]))
+    by_dim = _sorted(
+        _summed(state, "connections_by_dim", ["dim", "key"]),
+        [("dim", "ascending"), ("n_sum", "descending"), ("key", "ascending")],
+    )
+    schemas = REPORT_SCHEMAS
+    return {
+        "errors_top": pa.Table.from_arrays(
+            [top["key"], top["n_sum"]], schema=schemas["errors_top"]
+        ),
+        "errors_hist": _bucket_report(state, "errors_hist"),
+        "slow_top": slow.select(agg.SLOW_COLS).cast(schemas["slow_top"]),
+        "connections_totals": pa.Table.from_pylist(
+            [{name: total.get(name) for name in agg.CONN_TOTALS}],
+            schema=schemas["connections_totals"],
+        ),
+        "connections_by_dim": pa.Table.from_arrays(
+            [by_dim["dim"], by_dim["key"], by_dim["n_sum"]],
+            schema=schemas["connections_by_dim"],
+        ),
+        "connections_buckets": _bucket_report(state, "connections_buckets"),
     }
-    # submit the six small jobs concurrently — they are independent and
-    # individually under-parallel, so serial submission would leave cores
-    # idle (Spark's fair scheduler interleaves their tasks). Each report
-    # is tiny (top-N / per-dim / per-bucket rows): coalesce(1) makes the
-    # write a single task + single-file commit instead of
-    # shuffle-partition-many, cutting the fixed driver tail per table.
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futures = {
-            name: pool.submit(
-                lambda d=df, p=f"{stats}/{name}": d.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(p)
-            )
-            for name, df in jobs.items()
-        }
-        for name, fut in futures.items():
-            fut.result()
+
+
+def write_stats(
+    routed: DataFrame | None, out_root: str, days: list[str] | None = None
+) -> None:
+    """Aggregate companion tables (SURVEY.md §2.5), in two steps:
+
+    1. One Spark pass over ``routed`` (errors/stats rows; pruned to those
+       sinks here) computes each day's partial state
+       (``aggregates.report_partials``) and writes it to
+       ``<out_root>/stats_partial/warc_day=<day>/``, replacing that day's
+       old state. ``days`` lists the days ``routed`` covers, so a day
+       without errors or stats rows gets an empty state; None takes the
+       days found in ``routed``. ``routed`` may be None when every day is
+       empty.
+    2. The driver merges every day's state under ``stats_partial`` into
+       the six reports and writes each as one parquet file
+       ``<out_root>/stats/<name>/``, with the schema Spark's writer gave
+       it (INT96 timestamps, no Arrow schema). Assumes a local
+       ``out_root``, like the manifest."""
+    if routed is None:
+        state = PARTIAL_SCHEMA.empty_table().append_column(
+            "warc_day", pa.array([], pa.date32())
+        )
+    else:
+        routed = routed.where(F.col("sink").isin(*STATS_SINKS))
+        state = agg.report_partials(routed, slow_k=SLOW_TOP_K).toArrow()
+    state_days = state["warc_day"].cast(pa.string())
+    if days is None:
+        days = sorted(set(state_days.to_pylist()))
+    for day in days:
+        day_state = state.filter(pc.equal(state_days, day))
+        _replace_file(
+            day_state.select(PARTIAL_SCHEMA.names).cast(PARTIAL_SCHEMA),
+            _partial_dir(out_root, day),
+        )
+
+    parts = glob.glob(
+        os.path.join(glob.escape(out_root), "stats_partial", "warc_day=*", PART_FILE)
+    )
+    merged = pa.concat_tables(
+        [PARTIAL_SCHEMA.empty_table()]
+        + [pq.read_table(p, schema=PARTIAL_SCHEMA) for p in sorted(parts)]
+    )
+    for name, table in _merge_reports(merged).items():
+        _replace_file(
+            table,
+            os.path.join(out_root, "stats", name),
+            use_deprecated_int96_timestamps=True,
+            store_schema=False,
+        )
 
 
 def run(
@@ -273,9 +466,22 @@ def run(
                 per_day[d][sink] = per_day[d].get(sink, 0) + n
         # the stats tables come before the manifest commit: a failure in
         # write_stats leaves the batch pending, so the next call re-routes
-        # it and rewrites the reports instead of keeping stale ones
+        # it and rewrites its partial state and the reports instead of
+        # keeping stale ones. A stats call also computes the state of every
+        # completed day that lacks one (days routed without stats); a call
+        # without stats drops the state of the days it re-routes.
         if with_stats:
-            write_stats(spark.read.parquet(routed_path), out_root)
+            days = pending + [
+                d
+                for d in sorted(done)
+                if not os.path.exists(
+                    os.path.join(_partial_dir(out_root, d), PART_FILE)
+                )
+            ]
+            write_stats(read_stats_days(spark, routed_path, days), out_root, days)
+        else:
+            for d in pending:
+                shutil.rmtree(_partial_dir(out_root, d), ignore_errors=True)
         elapsed = time.time() - t0
         for d in pending:
             manifest.mark_complete(

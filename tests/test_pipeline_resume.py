@@ -1,12 +1,18 @@
 """Pipeline write + checkpoint manifest + kill/resume semantics."""
 
+import glob
 import os
+import shutil
+from datetime import date, datetime
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from pgweasel_spark import grammar
+from pgweasel_spark.operators import aggregates as agg
 from pgweasel_spark.plans import pipeline
 from pgweasel_spark.plans.manifest import Manifest
 
@@ -251,7 +257,7 @@ def test_stats_failure_leaves_day_pending(
 
     real = pipeline.write_stats
 
-    def fail_once(routed, out_root):
+    def fail_once(*args):
         monkeypatch.setattr(pipeline, "write_stats", real)
         raise RuntimeError("stats failed")
 
@@ -283,7 +289,7 @@ def _jobs_run_by(spark, call):
 
 #: Spark jobs of one ``run(day_batch=1)`` call with stats, and of a call
 #: with nothing pending. A change that lowers a count lowers it here too.
-DAILY_CALL_JOBS = 22
+DAILY_CALL_JOBS = 12
 IDLE_CALL_JOBS = 3
 
 
@@ -367,7 +373,7 @@ def test_manifest_counts_equal_written_table(
 
     real = pipeline.write_stats
 
-    def fail_once(routed, out_root):
+    def fail_once(*args):
         monkeypatch.setattr(pipeline, "write_stats", real)
         raise RuntimeError("stats failed")
 
@@ -386,3 +392,240 @@ def test_manifest_counts_equal_written_table(
         check(res)
         calls += 1
     assert calls == 7  # one call per generated warc_day
+
+
+def test_routed_schema_is_the_written_schema(spark, generated_pages_dir, tmp_path):
+    """The schema the stats pass reads the routed table with is the one
+    Spark infers from the written table."""
+    out = str(tmp_path / "out")
+    pipeline.run(spark, generated_pages_dir, out, day_batch=1, with_stats=False)
+    inferred = spark.read.parquet(os.path.join(out, "routed")).schema
+    assert {f.name: f.dataType for f in inferred} == {
+        f.name: f.dataType for f in pipeline.ROUTED_SCHEMA
+    }
+
+
+def _builder_reports(spark, out):
+    """The six reports as the ``aggregates`` builders compute them over the
+    whole written routed table: the oracle for the merged reports."""
+    routed = spark.read.parquet(os.path.join(out, "routed")).where(
+        F.col("sink").isin("errors", "stats")
+    )
+    err = routed.where(F.col("sink") == "errors")
+    log_plus = routed.where(F.col("sink") == "stats")
+    return {
+        "errors_top": agg.errors_top(err, max_n=20),
+        "errors_hist": agg.errors_hist(err),
+        "slow_top": agg.slow_top(log_plus),
+        "connections_totals": agg.connections_totals(log_plus),
+        "connections_by_dim": agg.connections_by_dim(log_plus),
+        "connections_buckets": agg.connections_buckets(log_plus),
+    }
+
+
+def _assert_reports_equal_builders(spark, out, oracle_dir=None):
+    """Each ``stats/<name>`` has the builder's rows in the builder's order
+    and its schema as Spark reads it. With ``oracle_dir``, the builder's
+    output is also written as Spark's ``coalesce(1).write.parquet`` writes
+    it, and the two files must read the same through pyarrow: schema
+    (nullability included) and rows."""
+    for name, oracle in _builder_reports(spark, out).items():
+        path = os.path.join(out, "stats", name)
+        got = spark.read.parquet(path)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in oracle.schema
+        ], name
+        assert got.collect() == oracle.collect(), name
+        if oracle_dir is not None:
+            want = os.path.join(oracle_dir, name)
+            oracle.coalesce(1).write.mode("overwrite").parquet(want)
+            assert spark.read.parquet(want).schema == got.schema, name
+            mine, spark_written = pq.read_table(path), pq.read_table(want)
+            assert mine.schema.equals(spark_written.schema), name
+            assert mine.to_pylist() == spark_written.to_pylist(), name
+
+
+def _stats_files(out, days):
+    """The data files of the errors/stats partitions of ``days``."""
+    routed = os.path.join(out, "routed")
+    return {
+        f.path
+        for day in days
+        for sink in ("errors", "stats")
+        for part in os.scandir(os.path.join(routed, f"sink={sink}", f"warc_day={day}"))
+        for f in os.scandir(part.path)
+        if not f.name.startswith(("_", "."))
+    }
+
+
+def test_daily_stats_equal_full_recompute(
+    spark, generated_pages_dir, tmp_path, monkeypatch
+):
+    """After every call of a seven-day daily run with stats, including a
+    day re-run after its stats failed, each merged report equals its
+    builder over the whole written routed table, and the partial pass
+    read exactly the routed files of the day the call routed."""
+    out = str(tmp_path / "out")
+    oracle = str(tmp_path / "oracle")
+    real_partials = agg.report_partials
+    read = []
+
+    def spy(routed, **kw):
+        read.append({urlparse(f).path for f in routed.inputFiles()})
+        return real_partials(routed, **kw)
+
+    monkeypatch.setattr(agg, "report_partials", spy)
+
+    def daily_call():
+        read.clear()
+        res = pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+        assert read == [_stats_files(out, res.days_processed)]
+        _assert_reports_equal_builders(spark, out)
+        return res
+
+    days = [daily_call().days_processed]
+    real = pipeline.write_stats
+
+    def fail_once(*args):
+        monkeypatch.setattr(pipeline, "write_stats", real)
+        raise RuntimeError("stats failed")
+
+    monkeypatch.setattr(pipeline, "write_stats", fail_once)
+    with pytest.raises(RuntimeError, match="stats failed"):
+        pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    days.append(daily_call().days_processed)
+    while len(days) < 7:
+        days.append(daily_call().days_processed)
+    assert [len(d) for d in days] == [1] * 7
+    _assert_reports_equal_builders(spark, out, oracle)
+    assert pipeline.run(spark, generated_pages_dir, out).days_processed == []
+
+
+def test_no_stats_days_stay_in_reports(spark, generated_pages_dir, tmp_path):
+    """Days routed without stats get their partial state from the next
+    call with stats, so the reports still cover every routed day. A day
+    re-routed without stats loses its old state, which would be stale,
+    and gets a new one the same way."""
+    out = str(tmp_path / "out")
+
+    def has_state(day):
+        return os.path.exists(
+            os.path.join(out, "stats_partial", f"warc_day={day}", pipeline.PART_FILE)
+        )
+
+    for _ in range(3):
+        pipeline.run(spark, generated_pages_dir, out, day_batch=1, with_stats=False)
+    res = pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    assert len(res.days_processed) == 1 and len(res.days_skipped) == 3
+    _assert_reports_equal_builders(spark, out)
+    assert all(map(has_state, res.days_processed + res.days_skipped))
+
+    m = Manifest.load(os.path.join(out, "manifest.json"))
+    first = min(m.completed_days())
+    del m.days[first]
+    m.save()
+    rerun = pipeline.run(spark, generated_pages_dir, out, day_batch=1, with_stats=False)
+    assert rerun.days_processed == [first] and not has_state(first)
+    pipeline.run(spark, generated_pages_dir, out, day_batch=1)
+    assert has_state(first)
+    _assert_reports_equal_builders(spark, out)
+
+
+def _routed_row(day, sink, n, **cols):
+    """One routed row of ``day`` (an int: 2025-06-<day>) in ``sink``."""
+    row = {f.name: None for f in pipeline.ROUTED_SCHEMA}
+    row.update(
+        sink=sink,
+        url=f"http://h{n % 3}/{day}",
+        record_no=n,
+        raw=f"line {n}",
+        format="stderr",
+        severity="log" if sink == "stats" else "error",
+        event_ts=datetime(2025, 6, day, n % 24, n % 60),
+        warc_day=date(2025, 6, day),
+        host_bucket=n % 2,
+    )
+    row.update(cols)
+    return row
+
+
+def _errors(day, messages):
+    return [_routed_row(day, "errors", i, message=m) for i, m in enumerate(messages)]
+
+
+def _slow(day, durations):
+    return [
+        _routed_row(day, "stats", 100 + i, duration_ms=d, message="duration")
+        for i, d in enumerate(durations)
+    ]
+
+
+def _connections(day):
+    """Received, authorized (one with SSL, one without kv), a failure and
+    a stats row whose flags are null (no message)."""
+    recv = grammar.CONN_RECEIVED_PREFIX + " host=10.0.0.1"
+    auth = grammar.CONN_AUTHORIZED_PREFIX + " user=u database=d"
+    return [
+        _routed_row(day, "stats", 200, message=recv, host="10.0.0.1"),
+        _routed_row(day, "stats", 201, message=recv, host=None),
+        _routed_row(
+            day, "stats", 202, message=auth + " " + grammar.CONN_SSL_NEEDLE,
+            user="u", db="d", appname="a",
+        ),
+        _routed_row(day, "stats", 203, message=auth),
+        _routed_row(
+            day, "stats", 204, severity="fatal", message="auth failed",
+            raw="FATAL: " + grammar.CONN_FAILURE_NEEDLES[0],
+        ),
+        _routed_row(day, "stats", 205, message=None),
+    ]
+
+
+#: each case: batches of (days, routed rows of those days); every batch
+#: replaces its days' routed rows, then runs the stats step on them
+MERGE_CASES = {
+    "null_message_key": [
+        ([1], _errors(1, ["b", None, "a"]) + _connections(1)),
+        ([2], _errors(2, ["a", "b", None]) + _slow(2, [5.0])),
+    ],
+    "ties_at_top_20_cut": [
+        ([1, 2], _errors(1, [f"m{i:02d}" for i in range(25)] + ["m24"] * 2)
+         + _errors(2, [f"m{i:02d}" for i in reversed(range(25))])),
+    ],
+    "no_stats_rows": [([1], _errors(1, ["a", "a", "b"]))],
+    "null_connection_flags_only": [
+        ([1], _errors(1, ["a"]) + [_routed_row(1, "stats", 0, message=None)]),
+    ],
+    "no_errors_or_stats_rows": [
+        ([1], [_routed_row(1, "quarantine", 0)]),
+        ([2], _errors(2, ["a"]) + _slow(2, [3.0])),
+        ([2], [_routed_row(2, "quarantine", 0)]),
+    ],
+    "day_ranked_below_top_10_rerun_alone": [
+        ([1, 2], _slow(1, [100.0 + i for i in range(12)]) + _slow(2, [1.0, 2.0, 3.0])),
+        ([1], _slow(1, [0.5])),
+        ([2], _slow(2, [1.0, 2.0, 3.0])),
+        ([2], _slow(2, [1.5, 2.5, 200.0])),
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(MERGE_CASES))
+def test_merged_reports_edge_cases(spark, tmp_path, case):
+    """Each batch of hand-made routed rows, run through the stats step as
+    ``run`` runs it, leaves reports equal to their builders over the
+    whole routed table."""
+    out = str(tmp_path / "out")
+    routed = os.path.join(out, "routed")
+    for i, (days, rows) in enumerate(MERGE_CASES[case]):
+        day_strs = [f"2025-06-{d:02d}" for d in days]
+        for day in day_strs:
+            for part in glob.glob(os.path.join(routed, "sink=*", f"warc_day={day}")):
+                shutil.rmtree(part)
+        spark.createDataFrame(rows, pipeline.ROUTED_SCHEMA).write.mode(
+            "overwrite"
+        ).partitionBy("sink", "warc_day", "host_bucket").parquet(routed)
+        pipeline.write_stats(
+            pipeline.read_stats_days(spark, routed, day_strs), out, day_strs
+        )
+        _assert_reports_equal_builders(spark, out, str(tmp_path / f"oracle{i}"))
