@@ -26,29 +26,71 @@ bucket width, so each is built once per session (``session.per_session``).
 
 Incremental reports: ``report_partials`` computes every report's exact
 per-day state in one plan (counts keyed by day, report and key, and each
-day's top-K slow rows). The pipeline stores one state per warc_day and
-merges them into the six reports on the driver, so a daily call reads
-only its own day (``plans/pipeline.write_stats``). The builders above
-stay the definition the merged reports are tested against.
+day's top-K slow rows). The pipeline stores one state per warc_day
+(``plans/pipeline.write_stats``), so a daily call reads only its own
+day, and ``merge_reports`` turns the states into the six reports on the
+driver with pyarrow. Each report is defined once here: its cut
+(``ERRORS_TOP_N``, ``SLOW_TOP_K``) and row order (``ORDERS``) are read by
+both its builder and the merge, and its schema is its builder's
+(``report_schemas``). The builders stay the definition the merged
+reports are tested against.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from pgweasel_spark import grammar
 from pgweasel_spark.session import per_session
 
+#: default cuts of errors_top and slow_top
+ERRORS_TOP_N = 20
+SLOW_TOP_K = 10
 
-def errors_top(df: DataFrame, max_n: int = 20) -> DataFrame:
+#: each report's row order as (column, "ascending" | "descending"). Spark
+#: puts nulls first in ascending order, and so does ``merge_reports``;
+#: no descending key here (a count or a duration) is ever null.
+ORDERS = {
+    "errors_top": [("cnt", "descending"), ("message", "ascending")],
+    "errors_hist": [("bucket_epoch", "ascending")],
+    "slow_top": [
+        ("duration_ms", "descending"),
+        ("url", "ascending"),
+        ("record_no", "ascending"),
+    ],
+    "connections_by_dim": [
+        ("dim", "ascending"),
+        ("cnt", "descending"),
+        ("value", "ascending"),
+    ],
+    "connections_buckets": [("bucket_epoch", "ascending")],
+}
+
+
+def _order(spark: SparkSession, report: str) -> list[Column]:
+    """``ORDERS[report]`` as Spark sort columns, built once per session."""
+    return per_session(
+        spark,
+        ("aggregates.order", report),
+        lambda: [
+            F.desc(c) if d == "descending" else F.asc(c) for c, d in ORDERS[report]
+        ],
+    )
+
+
+def errors_top(df: DataFrame, max_n: int = ERRORS_TOP_N) -> DataFrame:
     """`errors top --max N` (src/aggregators/error_frequency.rs:23-86):
     count per extracted message, top N by count. Caller pre-filters to the
     errors sink (severity >= Error by default, src/main.rs:87)."""
     return (
         df.groupBy("message")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("message"))
+        .orderBy(*_order(df.sparkSession, "errors_top"))
         .limit(max_n)
     )
 
@@ -67,9 +109,9 @@ def _bucket_floor(spark: SparkSession, bucket_s: int) -> Column:
     )
 
 
-def _bucket_counts(df: DataFrame, bucket_s: int) -> DataFrame:
+def _bucket_counts(df: DataFrame, bucket_s: int, report: str) -> DataFrame:
     """Rows per epoch-floor bucket floor(epoch/width)*width, in one
-    partition ordered by bucket."""
+    partition in ``report``'s order (by bucket)."""
     spark = df.sparkSession
     epoch, ts = per_session(
         spark,
@@ -84,7 +126,7 @@ def _bucket_counts(df: DataFrame, bucket_s: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("bucket_ts", ts)
         .coalesce(1)
-        .sortWithinPartitions("bucket_epoch")
+        .sortWithinPartitions(*_order(spark, report))
     )
 
 
@@ -92,30 +134,21 @@ def errors_hist(df: DataFrame, bucket_s: int = ERRORS_HIST_BUCKET_S) -> DataFram
     """`errors hist -b I` (src/aggregators/error_histogram.rs:21-56):
     count per epoch-aligned bucket floor(epoch/width)*width. Default 1h
     (src/main.rs:108)."""
-    return _bucket_counts(df, bucket_s)
+    return _bucket_counts(df, bucket_s, "errors_hist")
 
 
 #: slow_top's columns
 SLOW_COLS = ["duration_ms", "url", "record_no", "event_ts", "raw"]
 
 
-def _slow_order(spark: SparkSession) -> list[Column]:
-    """slow_top's total order: duration desc, then url, then record_no."""
-    return per_session(
-        spark,
-        "aggregates.slow_order",
-        lambda: [F.desc("duration_ms"), F.asc("url"), F.asc("record_no")],
-    )
-
-
-def slow_top(df: DataFrame, limit: int = 10) -> DataFrame:
+def slow_top(df: DataFrame, limit: int = SLOW_TOP_K) -> DataFrame:
     """`slow top` (src/aggregators/top_slow_query.rs:25-87): top-K records
     by extracted duration. orderBy(desc).limit(k) plans
     TakeOrderedAndProject — a distributed bounded heap, semantically
     identical to the reference's per-thread heaps + capped merge."""
     return (
         df.where(F.col("duration_ms").isNotNull())
-        .orderBy(*_slow_order(df.sparkSession))
+        .orderBy(*_order(df.sparkSession, "slow_top"))
         .limit(limit)
         .select(*SLOW_COLS)
     )
@@ -219,14 +252,16 @@ def connections_by_dim(df: DataFrame) -> DataFrame:
     return (
         salted_count_by(keyed, ["dim", "value"])
         .coalesce(1)
-        .sortWithinPartitions("dim", F.desc("cnt"), "value")
+        .sortWithinPartitions(*_order(df.sparkSession, "connections_by_dim"))
     )
 
 
 def connections_buckets(df: DataFrame, bucket_s: int = CONN_BUCKET_S) -> DataFrame:
     """connection-received count per 10-min epoch-floor bucket
     (connections.rs:66-75, round_floor :222-227)."""
-    return _bucket_counts(_conn_flags(df).where(F.col("c_received")), bucket_s)
+    return _bucket_counts(
+        _conn_flags(df).where(F.col("c_received")), bucket_s, "connections_buckets"
+    )
 
 
 # --- per-day partial state of all six reports --------------------------------
@@ -292,17 +327,17 @@ def _partial_items(spark: SparkSession) -> Column:
     return per_session(spark, "aggregates.partial_items", build)
 
 
-def report_partials(routed: DataFrame, slow_k: int = 10) -> DataFrame:
+def report_partials(routed: DataFrame) -> DataFrame:
     """Every report's exact per-warc_day state from routed rows of the
     errors and stats sinks, as one plan with one result:
 
     - count rows ``(warc_day, report, dim, key, bucket, n)``: one explode
       of ``_partial_items`` and one groupBy, partially aggregated map-side;
-    - ``report = 'slow_top'`` rows: each day's top ``slow_k`` stats rows
-      under slow_top's total order, with slow_top's columns.
+    - ``report = 'slow_top'`` rows: each day's top ``SLOW_TOP_K`` stats
+      rows under slow_top's total order, with slow_top's columns.
 
-    Summing the counts over days, and taking the top ``slow_k`` of the
-    days' slow rows, gives each report over all those days."""
+    ``merge_reports`` turns the states of any set of days into the six
+    reports over those days."""
     spark = routed.sparkSession
     flagged = _conn_flags(routed)
     counts = (
@@ -311,14 +346,114 @@ def report_partials(routed: DataFrame, slow_k: int = 10) -> DataFrame:
         .groupBy("warc_day", "report", "dim", "key", "bucket")
         .agg(F.sum("n").alias("n"))
     )
-    day_order = Window.partitionBy("warc_day").orderBy(*_slow_order(spark))
+    day_order = Window.partitionBy("warc_day").orderBy(*_order(spark, "slow_top"))
     slow = (
         routed.where((F.col("sink") == "stats") & F.col("duration_ms").isNotNull())
         .withColumn("_rank", F.row_number().over(day_order))
-        .where(F.col("_rank") <= slow_k)
+        .where(F.col("_rank") <= SLOW_TOP_K)
         .select("warc_day", F.lit("slow_top").alias("report"), *SLOW_COLS)
     )
     return counts.unionByName(slow, allowMissingColumns=True)
+
+
+#: one day's partial state as stored: ``report_partials`` without its
+#: ``warc_day``. ``record_no`` is a long, which holds the routed table's
+#: ids whether it stores them as ints (pages) or longs (jsonlog).
+PARTIAL_SCHEMA = pa.schema(
+    [
+        ("report", pa.string()),
+        ("dim", pa.string()),
+        ("key", pa.string()),
+        ("bucket", pa.int64()),
+        ("n", pa.int64()),
+        ("duration_ms", pa.float64()),
+        ("url", pa.string()),
+        ("record_no", pa.int64()),
+        ("event_ts", pa.timestamp("us", tz="UTC")),
+        ("raw", pa.string()),
+    ]
+)
+
+#: the six stats reports and their builders
+REPORTS = {
+    "errors_top": errors_top,
+    "errors_hist": errors_hist,
+    "slow_top": slow_top,
+    "connections_totals": connections_totals,
+    "connections_by_dim": connections_by_dim,
+    "connections_buckets": connections_buckets,
+}
+
+
+def report_schemas(spark: SparkSession, source: StructType) -> dict[str, pa.Schema]:
+    """Each report's Arrow schema: its builder's output schema over rows
+    of ``source``, non-nullable columns non-nullable. Analysis only (no
+    Spark job), once per session and source schema."""
+
+    def build() -> dict[str, pa.Schema]:
+        # not createDataFrame, which makes ``spark`` the active session
+        empty = spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in source]
+        )
+        return {
+            name: to_arrow_schema(builder(empty).schema)
+            for name, builder in REPORTS.items()
+        }
+
+    return per_session(spark, ("aggregates.report_schemas", source.json()), build)
+
+
+def _summed(state: pa.Table, report: str, keys: dict[str, str]) -> pa.Table:
+    """``report``'s count rows summed over days per the state columns
+    ``keys``, renamed to the report's columns, with the sum as ``cnt``
+    (null when every summand is null, as Spark's ``sum``)."""
+    rows = state.filter(pc.equal(state["report"], report))
+    summed = rows.group_by(list(keys)).aggregate([("n", "sum")])
+    return pa.table(
+        {**{new: summed[old] for old, new in keys.items()}, "cnt": summed["n_sum"]}
+    )
+
+
+def _sorted(table: pa.Table, report: str, limit: int | None = None) -> pa.Table:
+    """``table`` in ``report``'s order (``ORDERS``), cut to ``limit`` rows."""
+    table = table.sort_by(ORDERS[report], null_placement="at_start")
+    return table if limit is None else table.slice(0, limit)
+
+
+def _bucket_report(state: pa.Table, report: str) -> pa.Table:
+    rows = _sorted(_summed(state, report, {"bucket": "bucket_epoch"}), report)
+    ts = pc.multiply(rows["bucket_epoch"], 1_000_000).cast(pa.timestamp("us"))
+    return rows.append_column("bucket_ts", ts)
+
+
+def merge_reports(
+    state: pa.Table, schemas: dict[str, pa.Schema]
+) -> dict[str, pa.Table]:
+    """The six reports over the days whose partial states ``state`` holds
+    (``PARTIAL_SCHEMA`` rows): counts summed per key, then each report's
+    order and cut as its builder gives them, cast to ``schemas``."""
+    totals = _summed(state, "connections_totals", {"dim": "dim"}).to_pydict()
+    total = dict(zip(totals["dim"], totals["cnt"]))
+    slow = state.filter(pc.equal(state["report"], "slow_top"))
+    reports = {
+        "errors_top": _sorted(
+            _summed(state, "errors_top", {"key": "message"}), "errors_top", ERRORS_TOP_N
+        ),
+        "errors_hist": _bucket_report(state, "errors_hist"),
+        "slow_top": _sorted(slow, "slow_top", SLOW_TOP_K),
+        "connections_totals": pa.Table.from_pylist(
+            [{name: total.get(name) for name in CONN_TOTALS}]
+        ),
+        "connections_by_dim": _sorted(
+            _summed(state, "connections_by_dim", {"dim": "dim", "key": "value"}),
+            "connections_by_dim",
+        ),
+        "connections_buckets": _bucket_report(state, "connections_buckets"),
+    }
+    return {
+        name: table.select(schemas[name].names).cast(schemas[name])
+        for name, table in reports.items()
+    }
 
 
 def salted_count_by(

@@ -42,6 +42,7 @@ host_bucket, the spec Iceberg's identity/days/bucket transforms give.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import time
@@ -54,13 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
     StructType,
-    TimestampNTZType,
-    TimestampType,
 )
 
 from pgweasel_spark.operators import aggregates as agg
@@ -69,39 +67,42 @@ from pgweasel_spark.operators.enrich import enrich
 from pgweasel_spark.operators.parse import parse_events
 from pgweasel_spark.plans.manifest import Manifest
 
-#: the routed table's columns in the order ``_routed`` selects them, with
-#: the types Spark reads back (sink, warc_day and host_bucket as partition
-#: discovery infers them)
-ROUTED_SCHEMA = StructType(
-    [
-        StructField(name, dtype)
-        for name, dtype in [
-            ("sink", StringType()),
-            ("url", StringType()),
-            ("url_host", StringType()),
-            ("warc_ts", TimestampNTZType()),
-            ("lang", StringType()),
-            ("record_no", IntegerType()),
-            ("raw", StringType()),
-            ("format", StringType()),
-            ("severity", StringType()),
-            ("severity_num", IntegerType()),
-            ("severity_class", StringType()),
-            ("event_ts", TimestampType()),
-            ("message", StringType()),
-            ("sqlstate", StringType()),
-            ("sqlstate_category", StringType()),
-            ("duration_ms", DoubleType()),
-            ("host", StringType()),
-            ("user", StringType()),
-            ("db", StringType()),
-            ("appname", StringType()),
-            ("warc_day", DateType()),
-            ("host_bucket", IntegerType()),
-        ]
-    ]
-)
-ROUTED_COLS = ROUTED_SCHEMA.fieldNames()
+#: the routed table's columns, in the order ``_routed`` selects them
+ROUTED_COLS = [
+    "sink",
+    "url",
+    "url_host",
+    "warc_ts",
+    "lang",
+    "record_no",
+    "raw",
+    "format",
+    "severity",
+    "severity_num",
+    "severity_class",
+    "event_ts",
+    "message",
+    "sqlstate",
+    "sqlstate_category",
+    "duration_ms",
+    "host",
+    "user",
+    "db",
+    "appname",
+    "warc_day",
+    "host_bucket",
+]
+#: the routed table's partition columns, typed as partition discovery
+#: infers them
+PARTITION_FIELDS = [
+    StructField("sink", StringType()),
+    StructField("warc_day", DateType()),
+    StructField("host_bucket", IntegerType()),
+]
+#: the footer key under which Spark's parquet writer stores the Spark
+#: schema of a file's columns
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 @dataclass
 class PipelineResult:
@@ -161,56 +162,6 @@ STATS_SINKS = ("errors", "stats")
 #: the one file of each stats report and of each day's partial state
 PART_FILE = "part-00000.parquet"
 
-#: one day's partial state (``aggregates.report_partials`` without its
-#: ``warc_day``): count rows, then that day's top slow rows
-PARTIAL_SCHEMA = pa.schema(
-    [
-        ("report", pa.string()),
-        ("dim", pa.string()),
-        ("key", pa.string()),
-        ("bucket", pa.int64()),
-        ("n", pa.int64()),
-        ("duration_ms", pa.float64()),
-        ("url", pa.string()),
-        ("record_no", pa.int32()),
-        ("event_ts", pa.timestamp("us", tz="UTC")),
-        ("raw", pa.string()),
-    ]
-)
-
-_COUNT = pa.field("cnt", pa.int64(), nullable=False)
-_BUCKETS = pa.schema(
-    [("bucket_epoch", pa.int64()), _COUNT, ("bucket_ts", pa.timestamp("us"))]
-)
-#: each report's schema as Spark's ``coalesce(1).write.parquet`` of the
-#: ``aggregates`` builder writes it: non-nullable columns are ``required``
-REPORT_SCHEMAS = {
-    "errors_top": pa.schema([("message", pa.string()), _COUNT]),
-    "errors_hist": _BUCKETS,
-    "slow_top": pa.schema(
-        [
-            ("duration_ms", pa.float64()),
-            ("url", pa.string()),
-            ("record_no", pa.int32()),
-            ("event_ts", pa.timestamp("us")),
-            ("raw", pa.string()),
-        ]
-    ),
-    "connections_totals": pa.schema(
-        [(name, pa.int64()) for name in agg.CONN_TOTALS]
-    ),
-    "connections_by_dim": pa.schema(
-        [
-            pa.field("dim", pa.string(), nullable=False),
-            pa.field("value", pa.string(), nullable=False),
-            ("cnt", pa.int64()),
-        ]
-    ),
-    "connections_buckets": _BUCKETS,
-}
-ERRORS_TOP_N = 20
-SLOW_TOP_K = 10
-
 
 def _partial_dir(out_root: str, day: str) -> str:
     return os.path.join(out_root, "stats_partial", f"warc_day={day}")
@@ -233,11 +184,32 @@ def _replace_file(table: pa.Table, directory: str, **write_opts) -> None:
             os.remove(entry.path)
 
 
+def routed_schema(routed_path: str, dirs: list[str] = ()) -> StructType | None:
+    """The routed table's schema as Spark reads it back, from one data
+    file's footer (the first under ``dirs``, else any under
+    ``routed_path``): its data columns as written, all nullable, then
+    ``PARTITION_FIELDS``. The types depend on the input: pages store
+    ``record_no`` as an int and ``warc_ts`` as a timestamp without time
+    zone; jsonlog stores a long and a session-zone timestamp. None when
+    the table has no file."""
+    for top in [*dirs, routed_path]:
+        pattern = os.path.join(glob.escape(top), "**", "*.parquet")
+        path = next(glob.iglob(pattern, recursive=True), None)
+        if path is not None:
+            written = StructType.fromJson(
+                json.loads(pq.read_metadata(path).metadata[SPARK_SCHEMA_KEY])
+            )
+            data = [StructField(f.name, f.dataType) for f in written]
+            return StructType(data + PARTITION_FIELDS)
+    return None
+
+
 def read_stats_days(
     spark: SparkSession, routed_path: str, days: list[str]
 ) -> DataFrame | None:
-    """The errors and stats rows of ``days`` in the routed table, read with
-    its known schema from those days' partition directories only; None
+    """The errors and stats rows of ``days`` in the routed table, read
+    from those days' partition directories only, with the schema in their
+    footers (``routed_schema``), so no schema-inference job runs; None
     when the days have none."""
     dirs = [
         path
@@ -248,71 +220,10 @@ def read_stats_days(
     if not dirs:
         return None
     return (
-        spark.read.schema(ROUTED_SCHEMA)
+        spark.read.schema(routed_schema(routed_path, dirs))
         .option("basePath", routed_path)
         .parquet(*dirs)
     )
-
-
-def _sorted(table: pa.Table, keys: list[tuple[str, str]]) -> pa.Table:
-    """``table`` in Spark's order for ``keys``: nulls first. (Every
-    descending key here is a count or a duration, never null.)"""
-    return table.sort_by(keys, null_placement="at_start")
-
-
-def _summed(state: pa.Table, report: str, keys: list[str]) -> pa.Table:
-    """``report``'s count rows summed over days per ``keys`` (column
-    ``n_sum``; null when every summand is null, as Spark's ``sum``)."""
-    rows = state.filter(pc.equal(state["report"], report))
-    return rows.group_by(keys).aggregate([("n", "sum")])
-
-
-def _bucket_report(state: pa.Table, report: str) -> pa.Table:
-    rows = _sorted(_summed(state, report, ["bucket"]), [("bucket", "ascending")])
-    epoch = rows["bucket"]
-    ts = pc.multiply(epoch, 1_000_000).cast(pa.timestamp("us"))
-    return pa.Table.from_arrays([epoch, rows["n_sum"], ts], schema=_BUCKETS)
-
-
-def _merge_reports(state: pa.Table) -> dict[str, pa.Table]:
-    """The six reports from the partial states of the days they cover:
-    counts summed per key, then each report's top-N / order as its
-    ``aggregates`` builder gives it."""
-    top = _sorted(
-        _summed(state, "errors_top", ["key"]),
-        [("n_sum", "descending"), ("key", "ascending")],
-    ).slice(0, ERRORS_TOP_N)
-    slow = _sorted(
-        state.filter(pc.equal(state["report"], "slow_top")),
-        [
-            ("duration_ms", "descending"),
-            ("url", "ascending"),
-            ("record_no", "ascending"),
-        ],
-    ).slice(0, SLOW_TOP_K)
-    totals = _summed(state, "connections_totals", ["dim"]).to_pydict()
-    total = dict(zip(totals["dim"], totals["n_sum"]))
-    by_dim = _sorted(
-        _summed(state, "connections_by_dim", ["dim", "key"]),
-        [("dim", "ascending"), ("n_sum", "descending"), ("key", "ascending")],
-    )
-    schemas = REPORT_SCHEMAS
-    return {
-        "errors_top": pa.Table.from_arrays(
-            [top["key"], top["n_sum"]], schema=schemas["errors_top"]
-        ),
-        "errors_hist": _bucket_report(state, "errors_hist"),
-        "slow_top": slow.select(agg.SLOW_COLS).cast(schemas["slow_top"]),
-        "connections_totals": pa.Table.from_pylist(
-            [{name: total.get(name) for name in agg.CONN_TOTALS}],
-            schema=schemas["connections_totals"],
-        ),
-        "connections_by_dim": pa.Table.from_arrays(
-            [by_dim["dim"], by_dim["key"], by_dim["n_sum"]],
-            schema=schemas["connections_by_dim"],
-        ),
-        "connections_buckets": _bucket_report(state, "connections_buckets"),
-    }
 
 
 def write_stats(
@@ -329,35 +240,43 @@ def write_stats(
        days found in ``routed``. ``routed`` may be None when every day is
        empty.
     2. The driver merges every day's state under ``stats_partial`` into
-       the six reports and writes each as one parquet file
-       ``<out_root>/stats/<name>/``, with the schema Spark's writer gave
-       it (INT96 timestamps, no Arrow schema). Assumes a local
-       ``out_root``, like the manifest."""
+       the six reports (``aggregates.merge_reports``), typed as their
+       builders type them over the routed table, and writes each as one
+       parquet file ``<out_root>/stats/<name>/`` as Spark's writer would
+       (INT96 timestamps, no Arrow schema). When nothing was ever routed
+       there is no schema to type them with, and no report is written.
+       Assumes a local ``out_root``, like the manifest."""
+    spark = SparkSession.active() if routed is None else routed.sparkSession
     if routed is None:
-        state = PARTIAL_SCHEMA.empty_table().append_column(
+        state = agg.PARTIAL_SCHEMA.empty_table().append_column(
             "warc_day", pa.array([], pa.date32())
         )
+        source = routed_schema(os.path.join(out_root, "routed"))
     else:
         routed = routed.where(F.col("sink").isin(*STATS_SINKS))
-        state = agg.report_partials(routed, slow_k=SLOW_TOP_K).toArrow()
+        state = agg.report_partials(routed).toArrow()
+        source = routed.schema
     state_days = state["warc_day"].cast(pa.string())
     if days is None:
         days = sorted(set(state_days.to_pylist()))
     for day in days:
         day_state = state.filter(pc.equal(state_days, day))
         _replace_file(
-            day_state.select(PARTIAL_SCHEMA.names).cast(PARTIAL_SCHEMA),
+            day_state.select(agg.PARTIAL_SCHEMA.names).cast(agg.PARTIAL_SCHEMA),
             _partial_dir(out_root, day),
         )
+    if source is None:
+        return
 
     parts = glob.glob(
         os.path.join(glob.escape(out_root), "stats_partial", "warc_day=*", PART_FILE)
     )
     merged = pa.concat_tables(
-        [PARTIAL_SCHEMA.empty_table()]
-        + [pq.read_table(p, schema=PARTIAL_SCHEMA) for p in sorted(parts)]
+        [agg.PARTIAL_SCHEMA.empty_table()]
+        + [pq.read_table(p, schema=agg.PARTIAL_SCHEMA) for p in sorted(parts)]
     )
-    for name, table in _merge_reports(merged).items():
+    schemas = agg.report_schemas(spark, source)
+    for name, table in agg.merge_reports(merged, schemas).items():
         _replace_file(
             table,
             os.path.join(out_root, "stats", name),

@@ -10,11 +10,52 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from pgweasel_spark import grammar
 from pgweasel_spark.operators import aggregates as agg
 from pgweasel_spark.plans import pipeline
 from pgweasel_spark.plans.manifest import Manifest
+
+#: the routed table of generated pages, as Spark reads it back
+ROUTED_SCHEMA = StructType(
+    [
+        StructField(name, dtype)
+        for name, dtype in [
+            ("sink", StringType()),
+            ("url", StringType()),
+            ("url_host", StringType()),
+            ("warc_ts", TimestampNTZType()),
+            ("lang", StringType()),
+            ("record_no", IntegerType()),
+            ("raw", StringType()),
+            ("format", StringType()),
+            ("severity", StringType()),
+            ("severity_num", IntegerType()),
+            ("severity_class", StringType()),
+            ("event_ts", TimestampType()),
+            ("message", StringType()),
+            ("sqlstate", StringType()),
+            ("sqlstate_category", StringType()),
+            ("duration_ms", DoubleType()),
+            ("host", StringType()),
+            ("user", StringType()),
+            ("db", StringType()),
+            ("appname", StringType()),
+            ("warc_day", DateType()),
+            ("host_bucket", IntegerType()),
+        ]
+    ]
+)
 
 STATS_REPORTS = [
     "errors_top",
@@ -394,15 +435,22 @@ def test_manifest_counts_equal_written_table(
     assert calls == 7  # one call per generated warc_day
 
 
+def _types(schema):
+    return {f.name: f.dataType for f in schema}
+
+
 def test_routed_schema_is_the_written_schema(spark, generated_pages_dir, tmp_path):
-    """The schema the stats pass reads the routed table with is the one
-    Spark infers from the written table."""
+    """The schema the stats pass reads the routed table with, taken from
+    the footers, is the one Spark infers from the written table; for
+    generated pages that is ``ROUTED_SCHEMA``, the rows the merge edge
+    cases write."""
     out = str(tmp_path / "out")
+    routed = os.path.join(out, "routed")
+    assert pipeline.routed_schema(routed) is None
     pipeline.run(spark, generated_pages_dir, out, day_batch=1, with_stats=False)
-    inferred = spark.read.parquet(os.path.join(out, "routed")).schema
-    assert {f.name: f.dataType for f in inferred} == {
-        f.name: f.dataType for f in pipeline.ROUTED_SCHEMA
-    }
+    inferred = spark.read.parquet(routed).schema
+    assert _types(pipeline.routed_schema(routed)) == _types(inferred)
+    assert _types(ROUTED_SCHEMA) == _types(inferred)
 
 
 def _builder_reports(spark, out):
@@ -531,9 +579,65 @@ def test_no_stats_days_stay_in_reports(spark, generated_pages_dir, tmp_path):
     _assert_reports_equal_builders(spark, out)
 
 
+def test_jsonlog_stats_equal_builders(spark, tmp_path):
+    """A jsonlog input routed with stats, one day per call. Its routed
+    table stores ``record_no`` as a long (``monotonically_increasing_id``,
+    past 2**31 from the second input split on) and ``warc_ts`` as a
+    session-zone timestamp; after every call the merged reports still
+    equal their builders over the whole written routed table."""
+    import json
+
+    lines = []
+    for day in (3, 4):
+        for i in range(30):
+            base = {
+                "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
+                "user": "u",
+                "dbname": "d",
+                "application_name": "a",
+                "remote_host": "h",
+                "process_id": i,
+            }
+            lines += [
+                {**base, "error_severity": "ERROR", "state_code": "22012",
+                 "message": f"division by zero {i % 3}"},
+                {**base, "error_severity": "LOG",
+                 "message": f"duration: {4000 + 10 * i + day}.5 ms  statement: select {i}"},
+                {**base, "error_severity": "LOG",
+                 "message": f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"},
+                {**base, "error_severity": "LOG",
+                 "message": f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"},
+            ]
+    jdir = tmp_path / "jl"
+    jdir.mkdir()
+    (jdir / "pg.json").write_text("\n".join(json.dumps(r) for r in lines) + "\n")
+
+    out = str(tmp_path / "out")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")  # several input splits, so several id ranges
+    try:
+        for want in (["2025-06-03"], ["2025-06-04"], []):
+            res = pipeline.run(
+                spark, str(jdir), out, day_batch=1, input_format="jsonlog"
+            )
+            assert res.days_processed == want
+            _assert_reports_equal_builders(spark, out, str(tmp_path / "oracle"))
+    finally:
+        spark.conf.set(key, old)
+    routed = spark.read.parquet(os.path.join(out, "routed"))
+    assert dict(routed.dtypes)["record_no"] == "bigint"
+    assert _types(pipeline.routed_schema(os.path.join(out, "routed"))) == _types(
+        routed.schema
+    )
+    slow = pq.read_table(os.path.join(out, "stats", "slow_top"))
+    assert slow.schema.field("record_no").type == pa.int64()
+    assert max(slow["record_no"].to_pylist()) > 2**31
+
+
 def _routed_row(day, sink, n, **cols):
     """One routed row of ``day`` (an int: 2025-06-<day>) in ``sink``."""
-    row = {f.name: None for f in pipeline.ROUTED_SCHEMA}
+    row = {f.name: None for f in ROUTED_SCHEMA}
     row.update(
         sink=sink,
         url=f"http://h{n % 3}/{day}",
@@ -622,7 +726,7 @@ def test_merged_reports_edge_cases(spark, tmp_path, case):
         for day in day_strs:
             for part in glob.glob(os.path.join(routed, "sink=*", f"warc_day={day}")):
                 shutil.rmtree(part)
-        spark.createDataFrame(rows, pipeline.ROUTED_SCHEMA).write.mode(
+        spark.createDataFrame(rows, ROUTED_SCHEMA).write.mode(
             "overwrite"
         ).partitionBy("sink", "warc_day", "host_bucket").parquet(routed)
         pipeline.write_stats(
