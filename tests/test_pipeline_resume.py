@@ -587,27 +587,26 @@ def test_jsonlog_stats_equal_builders(spark, tmp_path):
     equal their builders over the whole written routed table."""
     import json
 
-    lines = []
-    for day in (3, 4):
-        for i in range(30):
-            base = {
-                "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
-                "user": "u",
-                "dbname": "d",
-                "application_name": "a",
-                "remote_host": "h",
-                "process_id": i,
-            }
-            lines += [
-                {**base, "error_severity": "ERROR", "state_code": "22012",
-                 "message": f"division by zero {i % 3}"},
-                {**base, "error_severity": "LOG",
-                 "message": f"duration: {4000 + 10 * i + day}.5 ms  statement: select {i}"},
-                {**base, "error_severity": "LOG",
-                 "message": f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"},
-                {**base, "error_severity": "LOG",
-                 "message": f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"},
-            ]
+    lines = [
+        {
+            "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
+            "error_severity": severity,
+            "message": message,
+            "user": "u",
+            "dbname": "d",
+            "application_name": "a",
+            "remote_host": "h",
+            "process_id": i,
+        }
+        for day in (3, 4)
+        for i in range(30)
+        for severity, message in [
+            ("ERROR", f"division by zero {i % 3}"),
+            ("LOG", f"duration: {4000 + 10 * i + day}.5 ms  statement: select {i}"),
+            ("LOG", f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"),
+            ("LOG", f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"),
+        ]
+    ]
     jdir = tmp_path / "jl"
     jdir.mkdir()
     (jdir / "pg.json").write_text("\n".join(json.dumps(r) for r in lines) + "\n")
