@@ -26,6 +26,9 @@ Scale notes (the 1000-executor / 100 TB story):
   (day, message, bucket, dim value) are low-cardinality relative to
   input, so partial aggregation collapses them map-side, and its per-day
   top-K, which a partial window group limit cuts map-side.
+- not yet scaled out: the stats merge runs on the driver and holds every
+  day's partial state, one row per distinct (day, key), so it grows with
+  history × distinct messages and hosts a day (ARCHITECTURE.md).
 - sinks are partitioned by warc_day + url-host hash bucket; a skewed host
   cannot skew a *file* beyond its bucket, and AQE handles residual skew.
 - resume: each day batch is idempotent (dynamic partition overwrite); the
