@@ -9,6 +9,7 @@ over a webtext parquet/Iceberg table instead of log files.
     python -m pgweasel_spark.cli system       --input DIR
     python -m pgweasel_spark.cli connections  --input DIR
     python -m pgweasel_spark.cli run          --input DIR --out DIR   (full pipeline)
+    python -m pgweasel_spark.cli stream       --input DIR --out DIR   (route the files new since the last stream call)
 
 Aliases follow the reference grammar (src/cli.rs:7-97): errors/error/err,
 locks/loc/lock/deadlock(s), connections/conns/conn, system/sys/pg.
@@ -108,18 +109,22 @@ _ALIASES = {
 }
 
 
+def _input_format(path: str) -> str:
+    """S8 jsonlog for a ``.json``/``.jsonl`` path, gzipped or not; else
+    a parquet webtext table. The reference exits with
+    JsonNotYetImplemented (src/error.rs:34) on .json inputs; here the
+    native NDJSON reader serves the identical event schema, so every
+    subcommand works unchanged. Compressed twins route the same way —
+    the text reader decodes .gz by codec, so pg.json.gz must not fall
+    through to the parquet reader."""
+    jsonlog = path.rstrip("/").endswith((".json", ".jsonl", ".json.gz", ".jsonl.gz"))
+    return "jsonlog" if jsonlog else "parquet"
+
+
 def _base_events(args):
     spark = get_spark("pgweasel-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    if args.input.rstrip("/").endswith(
-        (".json", ".jsonl", ".json.gz", ".jsonl.gz")
-    ):
-        # S8 jsonlog: the reference exits with JsonNotYetImplemented
-        # (src/error.rs:34) on .json inputs; here the native NDJSON
-        # reader serves the identical event schema, so every subcommand
-        # works unchanged. Compressed twins route the same way — the
-        # text reader decodes .gz by codec, so pg.json.gz must not fall
-        # through to the parquet reader (judge r4 wrong-item #2).
+    if _input_format(args.input) == "jsonlog":
         from pgweasel_spark.sources.webtext import read_jsonlog
 
         pages = None
@@ -164,7 +169,7 @@ def main(argv=None):
     ap.add_argument("command")
     ap.add_argument("subcommand", nargs="?", default=None)
     ap.add_argument("--input", required=True, help="webtext parquet dir")
-    ap.add_argument("--out", help="output root (run command)")
+    ap.add_argument("--out", help="output root (run and stream commands)")
     ap.add_argument(
         "--debug", "-d", action="store_true",
         help="verbose: print processing counts/timing to stderr",
@@ -192,25 +197,30 @@ def main(argv=None):
 
     cmd = _ALIASES.get(args.command, args.command)
 
-    if cmd == "run":
+    if cmd in ("run", "stream"):
         from pgweasel_spark.plans import pipeline
+        from pgweasel_spark.streaming import stream
 
+        if args.out is None:
+            ap.error(f"{cmd} needs --out")
         spark = get_spark("pgweasel-cli")
         spark.sparkContext.setLogLevel("ERROR")
         # jsonlog inputs route through the same resumable day-batched
         # writer (events batch on their own timestamps)
-        fmt = (
-            "jsonlog"
-            if args.input.rstrip("/").endswith(
-                (".json", ".jsonl", ".json.gz", ".jsonl.gz")
+        fmt = _input_format(args.input)
+        if cmd == "run":
+            results = [pipeline.run(spark, args.input, args.out, input_format=fmt)]
+        else:
+            results = stream.run_available_now(
+                spark, args.input, args.out, input_format=fmt
             )
-            else "parquet"
-        )
-        res = pipeline.run(spark, args.input, args.out, input_format=fmt)
-        print(
-            f"processed days={res.days_processed} skipped={res.days_skipped} "
-            f"sink_counts={res.sink_counts} in {res.elapsed_s:.1f}s"
-        )
+            if not results:
+                print("no new input files")
+        for res in results:
+            print(
+                f"processed days={res.days_processed} skipped={res.days_skipped} "
+                f"sink_counts={res.sink_counts} in {res.elapsed_s:.1f}s"
+            )
         return
 
     spark, ev = _base_events(args)

@@ -506,24 +506,20 @@ def value_percentiles(
     value_col: str,
     group_cols: list[str],
     ps: tuple[float, ...] = (0.5, 0.95, 0.99),
-    exact: bool = True,
 ) -> DataFrame:
     """Per-group percentiles of a numeric column — the p95/p99 latency
     report every slow-query analysis ends with (A3 gives the top-N tail;
     this gives the distribution).
 
-    ``exact=True`` uses Spark's exact ``percentile`` (linear
-    interpolation at rank p·(n-1) — the same definition as ANSI
-    PERCENTILE_CONT / DuckDB quantile_cont, so the result is
-    value-checkable cross-engine). Exact percentile buffers each group's
-    values on the reducer: fine for bounded per-group cardinality. At
-    10^12 rows per group use ``exact=False`` → ``approx_percentile``
-    (t-digest, bounded memory, mergeable partial aggregation) — the
-    scale path, deliberately NOT the oracle path because the sketch is
-    engine-specific."""
-    fn = "percentile" if exact else "approx_percentile"
+    Spark's exact ``percentile`` (linear interpolation at rank p·(n-1) —
+    the same definition as ANSI PERCENTILE_CONT / DuckDB quantile_cont,
+    so the result is value-checkable cross-engine). It buffers each
+    group's values on the reducer: fine for bounded per-group
+    cardinality. At 10^12 rows per group ``approx_percentile`` (t-digest,
+    bounded memory, mergeable partial aggregation) is the scale path, not
+    the oracle path, because the sketch is engine-specific."""
     arr = ", ".join(f"{p}D" for p in ps)
-    pexp = F.expr(f"{fn}({value_col}, array({arr}))")
+    pexp = F.expr(f"percentile({value_col}, array({arr}))")
     cols = [
         F.round(pexp.getItem(i), 6).alias(f"p{int(p * 100)}")
         for i, p in enumerate(ps)

@@ -4,12 +4,12 @@ Stage 1 (record split — R1/R3 in SURVEY.md §2.2, the per-page equivalent
 of /root/reference/src/output_results/mod.rs:95-121) has two byte-identical
 implementations, locked to each other by test:
 
-- ``split_pages_sql`` (pipeline default): pure JVM ``split`` on a
-  zero-width record-start lookahead + ``posexplode`` — whole-stage
+- ``split_pages_sql`` (what ``parse_events`` runs): pure JVM ``split``
+  on a zero-width record-start lookahead + ``posexplode`` — whole-stage
   codegen, no Python anywhere.
 - ``split_pages``: Arrow-batched ``mapInPandas`` over the pure-Python
   kernel (grammar.split_records) — a single compiled-regex pass per page,
-  no per-line Python.
+  no per-line Python. The R3 record-assembly query runs it.
 
 Records never span pages so there is no cross-row state and the stage is
 embarrassingly parallel — no shuffle either way.
@@ -157,16 +157,10 @@ def with_extracted(events: DataFrame) -> DataFrame:
     return events
 
 
-def parse_events(pages: DataFrame, splitter: str = "sql") -> DataFrame:
+def parse_events(pages: DataFrame) -> DataFrame:
     """webtext pages → fully parsed events (the pipeline spine's map side:
-    scan → split → extract, zero shuffles).
-
-    ``splitter='sql'`` (default) keeps the record split inside whole-stage
-    codegen — measured ~3.5x faster than the mapInPandas path at local[32]
-    because the corpus never crosses the JVM↔Python Arrow boundary.
-    ``splitter='pandas'`` selects the vectorized-kernel path; a test pins
-    the two byte-identical on every fixture."""
-    split = split_pages_sql if splitter == "sql" else split_pages
-    return with_extracted(split(pages))
-
-
+    scan → split → extract, zero shuffles). The record split is
+    ``split_pages_sql``, inside whole-stage codegen — measured ~3.5x
+    faster than the mapInPandas ``split_pages`` at local[32] because the
+    corpus never crosses the JVM↔Python Arrow boundary."""
+    return with_extracted(split_pages_sql(pages))

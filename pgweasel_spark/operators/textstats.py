@@ -575,9 +575,10 @@ def quantile_quality_gate(
 
     Scale shape: one partial-aggregated groupBy computes a single
     threshold row per group (Spark's exact ``percentile`` — the ANSI
-    PERCENTILE_CONT definition, cross-engine checkable; swap
-    ``approx_percentile`` for unbounded group cardinality, same trade
-    as aggregates.value_percentiles), then an explicitly-broadcast join
+    PERCENTILE_CONT definition, cross-engine checkable; it buffers each
+    group's scores, the trade aggregates.value_percentiles describes,
+    and ``approx_percentile`` is the scale path for unbounded group
+    cardinality), then an explicitly-broadcast join
     tags every doc — the corpus side stays map-only, no second
     shuffle."""
     th = df.groupBy(group_col).agg(

@@ -31,7 +31,8 @@ Scale notes (the 1000-executor / 100 TB story):
   history × distinct messages and hosts a day (ARCHITECTURE.md).
 - sinks are partitioned by warc_day + url-host hash bucket; a skewed host
   cannot skew a *file* beyond its bucket, and AQE handles residual skew.
-- resume: each day batch is idempotent (dynamic partition overwrite); the
+- resume: each day batch is idempotent (its days' old partitions are
+  deleted, then written with dynamic partition overwrite); the
   manifest records completion + per-partition and per-sink counts
   (plans/manifest.py), only after the batch's partial stats state and
   the stats tables are written.
@@ -54,7 +55,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
@@ -288,6 +289,41 @@ def write_stats(
         )
 
 
+def _warc_day() -> Column:
+    """The ``yyyy-MM-dd`` day of ``warc_ts``: the manifest's day key."""
+    return F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd")
+
+
+def read_input(
+    spark: SparkSession, paths: list[str], input_format: str = "parquet"
+) -> DataFrame:
+    """The rows ``run`` routes from the files or directories ``paths``:
+    webtext pages, or for ``"jsonlog"`` the parsed events of a raw
+    PostgreSQL jsonlog input (``read_jsonlog``). jsonlog lines carry no
+    crawl timestamp, so their ``warc_ts`` (day partitioning and resume
+    granularity) is the event's own timestamp; a malformed line (null
+    ``event_ts`` after quarantine) takes the 1970-01-01 sentinel day
+    rather than being dropped, so routed-row equality with the source
+    holds."""
+    if input_format == "jsonlog":
+        from pgweasel_spark.sources.webtext import read_jsonlog
+
+        return read_jsonlog(spark, paths).withColumn(
+            "warc_ts",
+            F.coalesce(
+                F.col("event_ts"), F.lit("1970-01-01").cast("timestamp")
+            ),
+        )
+    return spark.read.parquet(*paths)
+
+
+def input_days(rows: DataFrame) -> list[str]:
+    """The sorted days of ``rows``' ``warc_ts`` (one Spark job)."""
+    return sorted(
+        r["d"] for r in rows.select(_warc_day().alias("d")).distinct().collect()
+    )
+
+
 def run(
     spark: SparkSession,
     input_path: str,
@@ -304,37 +340,21 @@ def run(
     single write job.
 
     ``input_format="jsonlog"`` routes a raw PostgreSQL jsonlog directory
-    (NDJSON, optionally .gz) through the identical day-batched writer:
-    ``read_jsonlog`` already emits the parse_events schema, so the only
-    adaptation is the batching timestamp — jsonlog lines carry no crawl
-    timestamp, so ``warc_ts`` (day partitioning + resume granularity)
-    is the event's own timestamp. Malformed lines (null event_ts after
-    quarantine) batch under the 1970-01-01 sentinel day rather than
-    being silently dropped — routed-row equality with the source holds.
+    (NDJSON, optionally .gz) through the identical day-batched writer,
+    batched on the events' own timestamps (``read_input``).
+
+    A pending day's old ``sink=*/warc_day=<d>`` directories are deleted
+    before the write: dynamic partition overwrite replaces only the
+    partitions the new output writes, so a day re-opened in the manifest
+    (``streaming.stream.run_available_now``) would otherwise keep the
+    sinks its new routing no longer writes.
     """
     t0 = time.time()
     manifest = Manifest.load(os.path.join(out_root, "manifest.json"))
     manifest.meta.setdefault("input_path", input_path)
 
-    if input_format == "jsonlog":
-        from pgweasel_spark.sources.webtext import read_jsonlog
-
-        pages = read_jsonlog(spark, input_path).withColumn(
-            "warc_ts",
-            F.coalesce(
-                F.col("event_ts"), F.lit("1970-01-01").cast("timestamp")
-            ),
-        )
-    else:
-        pages = spark.read.parquet(input_path)
-    all_days = sorted(
-        r["d"]
-        for r in pages.select(
-            F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd").alias("d")
-        )
-        .distinct()
-        .collect()
-    )
+    pages = read_input(spark, [input_path], input_format)
+    all_days = input_days(pages)
     done = manifest.completed_days()
     pending = [d for d in all_days if d not in done]
     if day_batch is not None:
@@ -346,8 +366,8 @@ def run(
     if pending:
         from pyspark.sql import Observation
 
-        day_col = F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd")
-        batch_pages = pages.where(day_col.isin(pending))
+        day = _warc_day()
+        batch_pages = pages.where(day.isin(pending))
         events = enrich(
             batch_pages
             if input_format == "jsonlog"
@@ -359,15 +379,17 @@ def run(
         # sinks only keep a filtered subset of parsed records. One
         # conditional count per pending day (bounded by the day batch).
         obs = Observation("parsed")
-        ev_day = F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd")
         events = events.observe(
             obs,
             *[
-                F.count(F.when(ev_day == d, 1)).alias(f"d{i}")
+                F.count(F.when(day == d, 1)).alias(f"d{i}")
                 for i, d in enumerate(pending)
             ],
         )
         routed = _routed(events, slow_threshold_ms)
+        for d in pending:
+            for _, day_dir in _day_dirs(routed_path, d):
+                shutil.rmtree(day_dir)
         (
             routed.write.mode("overwrite")
             .partitionBy("sink", "warc_day", "host_bucket")

@@ -118,55 +118,46 @@ JSONLOG_SCHEMA = (
 )
 
 
-def read_jsonlog(spark: SparkSession, path: str) -> DataFrame:
+def read_jsonlog(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """S8 jsonlog — REAL here although the reference never implemented
     it (Error::JsonNotYetImplemented, src/error.rs:34; the CLI exits on
     .json inputs). Reads PostgreSQL jsonlog (NDJSON, one object per
     line — records never span lines, so no lookahead splitter is
-    needed) and emits the SAME parsed-event schema ``parse_events``
-    produces from stderr/csvlog pages, so every downstream operator
-    (route, aggregates, CLI reports) works unchanged.
+    needed) from a file, a directory or a list of them, and emits the
+    SAME parsed-event schema ``parse_events`` produces from
+    stderr/csvlog pages, so every downstream operator (route,
+    aggregates, CLI reports) works unchanged. ``pipeline.read_input``
+    reads jsonlog through it for ``pipeline.run`` and for the
+    incremental ``streaming.stream.run_available_now``.
 
     Spark-first shape: lines via the native text source (splittable,
-    predicate-pushdown-capable), then :func:`jsonlog_events` —
-    ``from_json`` + field projection all JVM-side inside whole-stage
-    codegen; the corpus never crosses into Python. ``raw`` keeps the
-    original line for CLI printing and the kv/duration extractors;
-    severity reuses the stderr ordinal map (Panic→0 quirk included)
-    and the timestamp reuses the 3-token parser, so jsonlog events
-    route and aggregate bit-identically to their stderr twins
-    (asserted by test_jsonlog_matches_stderr_twin).
+    predicate-pushdown-capable), then ``from_json`` + field projection
+    all JVM-side inside whole-stage codegen; the corpus never crosses
+    into Python. ``raw`` keeps the original line for CLI printing and
+    the kv/duration extractors; severity reuses the stderr ordinal map
+    (Panic→0 quirk included) and the timestamp reuses the 3-token
+    parser, so jsonlog events route and aggregate bit-identically to
+    their stderr twins (asserted by test_jsonlog_source_matches_stderr_twin).
+    ``record_no`` is a file-order surrogate
+    (``monotonically_increasing_id``: input split and row position), so
+    its values depend on the set of files read together; jsonlog lines
+    carry their own timestamps, and only ``slow_top``'s last tie-break
+    reads it.
     """
-    lines = spark.read.text(path).select(
-        F.col("value").alias("raw"),
-        F.input_file_name().alias("url"),
-    )
-    # file-order surrogate; jsonlog lines carry their own timestamps
-    # so nothing downstream orders by record_no
-    return jsonlog_events(lines, F.monotonically_increasing_id())
-
-
-def jsonlog_events(lines: DataFrame, record_no) -> DataFrame:
-    """The shared jsonlog projection: (raw, url) lines → parsed-event
-    rows, everything JVM (``from_json`` + field projection in
-    whole-stage codegen). Used by both the batch reader and the
-    streaming source (``streaming.stream.read_jsonlog_stream``, which
-    passes a null ``record_no`` — ``monotonically_increasing_id`` is
-    unsupported on streaming frames, and nothing downstream orders by
-    the surrogate)."""
     from pgweasel_spark.functions import extract as X
 
-    j = F.from_json(F.col("raw"), JSONLOG_SCHEMA)
+    j = F.from_json(F.col("value"), JSONLOG_SCHEMA)
     sev = F.lower(j["error_severity"])
     msg = j["message"]
     return (
-        lines.where(F.length("raw") > 0)
+        spark.read.text(path)
+        .where(F.length("value") > 0)
         .select(
-            "url",
+            F.input_file_name().alias("url"),
             F.lit(None).cast("timestamp").alias("warc_ts"),
             F.lit(None).cast("string").alias("lang"),
-            record_no.alias("record_no"),
-            "raw",
+            F.monotonically_increasing_id().alias("record_no"),
+            F.col("value").alias("raw"),
             F.lit("json").alias("format"),
             sev.alias("severity"),
             X.severity_num(sev).alias("severity_num"),

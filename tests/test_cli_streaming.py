@@ -1,9 +1,13 @@
 """CLI veneer + Structured Streaming incremental variant."""
 
+import ast
 import io
 import os
+import re
+import time
 from contextlib import redirect_stdout
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 
@@ -107,76 +111,170 @@ def test_cli_stats_reports_all_sections(spark, generated_pages_dir):
     assert "Connections by time bucket:" in out
 
 
-def test_streaming_available_now(spark, generated_pages_dir, tmp_path):
-    from pyspark.sql import functions as F
+def _pipeline_output(spark, out, drop=()):
+    """An output's routed rows (sorted), its six stats reports (rows in
+    file order) and each manifest day's lineage, without the columns
+    ``drop``."""
+    import pyarrow.parquet as pq
 
-    from pgweasel_spark.streaming import stream
+    from pgweasel_spark.plans.manifest import Manifest
+    from tests.test_pipeline_resume import STATS_REPORTS
 
-    out = str(tmp_path / "stream_out")
-    stream.run_available_now(spark, generated_pages_dir, out)
-    routed = spark.read.parquet(os.path.join(out, "routed_stream"))
-    n1 = routed.count()
-    assert n1 > 0
-    sinks = {r["sink"] for r in routed.select("sink").distinct().collect()}
-    assert {"errors", "slow", "locks", "system", "stats"} <= sinks
-
-    # second availableNow run: no new files → no new rows (exactly-once)
-    stream.run_available_now(spark, generated_pages_dir, out)
-    assert spark.read.parquet(os.path.join(out, "routed_stream")).count() == n1
-
-    # batch and stream route identically
-    from pgweasel_spark.operators import route as R
-    from pgweasel_spark.operators.parse import parse_events
-
-    batch = R.explode_sinks(
-        R.sink_flags(parse_events(spark.read.parquet(generated_pages_dir)))
-    )
-    assert batch.count() == n1
-
-
-def test_streaming_batch_metrics_lineage(spark, generated_pages_dir, tmp_path):
-    """with_metrics=True writes one JSONL lineage row per micro-batch
-    (batch id, input rows, per-sink observed counts collected during
-    the write) whose sink totals equal the written routed table — the
-    streaming twin of the batch manifest."""
-    import json
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pgweasel_spark.streaming import stream
-
-    out = str(tmp_path / "stream_metrics_out")
-    stream.run_available_now(spark, generated_pages_dir, out, with_metrics=True)
-
-    mpath = os.path.join(out, "stream_metrics.jsonl")
-    rows = []
-    for _ in range(20):  # listener delivery is async
-        if os.path.exists(mpath):
-            rows = [
-                json.loads(l)
-                for l in open(mpath).read().splitlines()
-                if l.strip()
-            ]
-            if rows and all(r["sink_counts"] for r in rows):
-                break
-        time.sleep(0.5)
-    assert rows, "no metrics rows written"
-    assert all(r["sink_counts"] is not None for r in rows)
-
-    routed = spark.read.parquet(os.path.join(out, "routed_stream"))
-    written = {
-        r["sink"]: r["cnt"]
-        for r in routed.groupBy("sink")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+    routed = spark.read.parquet(os.path.join(out, "routed")).drop(*drop)
+    reports = {}
+    for t in STATS_REPORTS:
+        table = pq.read_table(os.path.join(out, "stats", t))
+        reports[t] = table.drop_columns(
+            [c for c in drop if c in table.column_names]
+        ).to_pylist()
+    manifest = {
+        day: {
+            k: entry[k]
+            for k in ("status", "input_rows", "sink_counts", "partition_counts")
+        }
+        for day, entry in Manifest.load(os.path.join(out, "manifest.json")).days.items()
     }
-    observed = {}
-    for r in rows:
-        for s, c in r["sink_counts"].items():
-            observed[s] = observed.get(s, 0) + c
-    assert {s: c for s, c in observed.items() if c} == written
-    assert sum(r["input_rows"] for r in rows) > 0
+    return sorted(routed.collect(), key=repr), reports, manifest
+
+
+def _stream_arrivals(spark, tmp_path, files, stream_call, input_format):
+    """Write ``files`` (name → (writer, days)) into a fresh input
+    directory one at a time, calling ``stream_call(input_dir, out)``
+    after each; it returns the days each micro-batch routed. The last
+    (late) file keeps a modification time 30 days older than the others',
+    as a file copied with its original time would. Checks that
+    each call is one micro-batch routing exactly the file's days, that
+    a further call with no new file routes nothing, and that the
+    streamed output equals one ``pipeline.run`` over the final input
+    (``record_no`` aside for jsonlog). Returns the streamed output."""
+    from pgweasel_spark.plans import pipeline
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    out = str(tmp_path / "stream_out")
+    late = list(files)[-1]
+    for name, (write, days) in files.items():
+        write(str(indir / name))
+        if name == late:
+            old = time.time() - 30 * 86400
+            os.utime(indir / name, (old, old))
+        assert stream_call(str(indir), out) == [days], name
+
+    manifest = open(os.path.join(out, "manifest.json")).read()
+    assert stream_call(str(indir), out) == []
+    assert open(os.path.join(out, "manifest.json")).read() == manifest
+
+    batch = str(tmp_path / "batch_out")
+    pipeline.run(spark, str(indir), batch, input_format=input_format)
+    # jsonlog's record_no is monotonically_increasing_id over the files
+    # read: its values depend on the input's file set, which differs
+    # between the days a stream routed early and a bulk run
+    drop = ("record_no",) if input_format == "jsonlog" else ()
+    streamed = _pipeline_output(spark, out, drop)
+    assert streamed == _pipeline_output(spark, batch, drop)
+    return streamed
+
+
+def test_streaming_available_now(spark, tmp_path):
+    """`cli stream` over seven arriving day files of generated pages,
+    then a late file for the first day: every call routes exactly the
+    new file's day, the late file re-routes its completed day, and the
+    result (routed rows, six stats reports, manifest lineage) equals one
+    ``pipeline.run`` over the final input."""
+    from itertools import groupby
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pgweasel_spark import gen
+
+    pages = sorted(
+        gen.generate_pages(80, seed=7, include_fixtures=False),
+        key=lambda p: (p["warc_ts"], p["url"]),
+    )
+    by_day = {
+        str(day): list(ps)
+        for day, ps in groupby(pages, key=lambda p: p["warc_ts"].date())
+    }
+    first = min(by_day)
+    late = by_day[first][-2:]
+    by_day[first] = by_day[first][:-2]
+
+    def writer(rows):
+        table = pa.Table.from_pylist(rows, schema=gen.ARROW_SCHEMA)
+        return lambda path: pq.write_table(table, path)
+
+    files = {
+        f"day{i}.parquet": (writer(rows), [day])
+        for i, (day, rows) in enumerate(sorted(by_day.items()))
+    }
+    files["late.parquet"] = (writer(late), [first])
+    assert len(files) == 8
+
+    def cli_stream(indir, out):
+        text = _run_cli(["stream", "--input", indir, "--out", out])
+        return [
+            ast.literal_eval(days)
+            for days in re.findall(r"processed days=(\[.*?\])", text)
+        ]
+
+    routed, reports, manifest = _stream_arrivals(
+        spark, tmp_path, files, cli_stream, "parquet"
+    )
+    late_urls = {p["url"] for p in late}
+    assert late_urls <= {row["url"] for row in routed}
+    assert len(manifest) == 7 and reports["slow_top"]
+
+
+def test_streaming_jsonlog_matches_batch_pipeline(spark, tmp_path):
+    """``run_available_now`` over seven arriving jsonlog day files, then a
+    late file for the first day with a new error message and the
+    slowest statement, equals one jsonlog ``pipeline.run`` over the final
+    input; the late file changes the first day's reports."""
+    import json
+
+    from pgweasel_spark import grammar
+    from pgweasel_spark.streaming import stream
+
+    def lines(day, n, offset=0):
+        return [
+            {
+                "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
+                "error_severity": severity,
+                "message": message,
+                "user": "u",
+                "dbname": "d",
+                "application_name": "a",
+                "remote_host": "h",
+                "process_id": i,
+            }
+            for i in range(offset, offset + n)
+            for severity, message in [
+                ("ERROR", f"division by zero {i % 3 + offset}"),
+                ("LOG", f"duration: {4000 + 100 * i + day}.5 ms  statement: select {i}"),
+                ("LOG", f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"),
+                ("LOG", f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"),
+            ]
+        ]
+
+    def writer(rows):
+        text = "\n".join(json.dumps(r) for r in rows) + "\n"
+        return lambda path: Path(path).write_text(text)
+
+    files = {
+        f"day{day}.json": (writer(lines(day, 4)), [f"2025-06-{day:02d}"])
+        for day in range(3, 10)
+    }
+    files["late.json"] = (writer(lines(3, 2, offset=50)), ["2025-06-03"])
+
+    def call(indir, out):
+        results = stream.run_available_now(spark, indir, out, input_format="jsonlog")
+        return [r.days_processed for r in results]
+
+    _, reports, manifest = _stream_arrivals(spark, tmp_path, files, call, "jsonlog")
+    assert manifest["2025-06-03"]["input_rows"] == 4 * 4 + 2 * 4
+    assert {"message": "division by zero 50", "cnt": 1} in reports["errors_top"]
+    assert reports["slow_top"][0]["duration_ms"] == 4000 + 100 * 51 + 3 + 0.5
 
 
 def test_sampling_ops_are_streaming_safe(spark, tmp_path):
@@ -220,176 +318,6 @@ def test_sampling_ops_are_streaming_safe(spark, tmp_path):
     assert streamed == expected and streamed
 
 
-def test_streaming_jsonlog_matches_batch_pipeline(spark, tmp_path):
-    """Streaming S8: tailing a jsonlog directory with availableNow must
-    route the same per-sink rows as the batch jsonlog pipeline over the
-    same files, exactly-once across incremental file arrivals."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from pgweasel_spark.plans import pipeline
-    from pgweasel_spark.streaming import stream
-
-    def mk_lines(day, n):
-        return "\n".join(
-            json.dumps(
-                {
-                    "timestamp": f"2025-06-{day:02d} 10:00:{i:02d}.000 UTC",
-                    "error_severity": "ERROR" if i % 2 else "LOG",
-                    "message": (
-                        "division by zero"
-                        if i % 2
-                        else f"duration: 4100.{i} ms  statement: select {i}"
-                    ),
-                    "state_code": "22012" if i % 2 else "00000",
-                    "user": "u",
-                    "dbname": "d",
-                    "application_name": "a",
-                    "remote_host": "h",
-                    "process_id": i,
-                }
-            )
-            for i in range(n)
-        )
-
-    jdir = tmp_path / "jl"
-    jdir.mkdir()
-    (jdir / "a.json").write_text(mk_lines(3, 6) + "\n")
-
-    out = str(tmp_path / "jl_stream")
-
-    def run_stream():
-        q = (
-            stream.routed_jsonlog_stream(
-                stream.read_jsonlog_stream(spark, str(jdir))
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/routed_stream")
-            .option("checkpointLocation", f"{out}/_ck")
-            .partitionBy("sink", "warc_day")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_stream()
-    routed = spark.read.parquet(f"{out}/routed_stream")
-    n1 = routed.count()
-    assert n1 > 0
-
-    # a second file arrives → only its rows are appended (exactly-once)
-    (jdir / "b.json").write_text(mk_lines(4, 4) + "\n")
-    run_stream()
-    routed = spark.read.parquet(f"{out}/routed_stream")
-    assert routed.count() > n1
-
-    # per-sink equality vs the batch jsonlog pipeline on the same dir
-    batch_out = str(tmp_path / "jl_batch")
-    pipeline.run(
-        spark, str(jdir), batch_out, with_stats=False,
-        input_format="jsonlog",
-    )
-    batch = spark.read.parquet(os.path.join(batch_out, "routed"))
-
-    def counts(df):
-        return {
-            r["sink"]: r["cnt"]
-            for r in df.groupBy("sink")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-
-    assert counts(routed) == counts(batch)
-    assert {"errors", "slow", "stats"} <= set(counts(routed))
-
-
-def test_error_rate_stream_plan(spark, generated_pages_dir, tmp_path):
-    """Windowed error-rate agg with watermark runs in availableNow mode."""
-    from pgweasel_spark.streaming import stream
-
-    pages = stream.read_webtext_stream(spark, generated_pages_dir)
-    rates = stream.error_rate_stream(pages)
-    q = (
-        rates.writeStream.format("memory")
-        .queryName("rates")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # append mode emits only watermark-closed windows; the plan executing
-    # without error is the contract here (content asserted in batch tests)
-    assert spark.table("rates").columns == ["start", "end", "severity", "cnt"]
-
-
-def test_stateful_error_burst_alerts(spark, tmp_path):
-    """applyInPandasWithState keeps per-host error counts ACROSS
-    micro-batches: two availableNow runs over the same checkpoint must
-    accumulate, and the alert flag must flip when the threshold is hit."""
-    from pyspark.sql import functions as F
-
-    from pgweasel_spark.gen import generate_pages
-    from pgweasel_spark.streaming import stream
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pgweasel_spark.gen import ARROW_SCHEMA
-
-    indir = str(tmp_path / "in")
-    os.makedirs(indir)
-    ckpt = str(tmp_path / "ckpt")
-    outdir = str(tmp_path / "alerts")
-
-    def write_batch(name, n_pages, seed):
-        pages = generate_pages(n_pages, seed=seed, include_fixtures=False)
-        pq.write_table(
-            pa.Table.from_pylist(pages, schema=ARROW_SCHEMA),
-            os.path.join(indir, name),
-        )
-
-    def run_once():
-        pages = stream.read_webtext_stream(spark, indir)
-        alerts = stream.error_burst_alerts(pages, threshold=3)
-        q = (
-            alerts.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # the file sink appends: rows from ALL runs so far are present;
-        # per host, the row with the highest running total is the latest
-        out = {}
-        for r in spark.read.parquet(outdir).collect():
-            cur = out.get(r["host"])
-            if cur is None or r["total_errors"] > cur["total_errors"]:
-                out[r["host"]] = r
-        return out
-
-    write_batch("b1.parquet", 30, seed=1)
-    first = run_once()
-    assert first, "first batch produced no alert rows"
-    totals1 = {h: r["total_errors"] for h, r in first.items()}
-
-    write_batch("b2.parquet", 30, seed=2)
-    second = run_once()
-    # cumulative state: a host seen in both batches must have
-    # total_errors(second) = total(first) + batch_errors(second)
-    grew = 0
-    for host, r in second.items():
-        if host in totals1 and r["total_errors"] > totals1[host]:
-            assert r["total_errors"] == totals1[host] + r["batch_errors"]
-            grew += 1
-    assert grew > 0, "no host accumulated state across batches"
-    # threshold semantics
-    for r in list(first.values()) + list(second.values()):
-        assert r["alert"] == (r["total_errors"] >= 3)
-
-
 def test_zip_source_feeds_pipeline(spark, tmp_path):
     """S4 zip source (convert_args.rs:163-193): every non-directory
     member becomes a page; directory entries are skipped; the normal
@@ -423,44 +351,6 @@ def test_zip_source_feeds_pipeline(spark, tmp_path):
     assert two[0]["duration_ms"] == 4.053
     assert two[0]["user"] == "x"
     assert two[0]["host"] == "127.0.0.1"
-
-
-def test_error_rate_stream_matches_batch(spark, generated_pages_dir):
-    """The windowed streaming error-rate aggregation must equal the
-    identical batch computation over the same input (complete mode, so
-    the watermark cannot drop finalized windows on bounded data)."""
-    from pyspark.sql import functions as F
-
-    from pgweasel_spark.operators.parse import parse_events
-    from pgweasel_spark.streaming import stream
-
-    pages = stream.read_webtext_stream(spark, generated_pages_dir)
-    rates = stream.error_rate_stream(pages)
-    q = (
-        rates.writeStream.format("memory")
-        .queryName("rates_mem")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (str(r["start"]), str(r["end"]), r["severity"]): r["cnt"]
-        for r in spark.sql("SELECT * FROM rates_mem").collect()
-    }
-    ev = parse_events(spark.read.parquet(generated_pages_dir))
-    batch = (
-        ev.where(F.col("event_ts").isNotNull())
-        .groupBy(F.window("event_ts", "10 minutes").alias("w"), "severity")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("w.start", "w.end", "severity", "cnt")
-    )
-    expected = {
-        (str(r["start"]), str(r["end"]), r["severity"]): r["cnt"]
-        for r in batch.collect()
-    }
-    assert got == expected
-    assert len(expected) > 5
 
 
 def test_spark_submit_pyfiles_job(tmp_path):
@@ -525,138 +415,6 @@ def test_spark_submit_pyfiles_job(tmp_path):
     assert sorted(second["days_skipped"]) == sorted(
         first["days_processed"] + first["days_skipped"]
     )
-
-
-def test_streaming_exact_dedup_across_batches(spark, tmp_path):
-    """A doc whose text was first seen in batch 1 must be flagged
-    duplicate in batch 2 with the original keeper id (cross-batch
-    state); within one batch the min doc_id wins, matching the batch
-    operator's keeper choice."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pgweasel_spark.streaming import stream
-
-    indir = str(tmp_path / "docs_in")
-    os.makedirs(indir)
-    ckpt = str(tmp_path / "ckpt_dd")
-    outdir = str(tmp_path / "dedup_out")
-    schema = pa.schema(
-        [("doc_id", pa.int64()), ("text", pa.string())]
-    )
-
-    def write_batch(name, rows):
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                       os.path.join(indir, name))
-
-    def run_once():
-        docs = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(indir)
-        )
-        out = stream.streaming_exact_dedup(docs)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            r["doc_id"]: r for r in spark.read.parquet(outdir).collect()
-        }
-
-    write_batch("b1.parquet", [
-        {"doc_id": 10, "text": "alpha beta"},
-        {"doc_id": 11, "text": "alpha beta"},   # in-batch dup of 10
-        {"doc_id": 12, "text": "unique one"},
-    ])
-    out1 = run_once()
-    assert not out1[10]["is_duplicate"] and out1[10]["keeper"] == 10
-    assert out1[11]["is_duplicate"] and out1[11]["keeper"] == 10
-    assert not out1[12]["is_duplicate"]
-
-    write_batch("b2.parquet", [
-        {"doc_id": 5, "text": "alpha beta"},    # cross-batch dup, LOWER id
-        {"doc_id": 13, "text": "fresh text"},
-    ])
-    out2 = run_once()
-    # state pins the FIRST-SEEN keeper even against a lower later id
-    assert out2[5]["is_duplicate"] and out2[5]["keeper"] == 10
-    assert not out2[13]["is_duplicate"]
-
-
-def test_streaming_dedup_ttl_expires_state(spark, tmp_path):
-    """The finite-horizon configuration (state_ttl_ms): a content hash
-    not re-seen within the TTL must LEAVE the state store (bounded
-    state on an infinite crawl), and a re-occurrence after expiry is
-    treated as first-seen."""
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pgweasel_spark.streaming import stream
-
-    indir = str(tmp_path / "docs_in")
-    os.makedirs(indir)
-    ckpt = str(tmp_path / "ckpt_ttl")
-    outdir = str(tmp_path / "ttl_out")
-    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-
-    def write_batch(name, rows):
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                       os.path.join(indir, name))
-
-    def run_once():
-        docs = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(indir)
-        )
-        out = stream.streaming_exact_dedup(docs, state_ttl_ms=1500)
-        # trigger(once=True), NOT availableNow: with armed
-        # processing-time timeouts availableNow keeps scheduling
-        # micro-batches and never terminates (see streaming_exact_dedup
-        # docstring)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(once=True)
-            .start()
-        )
-        q.awaitTermination()
-        prog = q.lastProgress
-        n_state = (
-            prog["stateOperators"][0]["numRowsTotal"]
-            if prog and prog.get("stateOperators")
-            else None
-        )
-        rows = spark.read.parquet(outdir).collect()
-        return n_state, {r["doc_id"]: r for r in rows}
-
-    write_batch("b1.parquet", [
-        {"doc_id": 10, "text": "alpha beta"},
-        {"doc_id": 12, "text": "unique one"},
-    ])
-    n1, out1 = run_once()
-    assert n1 == 2  # one keeper entry per distinct hash
-    assert not out1[10]["is_duplicate"]
-
-    _time.sleep(3.5)  # let both entries pass the 1.5s TTL
-    write_batch("b2.parquet", [{"doc_id": 20, "text": "fresh text"}])
-    n2, _ = run_once()
-    # expired keys removed by the timeout callback; only the new hash
-    assert n2 == 1
-
-    # a hash re-seen AFTER expiry is first-seen again (horizon trade)
-    write_batch("b3.parquet", [{"doc_id": 21, "text": "alpha beta"}])
-    _, out3 = run_once()
-    assert not out3[21]["is_duplicate"]
-    assert out3[21]["keeper"] == 21
 
 
 def test_run_dedup_job_entry(spark, tmp_path):
@@ -749,128 +507,6 @@ def test_zip_member_size_guard(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(webtext, "_MAX_ZIP_MEMBER_BYTES", 1 << 20)
     rows = webtext.read_zip_logs(spark, zpath).collect()
     assert len(rows) == 1 and rows[0]["url"].endswith("!big.log")
-
-
-def test_streaming_simhash_near_dups(spark, tmp_path):
-    """Cross-batch near-dup detection must find exactly the pairs the
-    BATCH simhash operator finds on the same corpus (same banding, same
-    Hamming verify), and the per-bucket FIFO cap must bound state by
-    evicting the oldest entries."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pgweasel_spark.operators import dedup
-    from pgweasel_spark.streaming import stream
-
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-        "kilo lima mike november oscar papa quebec romeo sierra tango "
-        "uniform victor whiskey xray yankee zulu one two three four"
-    ).split()
-    texts = {}
-    for i in range(10):
-        ws = list(base)
-        if i:
-            ws[(7 * i) % len(ws)] = f"mut{i}"
-        texts[i] = " ".join(ws)
-    texts[100] = texts[0]  # exact dup, arrives in batch 2
-
-    indir = str(tmp_path / "nd_in")
-    os.makedirs(indir)
-    ckpt = str(tmp_path / "nd_ckpt")
-    outdir = str(tmp_path / "nd_out")
-    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-
-    def run_once():
-        docs = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(indir)
-        )
-        out = stream.streaming_simhash_near_dups(docs, max_hamming=3)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    b1 = [{"doc_id": i, "text": texts[i]} for i in sorted(texts) if i < 5]
-    b2 = [{"doc_id": i, "text": texts[i]} for i in sorted(texts) if i >= 5]
-    pq.write_table(pa.Table.from_pylist(b1, schema=schema),
-                   os.path.join(indir, "b1.parquet"))
-    run_once()
-    pq.write_table(pa.Table.from_pylist(b2, schema=schema),
-                   os.path.join(indir, "b2.parquet"))
-    run_once()
-
-    got = {
-        (min(r["doc_id"], r["match_id"]), max(r["doc_id"], r["match_id"]))
-        for r in spark.read.parquet(outdir).collect()
-    }
-    full = spark.createDataFrame(
-        sorted(texts.items()), "doc_id long, text string"
-    )
-    expected = {
-        (r["doc1"], r["doc2"])
-        for r in dedup.simhash_near_dups(full, max_hamming=3).collect()
-    }
-    assert (0, 100) in expected
-    assert got == expected
-
-
-def test_streaming_simhash_cap_evicts_oldest(spark, tmp_path):
-    """per_bucket_cap=1: with three identical docs arriving in separate
-    batches, the third matches only the second (the first was evicted)
-    — state is hard-bounded."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pgweasel_spark.streaming import stream
-
-    indir = str(tmp_path / "cap_in")
-    os.makedirs(indir)
-    ckpt = str(tmp_path / "cap_ckpt")
-    outdir = str(tmp_path / "cap_out")
-    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-    text = "the quick brown fox jumps over the lazy dog today"
-
-    def run_once():
-        docs = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(indir)
-        )
-        out = stream.streaming_simhash_near_dups(
-            docs, max_hamming=0, per_bucket_cap=1
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    for i, name in enumerate(["c1", "c2", "c3"]):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": i, "text": text}], schema=schema
-            ),
-            os.path.join(indir, f"{name}.parquet"),
-        )
-        run_once()
-
-    pairs = {
-        (r["doc_id"], r["match_id"])
-        for r in spark.read.parquet(outdir).collect()
-    }
-    assert (1, 0) in pairs   # doc 1 saw doc 0
-    assert (2, 1) in pairs   # doc 2 saw doc 1
-    assert (2, 0) not in pairs  # doc 0 evicted before doc 2 arrived
 
 
 def test_run_curate_job_entry(spark, tmp_path):

@@ -435,6 +435,40 @@ def test_manifest_counts_equal_written_table(
     assert calls == 7  # one call per generated warc_day
 
 
+def test_reopened_day_drops_sinks_it_no_longer_writes(spark, tmp_path):
+    """A day re-opened in the manifest is re-routed from scratch: a sink
+    that its new routing no longer writes loses its old partitions, and
+    neither the manifest's counts nor the stats reports count them."""
+    day = "2025-06-03"
+    error = f"{day} 12:00:00.000 UTC [123] u@d ERROR:  division by zero\n"
+    slow = f"{day} 12:00:01.000 UTC [124] u@d LOG:  duration: 5025.1 ms  statement: select 1\n"
+    indir = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    manifest_path = os.path.join(out, "manifest.json")
+
+    def route(text):
+        spark.createDataFrame(
+            [("http://twin/0.log", datetime(2025, 6, 3, 12), text, None)],
+            "url string, warc_ts timestamp, text string, lang string",
+        ).write.mode("overwrite").parquet(indir)
+        return pipeline.run(spark, indir, out)
+
+    assert route(error + slow).sink_counts["errors"] == 1
+    manifest = Manifest.load(manifest_path)
+    del manifest.days[day]
+    manifest.save()
+    res = route(slow)
+
+    assert res.days_processed == [day] and "errors" not in res.sink_counts
+    assert [sink for sink, _ in pipeline._day_dirs(os.path.join(out, "routed"), day)] == [
+        sink for sink in sorted(res.sink_counts)
+    ]
+    entry = Manifest.load(manifest_path).days[day]
+    assert "errors" not in entry["sink_counts"]
+    assert not any(key.startswith("errors/") for key in entry["partition_counts"])
+    assert pq.read_table(os.path.join(out, "stats", "errors_top")).num_rows == 0
+
+
 def _types(schema):
     return {f.name: f.dataType for f in schema}
 

@@ -125,10 +125,9 @@ def test_severity_filter_pushed_to_scan(spark, generated_pages_dir, tmp_path):
 
 
 def test_default_spine_has_no_python_nodes(spark, generated_pages_dir):
-    """With the JVM splitter as default, the whole parse→enrich→route plan
-    must contain zero Python evaluation operators — everything stays in
-    whole-stage codegen (the pandas splitter remains available via
-    parse_events(..., splitter='pandas'))."""
+    """With the JVM splitter, the whole parse→enrich→route plan must
+    contain zero Python evaluation operators — everything stays in
+    whole-stage codegen."""
     from pgweasel_spark.operators import route
 
     ev = enrich(parse_events(spark.read.parquet(generated_pages_dir)))
@@ -136,11 +135,6 @@ def test_default_spine_has_no_python_nodes(spark, generated_pages_dir):
     plan = _plan(routed)
     for node in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
         assert node not in plan, node
-    # and the pandas variant really does use Python (guards the knob)
-    plan_p = _plan(
-        parse_events(spark.read.parquet(generated_pages_dir), splitter="pandas")
-    )
-    assert "MapInPandas" in plan_p
 
 
 def test_salted_count_matches_plain_and_is_two_phase(spark, generated_pages_dir):

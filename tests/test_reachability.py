@@ -1,10 +1,13 @@
-"""Every public top-level function or class in ``pgweasel_spark/`` must be
-used by code outside ``tests/``: a query, job, CLI command, streaming path,
-benchmark or tool. Code that only its own tests call is deleted, not kept.
+"""Every top-level function, class or module constant in
+``pgweasel_spark/``, public or private, must be read by code outside
+``tests/``: a query, job, CLI command, benchmark or tool, or another
+definition that is. Code that only its own tests read is deleted, not kept.
 
 The scan is syntactic and needs no Spark: it collects every identifier
-(names, attribute names, imported names) in the repository's non-test
-``.py`` files and flags each public definition whose name never appears.
+read (loaded names, attribute names, imported names) in the repository's
+non-test ``.py`` files and flags each definition whose name never appears.
+An assignment does not count as a read, so a constant nothing reads is
+flagged.
 """
 
 import ast
@@ -17,8 +20,6 @@ PACKAGE = ROOT / "pgweasel_spark"
 ALLOWED_MODULES = {
     "grammar.py": "the pure-Python semantic oracle the JVM paths are "
     "tested against",
-    "streaming/stream.py": "the streaming variant of the pipeline, kept "
-    "as a supported entry point",
 }
 
 #: single definitions kept without callers, with the reason
@@ -45,7 +46,7 @@ def _used_identifiers() -> set[str]:
         ):
             continue
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
                 used.add(node.attr)
@@ -54,19 +55,37 @@ def _used_identifiers() -> set[str]:
     return used
 
 
-def _public_definitions():
+def _definition_names(node):
+    """The names a module-level statement defines: a function or class,
+    or the plain-name targets of an assignment (dunders such as
+    ``__all__`` are read by the interpreter, not by code)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        t.id
+        for t in targets
+        if isinstance(t, ast.Name) and not t.id.startswith("__")
+    ]
+
+
+def _definitions():
     for path in sorted(PACKAGE.rglob("*.py")):
         module = path.relative_to(PACKAGE).as_posix()
         for node in ast.parse(path.read_text(), str(path)).body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
-                yield module, node.lineno, node.name
+            for name in _definition_names(node):
+                yield module, node.lineno, name
 
 
 def test_every_public_definition_has_a_non_test_caller():
+    """Public and private definitions and module constants alike."""
     used = _used_identifiers()
-    definitions = list(_public_definitions())
+    definitions = list(_definitions())
     unreached = [
         f"pgweasel_spark/{module}:{line} {name}"
         for module, line, name in definitions
@@ -75,7 +94,7 @@ def test_every_public_definition_has_a_non_test_caller():
         and name not in ALLOWED_NAMES
     ]
     assert not unreached, (
-        "public definitions with no caller outside tests/ (delete them, "
+        "definitions with no reader outside tests/ (delete them, "
         "or allowlist them with a reason):\n" + "\n".join(unreached)
     )
     # the allowlist names only code that still exists

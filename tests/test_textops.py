@@ -1053,21 +1053,6 @@ def test_canonical_url_rules(spark):
     assert groups["http://other.com"] == (1, 3)
 
 
-def test_value_percentiles_approx_path(spark):
-    """exact=False switches to approx_percentile (t-digest, the
-    unbounded-cardinality path) — same schema, values close to exact."""
-    from pgweasel_spark.operators.aggregates import value_percentiles
-
-    df = spark.createDataFrame(
-        [("a", float(v)) for v in range(1, 1001)], "g string, value double"
-    )
-    exact = value_percentiles(df, "value", ["g"]).collect()[0]
-    approx = value_percentiles(df, "value", ["g"], exact=False).collect()[0]
-    assert approx["n"] == exact["n"] == 1000
-    for c in ("p50", "p95", "p99"):
-        assert abs(approx[c] - exact[c]) <= 10  # within 1% of the range
-
-
 def test_canonical_url_idempotent(spark):
     """canonical(canonical(u)) == canonical(u) on a seeded random corpus
     of component-composed URLs — the invariant that lets pipelines store
