@@ -1008,15 +1008,19 @@ def embedding_near_dups(
     )
 
 
+def _checkpointed_rdd(checkpointed: DataFrame):
+    """The RDD behind a ``localCheckpoint()`` frame: the ``LogicalRDD``
+    leaf of its logical plan. Reading its partition count runs no job."""
+    return checkpointed._jdf.queryExecution().logical().rdd()
+
+
 def _release(checkpointed: DataFrame) -> None:
-    """Free the blocks behind a ``localCheckpoint()`` frame, whose logical
-    plan is the ``LogicalRDD`` leaf over the checkpointed RDD. Only for a
+    """Free the blocks behind a ``localCheckpoint()`` frame. Only for a
     frame no plan still to run reads. Goes through the context rather
     than ``RDD.unpersist``, which warns on every locally checkpointed
     RDD that its lineage cannot be recomputed."""
-    rdd = checkpointed._jdf.queryExecution().logical().rdd()
     checkpointed.sparkSession.sparkContext._jsc.sc().unpersistRDD(
-        rdd.id(), False
+        _checkpointed_rdd(checkpointed).id(), False
     )
 
 
@@ -1037,31 +1041,45 @@ def near_dup_groups(
     A~B and B~C must collapse to ONE group {A,B,C} even when A~C was never
     emitted as a pair.
 
-    Shape: contract, then iterate.
+    Shape: contract, then finish by one of three paths.
 
     - *Contract.* The pair list is coalesced, without a shuffle, to at
       most ``defaultParallelism`` partitions, and each partition runs
       one numpy union-find (min-label hooking plus pointer jumping) in a
-      ``mapInPandas`` pass. It emits one star edge per node, ``node →
-      local min id``. A local component is a subset of a global one and
-      every node stays linked to its local root, so the groups and each
-      group's min id are unchanged by construction (the idea of
-      Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC 2014, applied per partition). Memory bound: one coalesced
-      partition of id pairs per Python worker. The coalesce matters:
-      contracting over many thin input partitions barely shrinks the
-      edge list.
-    - *Iterate.* Min-label propagation over the star edges (both
-      directions, distinct): each round every node takes the min of its
-      own label and its neighbours' labels, then pointer-jumps (label ←
-      label(label)). One counted Spark job per round; the loop stops at
-      the fixpoint. Reaching ``max_iter`` with labels still changing
-      raises ``RuntimeError`` rather than returning partial groups.
+      ``mapInPandas`` pass. It emits one row per node, ``node → local
+      min id`` (a root maps to itself). A local component is a subset of
+      a global one and every node stays linked to its local root, so the
+      groups and each group's min id are unchanged by construction (the
+      idea of Kiveris et al., "Connected Components in MapReduce and
+      Beyond", SoCC 2014, applied per partition). Memory bound: one
+      coalesced partition of id pairs per Python worker. The coalesce
+      matters: contracting over many thin input partitions barely
+      shrinks the edge list. These ``stars`` are checkpointed lazily.
+    - *One partition.* A contraction that saw every pair is the answer:
+      its local roots are the global min ids. ``stars`` is returned
+      as is, with no count and no extra job.
+    - *Several partitions, small graph.* A count sizes ``stars`` (and
+      materializes its checkpoint). At most ``broadcast_label_rows``
+      rows are contracted once more in one task, over
+      ``stars.coalesce(1)``, and that is the answer. Memory bound: that
+      many id pairs in one Python worker — the same bound that decides
+      whether labels may be broadcast to every executor below.
+    - *Above the bound: iterate.* Min-label propagation over the star
+      edges (both directions, distinct): each round every node takes the
+      min of its own label and its neighbours' labels, then
+      pointer-jumps (label ← label(label)). One counted Spark job per
+      round; the loop stops at the fixpoint. Reaching ``max_iter`` with
+      labels still changing raises ``RuntimeError`` rather than
+      returning partial groups. This is the only path for a
+      corpus-sized graph.
 
     Measured on the sf0.1 documents table (5,000 docs, 35,270 SimHash
-    pairs, 3,898 docs in 83 groups, the largest 3,721 docs and sparse):
-    the raw pairs took 9 propagation rounds. Contracted, they become
-    3,815 star edges and the loop stops after one confirming round.
+    pairs, 3,898 docs in 83 groups, the largest 3,721 docs and sparse)
+    on a 4-core ``local[4]`` host: the raw pairs took 9 propagation
+    rounds, and even the contracted stars a confirming one, 14 Spark
+    jobs in perfbench's dedup_groups stage. Finishing by contraction,
+    that stage (one pair partition) runs 2 jobs, and the ``d9`` query,
+    whose pairs span several partitions, 7 where the loop ran 30-54.
 
     Lineage MUST be truncated per round, not merely cached: an iterative
     self-referencing plan grows exponentially (each round's logical tree
@@ -1071,10 +1089,10 @@ def near_dup_groups(
     round's labels are ``localCheckpoint``-ed (on a multi-executor
     cluster prefer ``setCheckpointDir`` + ``.checkpoint()`` for
     executor-loss resilience; same shape). A round's checkpoint is freed
-    once the next round's count has materialized its successor, and the
-    edge checkpoint once the loop ends, so cached blocks do not grow
-    with the round count: only the final labels, which the returned
-    frame reads, stay cached.
+    once the next round's count has materialized its successor, the
+    ``stars`` once the edges are materialized, and the edges once the
+    loop ends. Every path leaves one cached RDD, the one the returned
+    frame reads.
 
     Join strategy (guide §3.1, picked deliberately at runtime): the
     label frame is one row per node, usually much smaller than the edge
@@ -1095,6 +1113,9 @@ def near_dup_groups(
     if max_iter < 1:
         raise ValueError(f"max_iter must be at least 1, got {max_iter}")
     key_type = pairs.schema[left_col].dataType
+    star_schema = StructType(
+        [StructField("a", key_type), StructField("b", key_type)]
+    )
 
     def contract(batches):
         import numpy as np
@@ -1121,13 +1142,12 @@ def near_dup_groups(
             if np.array_equal(nxt, root):
                 break
             root = nxt
-        # one star edge per non-root node; a root with no members (a
-        # self-pair's only node) keeps a self edge so it stays a node
-        star = root != np.arange(len(nodes))
-        has_member = np.zeros(len(nodes), dtype=bool)
-        has_member[root[star]] = True
-        keep = star | ~has_member
-        yield pd.DataFrame({"a": nodes[keep], "b": nodes[root[keep]]})
+        yield pd.DataFrame({"a": nodes, "b": nodes[root]})
+
+    def as_groups(stars: DataFrame) -> DataFrame:
+        return stars.select(
+            F.col("a").alias("doc_id"), F.col("b").alias("group_id")
+        ).orderBy("doc_id")
 
     stars = (
         pairs.select(
@@ -1136,15 +1156,19 @@ def near_dup_groups(
         )
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .coalesce(pairs.sparkSession.sparkContext.defaultParallelism)
-        .mapInPandas(
-            contract,
-            StructType(
-                [StructField("a", key_type), StructField("b", key_type)]
-            ),
-        )
+        .mapInPandas(contract, star_schema)
+        .localCheckpoint(eager=False)
     )
+    star_rdd = _checkpointed_rdd(stars)
+    if star_rdd.getNumPartitions() == 1:
+        # a checkpoint does not carry its single partitioning; the
+        # coalesce states it, so the sort needs no range exchange
+        return as_groups(stars.coalesce(1))
+    # an RDD count: one job, where a frame count adds a shuffle stage
+    if star_rdd.count() <= broadcast_label_rows:
+        return as_groups(stars.coalesce(1).mapInPandas(contract, star_schema))
     # both edge directions from one pass: the explode emits (a,b) and
-    # (b,a) per star edge in the same task. A node's star edge can repeat
+    # (b,a) per star row in the same task. A node's star row can repeat
     # across partitions, hence the distinct.
     edges = (
         stars.select(
@@ -1161,8 +1185,7 @@ def near_dup_groups(
     )
     # initialize each node's label with min(self, direct neighbors) —
     # the first propagation hop for free (every node appears as `a`
-    # because edges are materialized in both directions); after the
-    # contraction this is usually already the fixpoint
+    # because edges are materialized in both directions)
     held = labels = (
         edges.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("_nb"))
@@ -1175,6 +1198,7 @@ def near_dup_groups(
     # label-sized frames broadcast when bounded, else shuffled joins.
     # This count materializes the label and edge checkpoints.
     n_ids = labels.count()
+    _release(stars)
     _b = (
         (lambda df: F.broadcast(df))
         if n_ids <= broadcast_label_rows

@@ -553,11 +553,13 @@ def test_near_dup_groups_transitive_closure(spark):
 def test_near_dup_groups_long_chain_converges(spark):
     """A 30-link chain needs many propagation rounds — exercises the
     fixpoint loop and the per-round lineage truncation (the naive
-    persist-only version OOMed on plan growth by round 3)."""
+    persist-only version OOMed on plan growth by round 3). A bound of 0
+    label rows sends any non-empty graph over several partitions to the
+    loop."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc1 long, doc2 long"
     )
-    rows = dedup.near_dup_groups(pairs).collect()
+    rows = dedup.near_dup_groups(pairs, broadcast_label_rows=0).collect()
     assert len(rows) == 31
     assert {r["group_id"] for r in rows} == {0}
 
@@ -827,10 +829,12 @@ def test_embedding_lsh_hot_bucket_is_salted_into_bounded_groups(spark):
 
 
 def test_near_dup_groups_random_graphs_match_union_find(spark):
-    """Per-partition contraction plus label propagation must equal a
-    driver-side union-find on random pair graphs (varied density, incl.
-    isolated pairs, stars and chains by construction of the random
-    draw), however the pairs are spread over partitions."""
+    """Every finishing path must equal a plain-Python union-find on
+    random pair graphs (varied density, incl. isolated pairs, stars and
+    chains by construction of the random draw), however the pairs are
+    spread over partitions. One partition takes the one-contraction
+    path whatever the bound; over several, the default bound takes the
+    second contraction and a bound of 0 the propagation loop."""
     import random
 
     for seed, n_nodes, n_edges in [(1, 40, 15), (2, 60, 60), (3, 25, 80)]:
@@ -862,11 +866,14 @@ def test_near_dup_groups_random_graphs_match_union_find(spark):
             df = spark.createDataFrame(
                 sorted(pairs), "doc1 long, doc2 long"
             ).repartition(n_parts)
-            got = {
-                r["doc_id"]: r["group_id"]
-                for r in dedup.near_dup_groups(df).collect()
-            }
-            assert got == expected, f"seed={seed} n_parts={n_parts}"
+            for bound in (2_000_000, 0):
+                got = {
+                    r["doc_id"]: r["group_id"]
+                    for r in dedup.near_dup_groups(
+                        df, broadcast_label_rows=bound
+                    ).collect()
+                }
+                assert got == expected, f"{seed=} {n_parts=} {bound=}"
 
 
 def test_semantic_decontaminate(spark):
@@ -919,18 +926,19 @@ def test_near_dup_groups_empty_pairs(spark):
 def test_near_dup_groups_string_keys(spark):
     """The key type survives the mapInPandas contraction: string ids
     group by their own (lexicographic) min, self-pairs stay one-doc
-    groups and null ends are ignored."""
+    groups and null ends are ignored, on one partition and on several."""
     pairs = spark.createDataFrame(
         [("b", "c"), ("c", "a"), ("x", "y"), ("s", "s"), ("q", None)],
         "doc1 string, doc2 string",
-    ).repartition(3)
-    out = dedup.near_dup_groups(pairs)
-    assert out.schema["doc_id"].dataType.simpleString() == "string"
-    assert out.schema["group_id"].dataType.simpleString() == "string"
-    assert [tuple(r) for r in out.collect()] == [
-        ("a", "a"), ("b", "a"), ("c", "a"),
-        ("s", "s"), ("x", "x"), ("y", "x"),
-    ]
+    )
+    for n_parts in (3, 1):
+        out = dedup.near_dup_groups(pairs.repartition(n_parts))
+        assert out.schema["doc_id"].dataType.simpleString() == "string"
+        assert out.schema["group_id"].dataType.simpleString() == "string"
+        assert [tuple(r) for r in out.collect()] == [
+            ("a", "a"), ("b", "a"), ("c", "a"),
+            ("s", "s"), ("x", "x"), ("y", "x"),
+        ], n_parts
 
 
 def _interleaved_chain(spark, n):
@@ -947,30 +955,87 @@ def _interleaved_chain(spark, n):
 def test_near_dup_groups_max_iter_raises(spark):
     """Hitting max_iter with labels still changing is an error, never a
     silent partial grouping; the same graph converges with the default
-    bound."""
+    max_iter. A bound of 0 label rows sends it to the loop."""
     pairs = _interleaved_chain(spark, 64)
     with pytest.raises(RuntimeError, match=r"1 rounds: \d+ labels"):
-        dedup.near_dup_groups(pairs, max_iter=1)
-    rows = dedup.near_dup_groups(pairs).collect()
+        dedup.near_dup_groups(pairs, max_iter=1, broadcast_label_rows=0)
+    rows = dedup.near_dup_groups(pairs, broadcast_label_rows=0).collect()
     assert len(rows) == 65 and {r["group_id"] for r in rows} == {0}
 
 
 def test_near_dup_groups_releases_round_checkpoints(spark):
     """Checkpointed blocks do not grow with the round count: each round
-    frees its predecessor and the edges are freed at the end, leaving
-    only the labels the returned frame reads. Counts the persisted RDDs
-    a call adds, so the cleaner freeing older ones cannot skew it."""
+    frees its predecessor, the stars and edges are freed once read,
+    leaving only the labels the returned frame reads. The contraction
+    paths leave only the stars they read. Counts the persisted RDDs a
+    call adds, so the cleaner freeing older ones cannot skew it."""
     persisted = spark.sparkContext._jsc.getPersistentRDDs
 
-    def cached_by(pairs):
+    def cached_by(pairs, **kw):
         before = set(persisted().keySet())
-        groups = dedup.near_dup_groups(pairs)
+        groups = dedup.near_dup_groups(pairs, **kw)
         groups.collect()
         return len(set(persisted().keySet()) - before)
 
     one_round = spark.createDataFrame([(1, 2)], "doc1 long, doc2 long")
     many_rounds = _interleaved_chain(spark, 64)
-    assert cached_by(one_round) == cached_by(many_rounds) == 1
+    one_partition = spark.sparkContext.parallelize([(1, 2), (2, 3)], 1)
+    assert cached_by(one_round, broadcast_label_rows=0) == 1
+    assert cached_by(many_rounds, broadcast_label_rows=0) == 1
+    assert cached_by(one_partition.toDF("doc1 long, doc2 long")) == 1
+    assert cached_by(many_rounds) == 1
+
+
+def test_near_dup_groups_loop_broadcasts_labels_below_bound(
+    spark, monkeypatch
+):
+    """Past the bound on ``stars`` rows the loop still broadcasts labels
+    when the node count fits it. A star around node 0 over 4 partitions
+    has 13 nodes and 16 ``stars`` rows (node 0 once per partition): a
+    bound of 13 runs the loop with broadcast joins, 12 with shuffled
+    ones, and both give the one group."""
+    pairs = spark.sparkContext.parallelize(
+        [(0, k) for k in range(1, 13)], 4
+    ).toDF("doc1 long, doc2 long")
+    broadcasts = []
+    real = F.broadcast
+
+    def counting(df):
+        broadcasts.append(df)
+        return real(df)
+
+    monkeypatch.setattr(F, "broadcast", counting)
+    for bound, broadcast in ((13, True), (12, False)):
+        broadcasts.clear()
+        rows = dedup.near_dup_groups(
+            pairs, broadcast_label_rows=bound
+        ).collect()
+        assert [tuple(r) for r in rows] == [(k, 0) for k in range(13)]
+        assert bool(broadcasts) is broadcast, bound
+
+
+#: Spark jobs of ``near_dup_groups(...).collect()`` on a 64-link chain:
+#: one partition finishes in the contraction's own job; over 16
+#: partitions, a count and the second contraction.
+GROUPS_JOBS_ONE_PARTITION = 1
+GROUPS_JOBS_16_PARTITIONS = 2
+
+
+def test_near_dup_groups_job_budget(spark):
+    from tests.test_pipeline_resume import _jobs_run_by
+
+    chain = [(i, i + 1) for i in range(64)]
+    for n_parts, budget in (
+        (1, GROUPS_JOBS_ONE_PARTITION),
+        (16, GROUPS_JOBS_16_PARTITIONS),
+    ):
+        pairs = spark.sparkContext.parallelize(chain, n_parts).toDF(
+            "doc1 long, doc2 long"
+        )
+        jobs = _jobs_run_by(
+            spark, lambda: dedup.near_dup_groups(pairs).collect()
+        )
+        assert jobs == budget, n_parts
 
 
 def test_sessionize_gap_semantics(spark):
@@ -1388,8 +1453,8 @@ def test_unigram_total_tokens_maponly_equals_freq_sum(spark):
 
 def test_near_dup_groups_duplicate_pairs_same_groups(spark):
     """Duplicated and reversed input pairs give the same groups as the
-    unique pair list: star edges repeat across partitions whatever the
-    input, and the edge distinct absorbs them."""
+    unique pair list: a node's star row repeats across partitions
+    whatever the input, and the second contraction absorbs them."""
     unique = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
     dup = unique + [(1, 2), (3, 2), (2, 1), (22, 21), (10, 11)]
     expected = [
@@ -1403,3 +1468,34 @@ def test_near_dup_groups_duplicate_pairs_same_groups(spark):
         )
         got = sorted(map(tuple, dedup.near_dup_groups(pairs).collect()))
         assert got == expected, n_parts
+
+
+def _rows_hash(frame):
+    """Order-insensitive value hash of a frame: columns by name, rows
+    sorted, floats as stored (the operators round to 6 places)."""
+    import hashlib
+
+    cols = sorted(frame.columns)
+    lines = sorted(
+        "\x1f".join(repr(r[c]) for c in cols) for r in frame.collect()
+    )
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+
+
+def test_tfidf_top_terms_values_pinned(docs):
+    """Every (doc, rank, term, tfidf) of the top-3 terms on the six-doc
+    fixture, pinned by hash: tokenization, tie order (term ASC) and the
+    6-place rounding all show in it. t11's DuckDB oracle runs only in
+    ``tools/selfcheck_entry.py``, which no test runs."""
+    out = textstats.tfidf_top_terms(docs, k=3)
+    assert out.count() == 18
+    assert _rows_hash(out) == "58fb04e1f11ea698"
+
+
+def test_unigram_logprob_score_values_pinned(docs):
+    """Every doc's (mean_nll, n_tokens) on the six-doc fixture, pinned
+    by hash. t12's DuckDB oracle runs only in
+    ``tools/selfcheck_entry.py``, which no test runs."""
+    out = textstats.unigram_logprob_score(docs)
+    assert out.count() == 6
+    assert _rows_hash(out) == "3349f5bd6b7594d8"
