@@ -70,6 +70,7 @@ def main(argv: list[str] | None = None) -> int:
                 "master": spark.conf.get("spark.master"),
                 "days_processed": res.days_processed,
                 "days_skipped": res.days_skipped,
+                "days_reopened": res.days_reopened,
                 "total_events": res.total_events,
                 "sink_counts": res.sink_counts,
                 "elapsed_s": round(res.elapsed_s, 3),

@@ -9,10 +9,10 @@ over a webtext parquet/Iceberg table instead of log files.
     python -m pgweasel_spark.cli system       --input DIR
     python -m pgweasel_spark.cli connections  --input DIR
     python -m pgweasel_spark.cli run          --input DIR --out DIR   (full pipeline)
-    python -m pgweasel_spark.cli stream       --input DIR --out DIR   (route the files new since the last stream call)
+    python -m pgweasel_spark.cli stream       --input DIR --out DIR   (alias of run)
 
 Aliases follow the reference grammar (src/cli.rs:7-97): errors/error/err,
-locks/loc/lock/deadlock(s), connections/conns/conn, system/sys/pg.
+locks/loc/lock/deadlock(s), connections/conns/conn, system/sys/pg, stream/run.
 Relative times (10m/2h/1d/today) follow src/util.rs:33-113.
 """
 
@@ -106,6 +106,7 @@ _ALIASES = {
     "pg": "system",
     "postgre": "system",
     "postgres": "system",
+    "stream": "run",
 }
 
 
@@ -197,30 +198,22 @@ def main(argv=None):
 
     cmd = _ALIASES.get(args.command, args.command)
 
-    if cmd in ("run", "stream"):
+    if cmd == "run":
         from pgweasel_spark.plans import pipeline
-        from pgweasel_spark.streaming import stream
 
         if args.out is None:
-            ap.error(f"{cmd} needs --out")
+            ap.error(f"{args.command} needs --out")
         spark = get_spark("pgweasel-cli")
         spark.sparkContext.setLogLevel("ERROR")
         # jsonlog inputs route through the same resumable day-batched
         # writer (events batch on their own timestamps)
         fmt = _input_format(args.input)
-        if cmd == "run":
-            results = [pipeline.run(spark, args.input, args.out, input_format=fmt)]
-        else:
-            results = stream.run_available_now(
-                spark, args.input, args.out, input_format=fmt
-            )
-            if not results:
-                print("no new input files")
-        for res in results:
-            print(
-                f"processed days={res.days_processed} skipped={res.days_skipped} "
-                f"sink_counts={res.sink_counts} in {res.elapsed_s:.1f}s"
-            )
+        res = pipeline.run(spark, args.input, args.out, input_format=fmt)
+        print(
+            f"processed days={res.days_processed} reopened={res.days_reopened} "
+            f"skipped={res.days_skipped} sink_counts={res.sink_counts} "
+            f"in {res.elapsed_s:.1f}s"
+        )
         return
 
     spark, ev = _base_events(args)

@@ -6,6 +6,7 @@ The unit of resume is the input day partition (``warc_day``): the pipeline
 writes each pending day batch with dynamic partition overwrite (idempotent —
 a re-run of an incomplete day replaces, never duplicates), then records the
 day as complete together with per-sink row counts and timing lineage.
+Its ``ledger`` is the one record of the input ``pipeline.run`` has seen.
 
 The manifest is a JSON file written atomically (temp + rename). On a real
 cluster it would live next to the Iceberg table and record snapshot ids; the
@@ -25,14 +26,16 @@ from dataclasses import dataclass, field
 class Manifest:
     path: str
     days: dict[str, dict] = field(default_factory=dict)
-    meta: dict = field(default_factory=dict)
+    #: the input's Spark schema json (``"schema"``) and, per input file,
+    #: ``{"size", "mtime_ms", "days"}`` (``"files"``)
+    ledger: dict = field(default_factory=dict)
 
     @classmethod
     def load(cls, path: str) -> "Manifest":
         if os.path.exists(path):
             with open(path, encoding="utf-8") as f:
                 data = json.load(f)
-            return cls(path=path, days=data.get("days", {}), meta=data.get("meta", {}))
+            return cls(path, data.get("days", {}), data.get("ledger", {}))
         return cls(path=path)
 
     def save(self) -> None:
@@ -41,7 +44,8 @@ class Manifest:
             dir=os.path.dirname(self.path) or ".", suffix=".manifest"
         )
         with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump({"meta": self.meta, "days": self.days}, f, indent=2, sort_keys=True)
+            data = {"days": self.days, "ledger": self.ledger}
+            json.dump(data, f, indent=2, sort_keys=True)
         os.replace(tmp, self.path)
 
     def completed_days(self) -> set[str]:

@@ -48,6 +48,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
@@ -112,6 +113,8 @@ SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 class PipelineResult:
     days_processed: list[str]
     days_skipped: list[str]
+    #: completed days that a new, changed or removed input file re-opened
+    days_reopened: list[str]
     total_events: int
     sink_counts: dict[str, int]
     elapsed_s: float
@@ -247,8 +250,9 @@ def write_stats(
        the six reports (``aggregates.merge_reports``), typed as their
        builders type them over the routed table, and writes each as one
        parquet file ``<out_root>/stats/<name>/`` as Spark's writer would
-       (INT96 timestamps, no Arrow schema). When nothing was ever routed
-       there is no schema to type them with, and no report is written.
+       (INT96 timestamps, no Arrow schema). When no day is routed (none
+       yet, or every day's input removed) there is no schema to type
+       them with: no report is written, and old reports are removed.
        Assumes a local ``out_root``, like the manifest."""
     spark = SparkSession.active() if routed is None else routed.sparkSession
     if routed is None:
@@ -269,7 +273,8 @@ def write_stats(
             day_state.select(agg.PARTIAL_SCHEMA.names).cast(agg.PARTIAL_SCHEMA),
             _partial_dir(out_root, day),
         )
-    if source is None:
+    if source is None:  # nothing routed, or every day gone
+        shutil.rmtree(os.path.join(out_root, "stats"), ignore_errors=True)
         return
 
     parts = glob.glob(
@@ -294,8 +299,34 @@ def _warc_day() -> Column:
     return F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd")
 
 
+def list_input(spark: SparkSession, input_path: str) -> tuple[dict, str | None]:
+    """The files of the input (a file, directory or glob) as Spark's reader
+    sees them, listed on the driver (no Spark job): path → ``{"size",
+    "mtime_ms"}``; and ``input_path`` if it is a directory (``basePath``)."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(input_path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    matches = fs.globStatus(root)
+    if not matches:
+        raise FileNotFoundError(f"input path does not exist: {input_path}")
+    files = {}
+    for match in matches:
+        prefix = len(match.getPath().toString().rstrip("/")) + 1
+        listing = fs.listFiles(match.getPath(), True)
+        while listing.hasNext():
+            st = listing.next()
+            path = st.getPath().toString()
+            if not any(n.startswith(("_", ".")) for n in path[prefix:].split("/")):
+                size, mtime_ms = st.getLen(), st.getModificationTime()
+                files[path] = {"size": size, "mtime_ms": mtime_ms}
+    return files, input_path if fs.isDirectory(root) else None
+
+
 def read_input(
-    spark: SparkSession, paths: list[str], input_format: str = "parquet"
+    spark: SparkSession,
+    paths: list[str],
+    input_format: str = "parquet",
+    schema: str | None = None,
+    base_path: str | None = None,
 ) -> DataFrame:
     """The rows ``run`` routes from the files or directories ``paths``:
     webtext pages, or for ``"jsonlog"`` the parsed events of a raw
@@ -304,7 +335,10 @@ def read_input(
     granularity) is the event's own timestamp; a malformed line (null
     ``event_ts`` after quarantine) takes the 1970-01-01 sentinel day
     rather than being dropped, so routed-row equality with the source
-    holds."""
+    holds. ``paths`` are literal: glob characters in them are escaped.
+    For pages, a ``schema`` (``StructType`` json) skips the inference
+    job and ``base_path`` roots partition discovery."""
+    paths = [re.sub(r"([\\{}\[\]*?])", r"\\\1", p) for p in paths]
     if input_format == "jsonlog":
         from pgweasel_spark.sources.webtext import read_jsonlog
 
@@ -314,14 +348,21 @@ def read_input(
                 F.col("event_ts"), F.lit("1970-01-01").cast("timestamp")
             ),
         )
-    return spark.read.parquet(*paths)
+    reader = spark.read.option("basePath", base_path) if base_path else spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(*paths)
 
 
-def input_days(rows: DataFrame) -> list[str]:
-    """The sorted days of ``rows``' ``warc_ts`` (one Spark job)."""
-    return sorted(
-        r["d"] for r in rows.select(_warc_day().alias("d")).distinct().collect()
-    )
+def input_days(rows: DataFrame) -> dict[str, list[str]]:
+    """The sorted days of ``rows``' ``warc_ts`` per input file, keyed as
+    ``list_input`` lists the file (one Spark pass)."""
+    jvm, days = rows.sparkSession._jvm, {}
+    for r in rows.select(F.input_file_name(), _warc_day()).distinct().collect():
+        if r[1] is not None:
+            path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r[0])).toString()
+            days.setdefault(path, []).append(r[1])
+    return {path: sorted(ds) for path, ds in days.items()}
 
 
 def run(
@@ -335,9 +376,13 @@ def run(
 ) -> PipelineResult:
     """Process all pending warc_day partitions, resumably.
 
+    The manifest's input ledger decides what is pending: a new, changed
+    or removed input file re-opens its days, and a day no file holds
+    leaves the output. A call that changes nothing runs no Spark job.
+
     ``day_batch`` limits how many pending days are processed (tests use 1
     to simulate a kill + resume); default processes all pending days in a
-    single write job.
+    single write job, which reads only the files that hold them.
 
     ``input_format="jsonlog"`` routes a raw PostgreSQL jsonlog directory
     (NDJSON, optionally .gz) through the identical day-batched writer,
@@ -345,27 +390,48 @@ def run(
 
     A pending day's old ``sink=*/warc_day=<d>`` directories are deleted
     before the write: dynamic partition overwrite replaces only the
-    partitions the new output writes, so a day re-opened in the manifest
-    (``streaming.stream.run_available_now``) would otherwise keep the
-    sinks its new routing no longer writes.
+    partitions the new output writes, so a re-opened day would otherwise
+    keep the sinks its new routing no longer writes.
     """
     t0 = time.time()
     manifest = Manifest.load(os.path.join(out_root, "manifest.json"))
-    manifest.meta.setdefault("input_path", input_path)
 
-    pages = read_input(spark, [input_path], input_format)
-    all_days = input_days(pages)
+    # re-open the days of new, changed (size or mtime) and removed files and
+    # take the listing into the ledger in one save, before any routing
+    found, base_path = list_input(spark, input_path)
+    files = manifest.ledger.setdefault("files", {})
+    new = [p for p in sorted(found) if not found[p].items() <= files.get(p, {}).items()]
+    removed = sorted(set(files) - set(found))
+    touched = {d for p in new + removed for d in files.pop(p, {}).get("days", [])}
+    if new:
+        rows = read_input(spark, new, input_format, base_path=base_path)
+        manifest.ledger["schema"] = rows.schema.json()
+        days = input_days(rows)
+        for p in new:
+            files[p] = {**found[p], "days": days.get(p, [])}
+            touched.update(files[p]["days"])
+    reopened = sorted(touched & manifest.completed_days())
+    if new or removed:
+        manifest.days.update({d: {"status": "pending"} for d in touched})
+        manifest.save()
     done = manifest.completed_days()
-    pending = [d for d in all_days if d not in done]
-    if day_batch is not None:
-        pending = pending[:day_batch]
+    all_days = {d for entry in files.values() for d in entry["days"]}
+    gone = sorted(set(manifest.days) - all_days)
+    pending = sorted(all_days - done)[:day_batch]
 
     routed_path = os.path.join(out_root, "routed")
+    for d in gone + pending:
+        for _, day_dir in _day_dirs(routed_path, d):
+            shutil.rmtree(day_dir)
+        shutil.rmtree(_partial_dir(out_root, d), ignore_errors=True)
     sink_counts: dict[str, int] = {}
     total = 0
     if pending:
         from pyspark.sql import Observation
 
+        paths = [p for p, e in files.items() if set(e["days"]) & set(pending)]
+        schema = manifest.ledger["schema"]
+        pages = read_input(spark, sorted(paths), input_format, schema, base_path)
         day = _warc_day()
         batch_pages = pages.where(day.isin(pending))
         events = enrich(
@@ -387,9 +453,6 @@ def run(
             ],
         )
         routed = _routed(events, slow_threshold_ms)
-        for d in pending:
-            for _, day_dir in _day_dirs(routed_path, d):
-                shutil.rmtree(day_dir)
         (
             routed.write.mode("overwrite")
             .partitionBy("sink", "warc_day", "host_bucket")
@@ -423,9 +486,6 @@ def run(
                 )
             ]
             write_stats(read_stats_days(spark, routed_path, days), out_root, days)
-        else:
-            for d in pending:
-                shutil.rmtree(_partial_dir(out_root, d), ignore_errors=True)
         elapsed = time.time() - t0
         for d in pending:
             manifest.mark_complete(
@@ -438,10 +498,17 @@ def run(
             for s, c in per_day[d].items():
                 sink_counts[s] = sink_counts.get(s, 0) + c
                 total += c
+    elif gone and with_stats:
+        write_stats(None, out_root, [])
+    if gone:  # last, so that a failure before leaves them to the next call
+        for d in gone:
+            del manifest.days[d]
+        manifest.save()
 
     return PipelineResult(
         days_processed=pending,
         days_skipped=sorted(done),
+        days_reopened=reopened,
         total_events=total,
         sink_counts=sink_counts,
         elapsed_s=time.time() - t0,

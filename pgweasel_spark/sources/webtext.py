@@ -127,36 +127,42 @@ def read_jsonlog(spark: SparkSession, path: str | list[str]) -> DataFrame:
     SAME parsed-event schema ``parse_events`` produces from
     stderr/csvlog pages, so every downstream operator (route,
     aggregates, CLI reports) works unchanged. ``pipeline.read_input``
-    reads jsonlog through it for ``pipeline.run`` and for the
-    incremental ``streaming.stream.run_available_now``.
+    reads jsonlog through it for ``pipeline.run``.
 
-    Spark-first shape: lines via the native text source (splittable,
-    predicate-pushdown-capable), then ``from_json`` + field projection
-    all JVM-side inside whole-stage codegen; the corpus never crosses
-    into Python. ``raw`` keeps the original line for CLI printing and
-    the kv/duration extractors; severity reuses the stderr ordinal map
-    (Panic→0 quirk included) and the timestamp reuses the 3-token
-    parser, so jsonlog events route and aggregate bit-identically to
-    their stderr twins (asserted by test_jsonlog_source_matches_stderr_twin).
-    ``record_no`` is a file-order surrogate
-    (``monotonically_increasing_id``: input split and row position), so
-    its values depend on the set of files read together; jsonlog lines
-    carry their own timestamps, and only ``slow_top``'s last tie-break
-    reads it.
+    Shape: one row per file (``wholetext``), split into lines as the text
+    source splits them (LF, CR LF or a lone CR ends a line; a leading
+    UTF-8 byte-order mark is dropped; empty lines are skipped), then
+    ``from_json`` + field projection all JVM-side inside whole-stage
+    codegen; the corpus never crosses into Python. ``record_no`` is the
+    line's 0-based position in its own file, so a row's ``(url,
+    record_no)`` does not depend on which files are read together. The
+    cost: a file is one task and one row, so a task holds a whole file
+    (and its split lines) in memory, and a file must stay under Spark's
+    2 GB string limit (a .gz file is one task anyway). ``raw`` keeps
+    the original line for CLI printing and the kv/duration extractors;
+    severity reuses the stderr ordinal map (Panic→0 quirk included) and
+    the timestamp reuses the 3-token parser, so jsonlog events route and
+    aggregate bit-identically to their stderr twins (asserted by
+    test_jsonlog_source_matches_stderr_twin).
     """
     from pgweasel_spark.functions import extract as X
 
     j = F.from_json(F.col("value"), JSONLOG_SCHEMA)
     sev = F.lower(j["error_severity"])
     msg = j["message"]
+    text = F.regexp_replace("value", "^\uFEFF", "")
     return (
-        spark.read.text(path)
-        .where(F.length("value") > 0)
+        spark.read.text(path, wholetext=True)
         .select(
             F.input_file_name().alias("url"),
+            F.posexplode(F.split(text, r"\r\n|\r|\n")).alias("pos", "value"),
+        )
+        .where(F.length("value") > 0)
+        .select(
+            "url",
             F.lit(None).cast("timestamp").alias("warc_ts"),
             F.lit(None).cast("string").alias("lang"),
-            F.monotonically_increasing_id().alias("record_no"),
+            F.col("pos").cast("long").alias("record_no"),
             F.col("value").alias("raw"),
             F.lit("json").alias("format"),
             sev.alias("severity"),

@@ -1,4 +1,4 @@
-"""CLI veneer + Structured Streaming incremental variant."""
+"""CLI veneer and incremental runs over a growing input directory."""
 
 import ast
 import io
@@ -111,22 +111,19 @@ def test_cli_stats_reports_all_sections(spark, generated_pages_dir):
     assert "Connections by time bucket:" in out
 
 
-def _pipeline_output(spark, out, drop=()):
-    """An output's routed rows (sorted), its six stats reports (rows in
-    file order) and each manifest day's lineage, without the columns
-    ``drop``."""
+def _pipeline_output(spark, out):
+    """An output's routed rows (sorted, every column), its six stats
+    reports (rows in file order) and each manifest day's lineage."""
     import pyarrow.parquet as pq
 
     from pgweasel_spark.plans.manifest import Manifest
     from tests.test_pipeline_resume import STATS_REPORTS
 
-    routed = spark.read.parquet(os.path.join(out, "routed")).drop(*drop)
-    reports = {}
-    for t in STATS_REPORTS:
-        table = pq.read_table(os.path.join(out, "stats", t))
-        reports[t] = table.drop_columns(
-            [c for c in drop if c in table.column_names]
-        ).to_pylist()
+    routed = spark.read.parquet(os.path.join(out, "routed"))
+    reports = {
+        t: pq.read_table(os.path.join(out, "stats", t)).to_pylist()
+        for t in STATS_REPORTS
+    }
     manifest = {
         day: {
             k: entry[k]
@@ -137,16 +134,15 @@ def _pipeline_output(spark, out, drop=()):
     return sorted(routed.collect(), key=repr), reports, manifest
 
 
-def _stream_arrivals(spark, tmp_path, files, stream_call, input_format):
+def _stream_arrivals(spark, tmp_path, files, run_call, input_format):
     """Write ``files`` (name → (writer, days)) into a fresh input
-    directory one at a time, calling ``stream_call(input_dir, out)``
-    after each; it returns the days each micro-batch routed. The last
-    (late) file keeps a modification time 30 days older than the others',
-    as a file copied with its original time would. Checks that
-    each call is one micro-batch routing exactly the file's days, that
-    a further call with no new file routes nothing, and that the
-    streamed output equals one ``pipeline.run`` over the final input
-    (``record_no`` aside for jsonlog). Returns the streamed output."""
+    directory one at a time, calling ``run_call(input_dir, out)`` after
+    each; it returns the days the call routed. The last (late) file keeps
+    a modification time 30 days older than the others', as a file copied
+    with its original time would. Checks that each call routes exactly
+    the file's days, that a further call with no new file routes no day
+    and leaves the manifest byte-identical, and that the output equals
+    one ``pipeline.run`` over the final input. Returns the output."""
     from pgweasel_spark.plans import pipeline
 
     indir = tmp_path / "in"
@@ -158,29 +154,31 @@ def _stream_arrivals(spark, tmp_path, files, stream_call, input_format):
         if name == late:
             old = time.time() - 30 * 86400
             os.utime(indir / name, (old, old))
-        assert stream_call(str(indir), out) == [days], name
+        assert run_call(str(indir), out) == days, name
 
-    manifest = open(os.path.join(out, "manifest.json")).read()
-    assert stream_call(str(indir), out) == []
-    assert open(os.path.join(out, "manifest.json")).read() == manifest
+    manifest = open(os.path.join(out, "manifest.json"), "rb").read()
+    assert run_call(str(indir), out) == []
+    assert open(os.path.join(out, "manifest.json"), "rb").read() == manifest
 
     batch = str(tmp_path / "batch_out")
     pipeline.run(spark, str(indir), batch, input_format=input_format)
-    # jsonlog's record_no is monotonically_increasing_id over the files
-    # read: its values depend on the input's file set, which differs
-    # between the days a stream routed early and a bulk run
-    drop = ("record_no",) if input_format == "jsonlog" else ()
-    streamed = _pipeline_output(spark, out, drop)
-    assert streamed == _pipeline_output(spark, batch, drop)
+    streamed = _pipeline_output(spark, out)
+    assert streamed == _pipeline_output(spark, batch)
     return streamed
 
 
+def _cli_days(argv):
+    """Run the CLI; the days its one ``processed days=`` line lists."""
+    (days,) = re.findall(r"processed days=(\[.*?\])", _run_cli(argv))
+    return ast.literal_eval(days)
+
+
 def test_streaming_available_now(spark, tmp_path):
-    """`cli stream` over seven arriving day files of generated pages,
-    then a late file for the first day: every call routes exactly the
-    new file's day, the late file re-routes its completed day, and the
-    result (routed rows, six stats reports, manifest lineage) equals one
-    ``pipeline.run`` over the final input."""
+    """`cli stream` (an alias of `cli run`) over seven arriving day files
+    of generated pages, then a late file for the first day: every call
+    routes exactly the new file's day, the late file re-routes its
+    completed day, and the result (routed rows, six stats reports,
+    manifest lineage) equals one ``pipeline.run`` over the final input."""
     from itertools import groupby
 
     import pyarrow as pa
@@ -212,11 +210,7 @@ def test_streaming_available_now(spark, tmp_path):
     assert len(files) == 8
 
     def cli_stream(indir, out):
-        text = _run_cli(["stream", "--input", indir, "--out", out])
-        return [
-            ast.literal_eval(days)
-            for days in re.findall(r"processed days=(\[.*?\])", text)
-        ]
+        return _cli_days(["stream", "--input", indir, "--out", out])
 
     routed, reports, manifest = _stream_arrivals(
         spark, tmp_path, files, cli_stream, "parquet"
@@ -226,50 +220,59 @@ def test_streaming_available_now(spark, tmp_path):
     assert len(manifest) == 7 and reports["slow_top"]
 
 
-def test_streaming_jsonlog_matches_batch_pipeline(spark, tmp_path):
-    """``run_available_now`` over seven arriving jsonlog day files, then a
-    late file for the first day with a new error message and the
-    slowest statement, equals one jsonlog ``pipeline.run`` over the final
-    input; the late file changes the first day's reports."""
+def _jsonlog_lines(day, n, offset=0):
+    """``n`` groups of four jsonlog events (an error, a slow statement, a
+    connection received and authorized) on 2025-06-``day``."""
+    from pgweasel_spark import grammar
+
+    return [
+        {
+            "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
+            "error_severity": severity,
+            "message": message,
+            "user": "u",
+            "dbname": "d",
+            "application_name": "a",
+            "remote_host": "h",
+            "process_id": i,
+        }
+        for i in range(offset, offset + n)
+        for severity, message in [
+            ("ERROR", f"division by zero {i % 3 + offset}"),
+            ("LOG", f"duration: {4000 + 100 * i + day}.5 ms  statement: select {i}"),
+            ("LOG", f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"),
+            ("LOG", f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"),
+        ]
+    ]
+
+
+def _jsonlog_writer(rows):
     import json
 
-    from pgweasel_spark import grammar
-    from pgweasel_spark.streaming import stream
+    text = "\n".join(json.dumps(r) for r in rows) + "\n"
+    return lambda path: Path(path).write_text(text)
 
-    def lines(day, n, offset=0):
-        return [
-            {
-                "timestamp": f"2025-06-{day:02d} 12:{i:02d}:00.000 UTC",
-                "error_severity": severity,
-                "message": message,
-                "user": "u",
-                "dbname": "d",
-                "application_name": "a",
-                "remote_host": "h",
-                "process_id": i,
-            }
-            for i in range(offset, offset + n)
-            for severity, message in [
-                ("ERROR", f"division by zero {i % 3 + offset}"),
-                ("LOG", f"duration: {4000 + 100 * i + day}.5 ms  statement: select {i}"),
-                ("LOG", f"{grammar.CONN_RECEIVED_PREFIX} host=10.0.0.{i % 4} port=5432"),
-                ("LOG", f"{grammar.CONN_AUTHORIZED_PREFIX} user=u database=d"),
-            ]
-        ]
 
-    def writer(rows):
-        text = "\n".join(json.dumps(r) for r in rows) + "\n"
-        return lambda path: Path(path).write_text(text)
+def test_streaming_jsonlog_matches_batch_pipeline(spark, tmp_path):
+    """``pipeline.run`` over seven arriving jsonlog day files, then a
+    late file for the first day with a new error message and the slowest
+    statement, equals one jsonlog ``pipeline.run`` over the final input,
+    ``record_no`` included; the late file changes the first day's
+    reports."""
+    from pgweasel_spark.plans import pipeline
 
     files = {
-        f"day{day}.json": (writer(lines(day, 4)), [f"2025-06-{day:02d}"])
+        f"day{day}.json": (
+            _jsonlog_writer(_jsonlog_lines(day, 4)), [f"2025-06-{day:02d}"]
+        )
         for day in range(3, 10)
     }
-    files["late.json"] = (writer(lines(3, 2, offset=50)), ["2025-06-03"])
+    files["late.json"] = (
+        _jsonlog_writer(_jsonlog_lines(3, 2, offset=50)), ["2025-06-03"]
+    )
 
     def call(indir, out):
-        results = stream.run_available_now(spark, indir, out, input_format="jsonlog")
-        return [r.days_processed for r in results]
+        return pipeline.run(spark, indir, out, input_format="jsonlog").days_processed
 
     _, reports, manifest = _stream_arrivals(spark, tmp_path, files, call, "jsonlog")
     assert manifest["2025-06-03"]["input_rows"] == 4 * 4 + 2 * 4
@@ -910,3 +913,33 @@ def test_jsonlog_reads_gzip(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["severity"] == "warning"
     assert rows[0]["message"] == "checkpoint too frequent"
+
+
+def test_jsonlog_lines_split_as_the_text_source(spark, tmp_path):
+    """jsonlog lines are the text source's lines, byte for byte: ``\\n``,
+    ``\\r\\n`` and a lone ``\\r`` end a line, a leading UTF-8 byte-order
+    mark is dropped (one later in the file is kept), empty lines are
+    skipped, and a last line needs no newline. ``record_no`` is the
+    line's position in its own file, empty lines counted."""
+    from pyspark.sql import functions as F
+
+    from pgweasel_spark.sources.webtext import read_jsonlog
+
+    lines = [b'{"message":"a"}', b'{"message":"\xef\xbb\xbfb"}', b'{"message":"c"}']
+    f = tmp_path / "pg.json"
+    f.write_bytes(
+        b"\xef\xbb\xbf" + lines[0] + b"\r\n\r\n"
+        + lines[1] + b"\r\r"
+        + lines[2] + b"\n\n"
+    )
+    other = tmp_path / "other.json"
+    other.write_bytes(b"\n" + lines[2])
+
+    text = spark.read.text(str(f)).where(F.length("value") > 0)
+    rows = read_jsonlog(spark, str(f)).collect()
+    assert [r["raw"] for r in rows] == [r["value"] for r in text.collect()]
+    assert [r["raw"].encode() for r in rows] == lines
+    assert [r["record_no"] for r in rows] == [0, 2, 4]
+    both = read_jsonlog(spark, [str(f), str(other)]).where(F.col("message") == "c")
+    found = sorted((os.path.basename(r["url"]), r["record_no"]) for r in both.collect())
+    assert found == [("other.json", 1), ("pg.json", 4)]
