@@ -208,7 +208,10 @@ def main(argv=None):
         # jsonlog inputs route through the same resumable day-batched
         # writer (events batch on their own timestamps)
         fmt = _input_format(args.input)
-        res = pipeline.run(spark, args.input, args.out, input_format=fmt)
+        try:
+            res = pipeline.run(spark, args.input, args.out, input_format=fmt)
+        except pipeline.InputMismatch as e:
+            ap.exit(2, f"error: {e}\n")
         print(
             f"processed days={res.days_processed} reopened={res.days_reopened} "
             f"skipped={res.days_skipped} sink_counts={res.sink_counts} "

@@ -26,8 +26,9 @@ from dataclasses import dataclass, field
 class Manifest:
     path: str
     days: dict[str, dict] = field(default_factory=dict)
-    #: the input's Spark schema json (``"schema"``) and, per input file,
-    #: ``{"size", "mtime_ms", "days"}`` (``"files"``)
+    #: the input's qualified path (``"input"``), its Spark schema json
+    #: (``"schema"``) and, per file, ``{"size", "mtime_ms", "days"}``
+    #: (``"files"``)
     ledger: dict = field(default_factory=dict)
 
     @classmethod

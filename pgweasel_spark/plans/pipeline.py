@@ -107,6 +107,9 @@ PARTITION_FIELDS = [
 #: the footer key under which Spark's parquet writer stores the Spark
 #: schema of a file's columns
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: the path names Spark's file listing skips: ``.*``, ``_*`` unless a
+#: ``k=v`` partition directory, ``*._COPYING_``
+HIDDEN_NAME = re.compile(r"\.|_[^=]*$|.*\._COPYING_$")
 
 
 @dataclass
@@ -118,6 +121,10 @@ class PipelineResult:
     total_events: int
     sink_counts: dict[str, int]
     elapsed_s: float
+
+
+class InputMismatch(ValueError):
+    """The input is not the one an output's ledger was built from."""
 
 
 def _routed(events: DataFrame, slow_threshold_ms: float) -> DataFrame:
@@ -299,10 +306,11 @@ def _warc_day() -> Column:
     return F.date_format(F.to_date("warc_ts"), "yyyy-MM-dd")
 
 
-def list_input(spark: SparkSession, input_path: str) -> tuple[dict, str | None]:
-    """The files of the input (a file, directory or glob) as Spark's reader
-    sees them, listed on the driver (no Spark job): path → ``{"size",
-    "mtime_ms"}``; and ``input_path`` if it is a directory (``basePath``)."""
+def list_input(spark: SparkSession, input_path: str) -> tuple[str, dict, str | None]:
+    """The input (a file, directory or glob) as Spark's reader sees it,
+    listed on the driver (no Spark job): its qualified path; its files,
+    path → ``{"size", "mtime_ms"}``, but no ``HIDDEN_NAME``; and
+    ``input_path`` if it is a directory (``basePath``)."""
     root = spark._jvm.org.apache.hadoop.fs.Path(input_path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     matches = fs.globStatus(root)
@@ -315,10 +323,11 @@ def list_input(spark: SparkSession, input_path: str) -> tuple[dict, str | None]:
         while listing.hasNext():
             st = listing.next()
             path = st.getPath().toString()
-            if not any(n.startswith(("_", ".")) for n in path[prefix:].split("/")):
+            if not any(HIDDEN_NAME.match(n) for n in path[prefix:].split("/")):
                 size, mtime_ms = st.getLen(), st.getModificationTime()
                 files[path] = {"size": size, "mtime_ms": mtime_ms}
-    return files, input_path if fs.isDirectory(root) else None
+    base_path = input_path if fs.isDirectory(root) else None
+    return fs.makeQualified(root).toString(), files, base_path
 
 
 def read_input(
@@ -354,11 +363,12 @@ def read_input(
     return reader.parquet(*paths)
 
 
-def input_days(rows: DataFrame) -> dict[str, list[str]]:
-    """The sorted days of ``rows``' ``warc_ts`` per input file, keyed as
+def input_days(rows: DataFrame, file: Column) -> dict[str, list[str]]:
+    """The sorted days of ``rows``' ``warc_ts`` per input ``file`` (a URI
+    column: ``input_file_name()``, or jsonlog's ``url``), keyed as
     ``list_input`` lists the file (one Spark pass)."""
     jvm, days = rows.sparkSession._jvm, {}
-    for r in rows.select(F.input_file_name(), _warc_day()).distinct().collect():
+    for r in rows.select(file, _warc_day()).distinct().collect():
         if r[1] is not None:
             path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r[0])).toString()
             days.setdefault(path, []).append(r[1])
@@ -378,7 +388,9 @@ def run(
 
     The manifest's input ledger decides what is pending: a new, changed
     or removed input file re-opens its days, and a day no file holds
-    leaves the output. A call that changes nothing runs no Spark job.
+    leaves the output (which so follows the input's retention). A call
+    refuses another input, or an empty one while the ledger lists files
+    (an unmounted directory). A call that changes nothing runs no job.
 
     ``day_batch`` limits how many pending days are processed (tests use 1
     to simulate a kill + resume); default processes all pending days in a
@@ -398,20 +410,30 @@ def run(
 
     # re-open the days of new, changed (size or mtime) and removed files and
     # take the listing into the ledger in one save, before any routing
-    found, base_path = list_input(spark, input_path)
+    source, found, base_path = list_input(spark, input_path)
     files = manifest.ledger.setdefault("files", {})
+    if files and (source != manifest.ledger["input"] or not found):
+        raise InputMismatch(
+            f"{out_root} holds the output of {len(files)} files of "
+            f"{manifest.ledger['input']}, not of {len(found)} files of {source}"
+        )
     new = [p for p in sorted(found) if not found[p].items() <= files.get(p, {}).items()]
     removed = sorted(set(files) - set(found))
     touched = {d for p in new + removed for d in files.pop(p, {}).get("days", [])}
     if new:
         rows = read_input(spark, new, input_format, base_path=base_path)
         manifest.ledger["schema"] = rows.schema.json()
-        days = input_days(rows)
-        for p in new:
+        jsonlog = input_format == "jsonlog"
+        days = input_days(rows, F.col("url") if jsonlog else F.input_file_name())
+        unlisted = set(days) - set(new)
+        if unlisted:  # a file's days would be lost without a trace
+            raise RuntimeError(f"rows from files the listing lacks: {sorted(unlisted)}")
+        for p in new:  # a file with no rows holds no day
             files[p] = {**found[p], "days": days.get(p, [])}
             touched.update(files[p]["days"])
     reopened = sorted(touched & manifest.completed_days())
     if new or removed:
+        manifest.ledger["input"] = source
         manifest.days.update({d: {"status": "pending"} for d in touched})
         manifest.save()
     done = manifest.completed_days()
@@ -498,9 +520,9 @@ def run(
             for s, c in per_day[d].items():
                 sink_counts[s] = sink_counts.get(s, 0) + c
                 total += c
-    elif gone and with_stats:
-        write_stats(None, out_root, [])
     if gone:  # last, so that a failure before leaves them to the next call
+        if not (pending and with_stats):
+            write_stats(None, out_root, [])
         for d in gone:
             del manifest.days[d]
         manifest.save()

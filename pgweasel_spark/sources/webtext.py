@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 #: per-member decompressed-size cap for zip sources — a log file member
 #: larger than this is almost certainly a decompression bomb
@@ -129,51 +130,70 @@ def read_jsonlog(spark: SparkSession, path: str | list[str]) -> DataFrame:
     aggregates, CLI reports) works unchanged. ``pipeline.read_input``
     reads jsonlog through it for ``pipeline.run``.
 
-    Shape: one row per file (``wholetext``), split into lines as the text
-    source splits them (LF, CR LF or a lone CR ends a line; a leading
-    UTF-8 byte-order mark is dropped; empty lines are skipped), then
-    ``from_json`` + field projection all JVM-side inside whole-stage
-    codegen; the corpus never crosses into Python. ``record_no`` is the
-    line's 0-based position in its own file, so a row's ``(url,
-    record_no)`` does not depend on which files are read together. The
-    cost: a file is one task and one row, so a task holds a whole file
-    (and its split lines) in memory, and a file must stay under Spark's
-    2 GB string limit (a .gz file is one task anyway). ``raw`` keeps
-    the original line for CLI printing and the kv/duration extractors;
-    severity reuses the stderr ordinal map (Panic→0 quirk included) and
-    the timestamp reuses the 3-token parser, so jsonlog events route and
-    aggregate bit-identically to their stderr twins (asserted by
-    test_jsonlog_source_matches_stderr_twin).
+    Spark-first shape: lines via the native text source (splittable,
+    so a large file is read as several tasks), then ``from_json`` + field
+    projection all JVM-side inside whole-stage codegen; the corpus never
+    crosses into Python. ``record_no`` is the line's 0-based position in
+    its own file (empty lines counted, then skipped), so a row's ``(url,
+    record_no)`` does not depend on which files are read together or how
+    they are split: a line's row number inside its input split
+    (``monotonically_increasing_id`` minus the split's first id) plus the
+    lines of the file's earlier splits, which a small aggregate over
+    (file, split start) counts and a broadcast join hands back. That
+    aggregate reads the input a second time, counting lines only; it is
+    left-joined, so a query that does not use ``record_no`` (``errors
+    top``, ``pipeline.input_days``) drops it and reads the input once.
+    ``raw`` keeps the original line for CLI printing and the
+    kv/duration extractors; severity reuses the stderr ordinal map
+    (Panic→0 quirk included) and the timestamp reuses the 3-token
+    parser, so jsonlog events route and aggregate bit-identically to
+    their stderr twins (asserted by test_jsonlog_source_matches_stderr_twin).
     """
     from pgweasel_spark.functions import extract as X
 
     j = F.from_json(F.col("value"), JSONLOG_SCHEMA)
     sev = F.lower(j["error_severity"])
     msg = j["message"]
-    text = F.regexp_replace("value", "^\uFEFF", "")
-    return (
-        spark.read.text(path, wholetext=True)
-        .select(
-            F.input_file_name().alias("url"),
-            F.posexplode(F.split(text, r"\r\n|\r|\n")).alias("pos", "value"),
-        )
-        .where(F.length("value") > 0)
+    # parsed beside the line ids: a filter on a parsed column (the
+    # pipeline's day filter) then stays above this nondeterministic
+    # projection and reads its columns instead of parsing the line again
+    lines = spark.read.text(path).select(
+        F.input_file_name().alias("url"),
+        F.input_file_block_start().alias("split"),
+        F.monotonically_increasing_id().alias("id"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("string").alias("lang"),
+        F.col("value").alias("raw"),
+        F.lit("json").alias("format"),
+        sev.alias("severity"),
+        X.severity_num(sev).alias("severity_num"),
+        X.event_ts(j["timestamp"]).alias("event_ts"),
+        msg.alias("message"),
+        j["state_code"].alias("sqlstate"),
+        X.duration_ms(msg).alias("duration_ms"),
+        j["remote_host"].alias("host"),
+        j["user"].alias("user"),
+        j["dbname"].alias("db"),
+        j["application_name"].alias("appname"),
+    )
+    # per split: the lines of the file's earlier splits minus the split's
+    # first id; a split's ids are consecutive, as its lines are one run of
+    # its task's rows
+    earlier = Window.partitionBy("url").orderBy("split")
+    splits = (
+        lines.groupBy("url", "split")
+        .agg(F.count("*").alias("n"), F.min("id").alias("first"))
         .select(
             "url",
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            F.lit(None).cast("string").alias("lang"),
-            F.col("pos").cast("long").alias("record_no"),
-            F.col("value").alias("raw"),
-            F.lit("json").alias("format"),
-            sev.alias("severity"),
-            X.severity_num(sev).alias("severity_num"),
-            X.event_ts(j["timestamp"]).alias("event_ts"),
-            msg.alias("message"),
-            j["state_code"].alias("sqlstate"),
-            X.duration_ms(msg).alias("duration_ms"),
-            j["remote_host"].alias("host"),
-            j["user"].alias("user"),
-            j["dbname"].alias("db"),
-            j["application_name"].alias("appname"),
+            "split",
+            (F.sum("n").over(earlier) - F.col("n") - F.col("first")).alias("shift"),
         )
+    )
+    record_no = (F.col("id") + F.col("shift")).alias("record_no")
+    # left: every split of ``lines`` is in ``splits``, and a left join
+    # whose right columns go unused is pruned
+    return (
+        lines.where(F.length("raw") > 0)
+        .join(F.broadcast(splits), ["url", "split"], "left")
+        .select("url", "warc_ts", "lang", record_no, *lines.columns[5:])
     )

@@ -943,3 +943,53 @@ def test_jsonlog_lines_split_as_the_text_source(spark, tmp_path):
     both = read_jsonlog(spark, [str(f), str(other)]).where(F.col("message") == "c")
     found = sorted((os.path.basename(r["url"]), r["record_no"]) for r in both.collect())
     assert found == [("other.json", 1), ("pg.json", 4)]
+
+
+def test_jsonlog_record_no_across_splits(spark, tmp_path):
+    """A jsonlog file read in many splits, alone or with another file:
+    ``record_no`` is still each line's position in its own file."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from pgweasel_spark.sources.webtext import read_jsonlog
+
+    lines = [
+        "" if i % 7 == 3 else json.dumps({"message": f"m{i}", "process_id": i})
+        for i in range(400)
+    ]
+    big, small = tmp_path / "big.json", tmp_path / "small.json"
+    big.write_text("\n".join(lines) + "\n")
+    small.write_text("\n".join(lines[:20]) + "\n")
+    want = {i: line for i, line in enumerate(lines) if line}
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2048")
+    try:
+        assert spark.read.text(str(big)).rdd.getNumPartitions() > 4
+        for paths in ([str(big)], [str(small), str(big)]):
+            rows = read_jsonlog(spark, paths).where(F.col("url").endswith("big.json"))
+            assert {r["record_no"]: r["raw"] for r in rows.collect()} == want
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_jsonlog_plan_reads_and_parses_once(spark, tmp_path):
+    """The per-split line count behind ``record_no`` is a second read of
+    the input; a query that does not use ``record_no`` prunes it. The
+    pipeline's day filter reads the parsed columns: each line is parsed
+    by one operator."""
+    from pgweasel_spark.plans import pipeline
+    from pgweasel_spark.sources.webtext import read_jsonlog
+
+    f = tmp_path / "pg.json"
+    f.write_text('{"message": "a"}\n')
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert plan(read_jsonlog(spark, str(f)).select("url", "message")).count("Relation") == 1
+    assert plan(read_jsonlog(spark, str(f)).select("record_no")).count("Relation") == 2
+    rows = pipeline.read_input(spark, [str(f)], "jsonlog")
+    day = plan(rows.where(pipeline._warc_day().isin(["2025-06-03"])))
+    assert sum("from_json(" in op for op in day.splitlines()) == 1

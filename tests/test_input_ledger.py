@@ -217,3 +217,91 @@ def test_glob_input_and_glob_characters_in_names(spark, tmp_path):
     _assert_equals_fresh_run(spark, tmp_path, indir, out)
     with pytest.raises(FileNotFoundError):
         pipeline.run(spark, str(tmp_path / "missing"), out)
+
+
+def test_removed_day_leaves_the_reports_without_stats(spark, tmp_path):
+    """A call without stats that drops a day no file holds any more still
+    merges the reports again, so they no longer count that day."""
+    by_day = _pages_by_day()
+    days = sorted(by_day)
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for day in days:
+        _write_pages(indir / f"{day}.parquet", by_day[day])
+    out = str(tmp_path / "out")
+    pipeline.run(spark, str(indir), out)
+
+    os.remove(indir / f"{days[-1]}.parquet")
+    res = pipeline.run(spark, str(indir), out, with_stats=False)
+    assert res.days_processed == [] and res.days_reopened == [days[-1]]
+    _assert_equals_fresh_run(spark, tmp_path, indir, out)
+
+
+def test_ledger_refuses_another_or_an_emptied_input(spark, tmp_path):
+    """An output is tied to the input its ledger was built from: another
+    input, or the same one with no file left (an unmounted directory),
+    fails with a one-line CLI error and deletes no day."""
+    by_day = _pages_by_day()
+    indir, other = tmp_path / "in", tmp_path / "other"
+    indir.mkdir()
+    other.mkdir()
+    _write_pages(indir / "a.parquet", [p for ps in by_day.values() for p in ps])
+    _write_pages(other / "a.parquet", by_day[min(by_day)])
+    out = str(tmp_path / "out")
+    pipeline.run(spark, str(indir), out)
+    manifest = open(os.path.join(out, "manifest.json"), "rb").read()
+
+    with pytest.raises(pipeline.InputMismatch, match="holds the output of"):
+        pipeline.run(spark, str(other), out)
+    os.remove(indir / "a.parquet")
+    with pytest.raises(SystemExit) as exit_:
+        _run_cli(["run", "--input", str(indir), "--out", out])
+    assert exit_.value.code == 2
+    assert open(os.path.join(out, "manifest.json"), "rb").read() == manifest
+    for day in by_day:
+        assert pipeline._day_dirs(os.path.join(out, "routed"), day)
+
+
+def test_listing_skips_the_names_spark_skips(spark, tmp_path):
+    """The ledger lists exactly the files Spark's reader reads: names
+    starting with ``.``, ``_`` (unless a ``k=v`` partition directory) or
+    ending in ``._COPYING_`` are skipped."""
+    by_day = _pages_by_day()
+    days = sorted(by_day)
+    indir = tmp_path / "in"
+    for sub in ("_k=1", "_k=2", "_temporary", ".staging"):
+        (indir / sub).mkdir(parents=True)
+    _write_pages(indir / "_k=1" / "a.parquet", by_day[days[0]])
+    _write_pages(indir / "_k=2" / "b.parquet", [p for d in days[1:] for p in by_day[d]])
+    for hidden in ("_temporary/c.parquet", ".staging/d.parquet", "_k=1/.e.parquet",
+                   "_k=1/_f.parquet", "_k=2/g.parquet._COPYING_"):
+        _write_pages(indir / hidden, by_day[days[0]])
+    out = str(tmp_path / "out")
+    assert pipeline.run(spark, str(indir), out).days_processed == days
+
+    names = {p.rsplit("/", 2)[-2] + "/" + p.rsplit("/", 1)[-1] for p in _ledger(out)["files"]}
+    spark_names = {
+        p.rsplit("/", 2)[-2] + "/" + p.rsplit("/", 1)[-1]
+        for p in spark.read.parquet(str(indir)).inputFiles()
+    }
+    assert names == spark_names == {"_k=1/a.parquet", "_k=2/b.parquet"}
+    _assert_equals_fresh_run(spark, tmp_path, indir, out)
+
+
+def test_days_of_an_unlisted_file_fail_loudly(spark, tmp_path, monkeypatch):
+    """Days that ``input_days`` keys by a path the listing lacks would
+    never be routed; the call fails before the ledger takes the files."""
+    by_day = _pages_by_day()
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _write_pages(indir / "a.parquet", [p for ps in by_day.values() for p in ps])
+    real = pipeline.input_days
+    monkeypatch.setattr(
+        pipeline,
+        "input_days",
+        lambda rows, file: {p + "-moved": ds for p, ds in real(rows, file).items()},
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="listing lacks"):
+        pipeline.run(spark, str(indir), out)
+    assert not os.path.exists(os.path.join(out, "manifest.json"))

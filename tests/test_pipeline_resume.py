@@ -620,8 +620,9 @@ def test_no_stats_days_stay_in_reports(spark, generated_pages_dir, tmp_path):
 
 def test_jsonlog_stats_equal_builders(spark, tmp_path):
     """A jsonlog input routed with stats, one day per call. Its routed
-    table stores ``record_no`` (the line's position in its file) as a
-    long and ``warc_ts`` as a session-zone timestamp; after every call
+    table stores ``record_no`` (the line's position in its file, read
+    in several splits) as a long and ``warc_ts`` as a session-zone
+    timestamp; after every call
     the merged reports still equal their builders over the whole written
     routed table."""
     import json
@@ -651,10 +652,18 @@ def test_jsonlog_stats_equal_builders(spark, tmp_path):
     (jdir / "pg.json").write_text("\n".join(json.dumps(r) for r in lines) + "\n")
 
     out = str(tmp_path / "out")
-    for want in (["2025-06-03"], ["2025-06-04"], []):
-        res = pipeline.run(spark, str(jdir), out, day_batch=1, input_format="jsonlog")
-        assert res.days_processed == want
-        _assert_reports_equal_builders(spark, out, str(tmp_path / "oracle"))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")  # several input splits of the one file
+    try:
+        for want in (["2025-06-03"], ["2025-06-04"], []):
+            res = pipeline.run(
+                spark, str(jdir), out, day_batch=1, input_format="jsonlog"
+            )
+            assert res.days_processed == want
+            _assert_reports_equal_builders(spark, out, str(tmp_path / "oracle"))
+    finally:
+        spark.conf.set(key, old)
     routed = spark.read.parquet(os.path.join(out, "routed"))
     assert dict(routed.dtypes)["record_no"] == "bigint"
     assert _types(pipeline.routed_schema(os.path.join(out, "routed"))) == _types(
